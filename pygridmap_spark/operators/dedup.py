@@ -107,6 +107,8 @@ def minhash_signatures(
     higher-order expressions (a pure-Catalyst formulation with
     transform/array_min lambdas measured ~25s for 5.7k docs). Docs with no
     shingles drop out (can't be near-dup candidates)."""
+    if num_hashes < 1:
+        raise ValueError(f"num_hashes must be >= 1, got {num_hashes}")
     return _shingle_kernel_frame(df, id_col, text_col, shingle_n, num_hashes)
 
 
@@ -136,7 +138,7 @@ def _shingle_kernel_frame(
     import zlib
     from typing import Iterator
 
-    seeds = _mh_seeds(num_hashes)[:, None] if num_hashes else None  # (k, 1)
+    seeds = _mh_seeds(num_hashes)[:, None] if num_hashes is not None else None  # (k, 1)
     norm_re = _re.compile(r"[^a-z0-9]+")
     # odd position multipliers so shingle hashes are order-sensitive
     pos_mult = [
@@ -213,7 +215,7 @@ def _shingle_kernel_frame(
             )
 
     id_type = _sql_type(df, id_col)
-    sig_part = "signature array<long>, " if num_hashes else ""
+    sig_part = "signature array<long>, " if num_hashes is not None else ""
     return df.select(id_col, text_col).mapInPandas(
         _kernel, f"{id_col} {id_type}, {sig_part}shingles array<long>"
     )

@@ -30,7 +30,6 @@ exact work, driver-controlled level loop.
 
 from __future__ import annotations
 
-import math
 from typing import Iterator, Sequence
 
 import numpy as np
@@ -160,34 +159,39 @@ def _exact_flags(geoms, x0, y0, width, height):
     return inter, within
 
 
-def qtree_classify(polys, bbox, cellsize, max_level: int | None = None):
+def qtree_classify(polys, bbox, cellsize):
     """Quadtree refinement (gridding.py:191-255 semantics): recursively
-    split boundary blocks until block <= cell size. Returns
-    (interior_blocks, boundary_cells_bbox) — driver-side; used by the qtree
+    split boundary blocks until one cell is left. Blocks are integer
+    cell-index ranges, so a split always shrinks its block — coordinates
+    are computed only to classify. Returns (interior_blocks, boundary_cells)
+    as half-open (ix0, iy0, ix1, iy1) blocks and (ix, iy) cells of the grid
+    ``B.get_grid_shape`` lays over ``bbox`` — driver-side; used by the qtree
     GridMaker mode and pinned by tests against the prll mode's output."""
     height, width = cellsize
-    xmin, ymin, xmax, ymax = bbox
+    xmin, ymin = bbox[0], bbox[1]
+    nrows, ncols = B.get_grid_shape([height, width], bbox)
     interior, boundary = [], []
-    stack = [bbox]
+    stack = [(0, 0, ncols, nrows)]
     while stack:
-        bxmin, bymin, bxmax, bymax = stack.pop()
-        cls = classify_rect(polys, bxmin, bymin, bxmax, bymax)
+        ix0, iy0, ix1, iy1 = stack.pop()
+        cls = classify_rect(
+            polys, xmin + ix0 * width, ymin + iy0 * height,
+            xmin + ix1 * width, ymin + iy1 * height,
+        )
         if cls == ALL_OUT:
             continue
-        w, h = bxmax - bxmin, bymax - bymin
         if cls == ALL_IN:
-            interior.append([bxmin, bymin, bxmax, bymax])
-        elif w <= width + B.TOL_EPS and h <= height + B.TOL_EPS:
-            boundary.append([bxmin, bymin, bxmax, bymax])
+            interior.append((ix0, iy0, ix1, iy1))
+        elif ix1 - ix0 == 1 and iy1 - iy0 == 1:
+            boundary.append((ix0, iy0))
         else:
-            mx = bxmin + math.ceil(w / width / 2) * width
-            my = bymin + math.ceil(h / height / 2) * height
-            mx, my = min(mx, bxmax), min(my, bymax)
+            mx = ix0 + (ix1 - ix0 + 1) // 2
+            my = iy0 + (iy1 - iy0 + 1) // 2
             for qx0, qy0, qx1, qy1 in (
-                (bxmin, bymin, mx, my),
-                (mx, bymin, bxmax, my),
-                (bxmin, my, mx, bymax),
-                (mx, my, bxmax, bymax),
+                (ix0, iy0, mx, my),
+                (mx, iy0, ix1, my),
+                (ix0, my, mx, iy1),
+                (mx, my, ix1, iy1),
             ):
                 if qx1 > qx0 and qy1 > qy0:
                     stack.append((qx0, qy0, qx1, qy1))
@@ -413,23 +417,14 @@ def _grid_maker_qtree(
         )
 
     # interior blocks -> cells (distributed explode; blocks are few)
-    block_rows = [
-        (
-            int(round((b[0] - xmin) / width)),
-            int(round((b[1] - ymin) / height)),
-            int(round((b[2] - b[0]) / width)),
-            int(round((b[3] - b[1]) / height)),
-        )
-        for b in interior_blocks
-    ]
-    if block_rows:
-        blocks = spark.createDataFrame(block_rows, "bx int, by int, nx int, ny int")
+    if interior_blocks:
+        blocks = spark.createDataFrame(interior_blocks, "x0 int, y0 int, x1 int, y1 int")
         inter_cells = (
-            blocks.withColumn("dx", F.explode(F.sequence(F.lit(0), F.col("nx") - 1)))
-            .withColumn("dy", F.explode(F.sequence(F.lit(0), F.col("ny") - 1)))
+            blocks.withColumn("cell_x", F.explode(F.sequence("x0", F.col("x1") - 1)))
+            .withColumn("cell_y", F.explode(F.sequence("y0", F.col("y1") - 1)))
             .select(
-                (F.col("bx") + F.col("dx")).cast("int").alias("cell_x"),
-                (F.col("by") + F.col("dy")).cast("int").alias("cell_y"),
+                "cell_x",
+                "cell_y",
                 F.lit(True).alias("__intersects__"),
                 F.lit(True).alias("__within__"),
             )
@@ -439,10 +434,6 @@ def _grid_maker_qtree(
         inter_cells = None
 
     # boundary candidates -> exact flags via the Arrow UDF
-    cand_rows = [
-        (int(round((b[0] - xmin) / width)), int(round((b[1] - ymin) / height)))
-        for b in boundary_cells
-    ]
     bcast = spark.sparkContext.broadcast(_serialize_geoms(polys))
 
     def _exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -458,8 +449,8 @@ def _grid_maker_qtree(
             out["__within__"] = within
             yield out
 
-    if cand_rows:
-        cand = spark.createDataFrame(cand_rows, "cell_x int, cell_y int")
+    if boundary_cells:
+        cand = spark.createDataFrame(boundary_cells, "cell_x int, cell_y int")
         bound_cells = cell_cols(
             cand.mapInPandas(
                 _exact, "cell_x int, cell_y int, __intersects__ boolean, __within__ boolean"

@@ -21,16 +21,16 @@ Two physical paths, chosen by the shape of the right side:
    DuckDB-oracle-checkable, which is how the driver verifies the engine.
 
 2. **rect x WKB polygons** (`grid_overlay_polygons`): irregular vector
-   layers (NUTS-3-style). Polygon side is a dimension table (broadcast);
-   candidates come from exploding each polygon's bbox into the grid's
-   integer cell-key range (the cell grid IS the spatial index — replaces
-   the reference's R-tree, overlay.py:257-260); the exact clip runs
-   vectorized-numpy in an Arrow UDF only on candidate pairs.
+   layers (NUTS-3-style), never collected to the driver. Candidates come
+   from exploding each polygon's bbox into the grid's integer cell-key
+   range in the JVM (the cell grid IS the spatial index — replaces the
+   reference's R-tree, overlay.py:257-260) and a shuffled join on that
+   key; each polygon's WKB is joined back once by id, and the exact clip
+   runs in an Arrow UDF only on candidate pairs.
 """
 
 from __future__ import annotations
 
-import math
 from typing import Iterator, Sequence
 
 import numpy as np
@@ -346,12 +346,11 @@ def _drop_unmatched(out: DataFrame, columns, area, rule) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# path 2: rect x WKB polygons — broadcast + Arrow UDF exact clip
+# path 2: rect x WKB polygons — shuffled cover-cell join + Arrow UDF exact clip
 # ---------------------------------------------------------------------------
 
 
 def grid_overlay_polygons(
-    spark: SparkSession,
     cells: DataFrame,
     polygons: DataFrame,
     columns: Sequence[str],
@@ -365,11 +364,15 @@ def grid_overlay_polygons(
 ) -> DataFrame:
     """Overlay the cell grid with an irregular WKB polygon layer.
 
-    The polygon layer is collected + broadcast (dimension-table assumption —
-    same as the reference pickling the mask to every worker, but once per
-    executor instead of once per tile). Candidate pairs come from exploding
-    each polygon bbox into grid cell-key ranges; the exact Sutherland-
-    Hodgman clip runs only on candidates, vectorized per batch.
+    No polygon geometry reaches the driver:
+    1. per-polygon bbox/area via one Arrow UDF pass (``_poly_meta``),
+    2. cover-cell explosion as JVM ``sequence``/``explode`` on the bbox —
+       ids + keys only, the WKB never rides the replication,
+    3. shuffled equi-join with the cells on the grid cell key (AQE handles
+       skew: a continent-sized polygon's cover cells split across tasks,
+       and broadcasts a small side on its own), then the WKB joined back
+       ONCE per polygon by id,
+    4. exact Sutherland-Hodgman clip on candidate pairs only.
 
     ``emit_wkb=True`` (rule=None only) carries each piece's CLIPPED
     geometry (cell ∩ polygon, holes preserved) as WKB — the rings the clip
@@ -380,197 +383,16 @@ def grid_overlay_polygons(
     CRS.check_layers_crs(cells, polygons, "geometry", geometry_col, context="grid_overlay_polygons")
     gx0, gy0, gw, gh = _grid_meta(cells, "grid cells")
 
-    rows = polygons.select(poly_key, geometry_col, *columns).collect()
-    geoms: dict[int, list] = {}
-    attr_rows = []
-    cand_rows = []
-    for r in rows:
-        mp = wkb.decode_multipolygon(bytes(r[geometry_col]))
-        if not mp or not any(len(p) for p in mp):
-            continue  # empty geometry: overlays nothing
-        pid = r[poly_key]
-        geoms[pid] = mp
-        parea = G.multipolygon_area(mp)
-        attr_rows.append((pid, parea, *[r[c] for c in columns]))
-        bxmin, bymin, bxmax, bymax = G.multipolygon_bbox(mp)
-        lo_x = int(math.floor((bxmin - gx0) / gw))
-        hi_x = int(math.floor((bxmax - 1e-12 - gx0) / gw))
-        lo_y = int(math.floor((bymin - gy0) / gh))
-        hi_y = int(math.floor((bymax - 1e-12 - gy0) / gh))
-        for ix in range(lo_x, hi_x + 1):
-            for iy in range(lo_y, hi_y + 1):
-                cand_rows.append((ix, iy, pid))
-
-    key_type = dict(polygons.dtypes)[poly_key]
-    cand_df = spark.createDataFrame(
-        cand_rows, f"_gix long, _giy long, {poly_key} {key_type}"
-    )
-    attr_schema = f"{poly_key} {key_type}, poly_area double" + "".join(
-        f", {c} {dict(polygons.dtypes)[c]}" for c in columns
-    )
-    attr_df = spark.createDataFrame(attr_rows, attr_schema)
-
-    left = cells.select(
-        "cell_id",
-        F.floor((F.col("x") - F.lit(gx0)) / F.lit(gw)).cast("long").alias("_gix"),
-        F.floor((F.col("y") - F.lit(gy0)) / F.lit(gh)).cast("long").alias("_giy"),
-        F.col("x").alias("_ax"),
-        F.col("y").alias("_ay"),
-        F.col("xmax").alias("_axm"),
-        F.col("ymax").alias("_aym"),
-    )
-    pairs = left.join(F.broadcast(cand_df), ["_gix", "_giy"])
-
-    bcast = spark.sparkContext.broadcast(
-        {pid: [[np.asarray(r).tolist() for r in poly] for poly in mp] for pid, mp in geoms.items()}
-    )
-
-    def _clip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[int, list] = {}
-
-        def get(pid):
-            if pid not in cache:
-                cache[pid] = [
-                    [np.asarray(r, dtype=np.float64) for r in poly]
-                    for poly in bcast.value[pid]
-                ]
-            return cache[pid]
-
-        for batch in batches:
-            if not len(batch):
-                continue
-            ax = batch["_ax"].to_numpy()
-            ay = batch["_ay"].to_numpy()
-            axm = batch["_axm"].to_numpy()
-            aym = batch["_aym"].to_numpy()
-            pids = batch[poly_key].to_numpy()
-            areas = np.empty(len(batch))
-            geoms_out = [None] * len(batch) if emit_wkb else None
-            for i in range(len(batch)):
-                if emit_wkb:
-                    mpc = G.multipolygon_clip(get(pids[i]), ax[i], ay[i], axm[i], aym[i])
-                    areas[i] = G.multipolygon_area(mpc)
-                    if mpc:
-                        geoms_out[i] = wkb.encode_multipolygon(mpc)
-                else:
-                    areas[i] = G.multipolygon_clip_area(
-                        get(pids[i]), ax[i], ay[i], axm[i], aym[i]
-                    )
-            out = batch[["cell_id", poly_key]].copy()
-            out["piece_area"] = areas
-            if emit_wkb:
-                out["geometry"] = pd.Series(geoms_out, index=batch.index, dtype=object)
-            yield out[out["piece_area"] > 0]
-
-    geom_field = ", geometry binary" if emit_wkb else ""
-    geom_cols = ["geometry"] if emit_wkb else []
-    pieces = pairs.mapInPandas(
-        _clip, f"cell_id long, {poly_key} {key_type}, piece_area double{geom_field}"
-    )
-    pieces = (
-        pieces.join(F.broadcast(attr_df), poly_key)
-        .withColumn(
-            "area_pct",
-            F.when(F.col("poly_area") > 0, F.col("piece_area") / F.col("poly_area")),
-        )
-        .select("cell_id", poly_key, "piece_area", "area_pct", *columns, *geom_cols)
-    )
-    if rule is None:
-        if how == "union_full":
-            psel = [poly_key, *columns]
-            if emit_wkb:
-                psel.append(F.col(geometry_col).alias("geometry"))
-            return _union_full_pieces(
-                pieces, cells, polygons.select(*psel), columns, poly_key, emit_wkb=emit_wkb
-            )
-        return pieces
-    out = _apply_rule(pieces, cells, columns, rule, cover, area, poly_key=poly_key)
-    if how == "intersection":
-        return _drop_unmatched(out, columns, area, rule)
-    return out.drop("__n_pieces__")
-
-
-def grid_overlay_polygons_distributed(
-    cells: DataFrame,
-    polygons: DataFrame,
-    columns: Sequence[str],
-    rule: str | None = "sum",
-    cover: bool = False,
-    area: bool = False,
-    how: str = "intersection",
-    geometry_col: str = "geometry",
-    poly_key: str = "poly_id",
-    emit_wkb: bool = False,
-) -> DataFrame:
-    """Overlay with a polygon layer too large to collect/broadcast.
-
-    Fully distributed plan (no driver-side geometry):
-    1. per-polygon bbox/area via one Arrow UDF pass (WKB decode batch-wise),
-    2. cover-cell explosion as JVM ``sequence``/``explode`` on the bbox —
-       ids + keys only, the WKB never rides the replication,
-    3. shuffled equi-join with the cells on the grid cell key (AQE handles
-       skew: a continent-sized polygon's cover cells split across tasks),
-       then the WKB joined back ONCE per polygon by id,
-    4. exact Sutherland-Hodgman clip on candidate pairs only.
-
-    Same semantics as :func:`grid_overlay_polygons` (pinned by tests),
-    including ``emit_wkb`` piece geometry.
-    """
-    _check_how(how, rule)
-    _check_emit_wkb(emit_wkb, rule)
-    CRS.check_layers_crs(
-        cells, polygons, "geometry", geometry_col, context="grid_overlay_polygons_distributed"
-    )
-    spark = cells.sparkSession
-    gx0, gy0, gw, gh = _grid_meta(cells, "grid cells")
-
-    # 1. bbox + area per polygon, decoded batch-at-a-time
-    key_type = dict(polygons.dtypes)[poly_key]
-    meta_schema = (
-        f"{poly_key} {key_type}, poly_area double, "
-        "__bxmin__ double, __bymin__ double, __bxmax__ double, __bymax__ double"
-    )
-
-    def _meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            if not len(batch):
-                continue
-            out = {
-                poly_key: batch[poly_key].to_numpy(),
-                "poly_area": np.empty(len(batch)),
-                "__bxmin__": np.empty(len(batch)),
-                "__bymin__": np.empty(len(batch)),
-                "__bxmax__": np.empty(len(batch)),
-                "__bymax__": np.empty(len(batch)),
-            }
-            keep_mask = np.ones(len(batch), dtype=bool)
-            for i, buf in enumerate(batch[geometry_col]):
-                mp = wkb.decode_multipolygon(bytes(buf))
-                if not mp or not any(len(p) for p in mp):
-                    keep_mask[i] = False  # empty geometry: overlays nothing
-                    continue
-                out["poly_area"][i] = G.multipolygon_area(mp)
-                (
-                    out["__bxmin__"][i],
-                    out["__bymin__"][i],
-                    out["__bxmax__"][i],
-                    out["__bymax__"][i],
-                ) = G.multipolygon_bbox(mp)
-            yield pd.DataFrame(out)[keep_mask]
-
-    meta = polygons.select(poly_key, geometry_col).mapInPandas(_meta, meta_schema)
-
-    # 2. cover-cell explosion (JVM) — ids + bbox-derived keys ONLY. The WKB
-    # must not ride the x cover-cells replication into the cell-key
+    # The WKB must not ride the x cover-cells replication into the cell-key
     # exchange (a country polygon with 100k vertices and 10^4 cover cells
     # would ship 10^4 copies); it is joined back by poly id AFTER the pair
     # join, so the exchange carries each geometry once (hash-partitioned by
     # key) and the per-pair duplication happens inside the clip stage,
     # never re-shuffled. Same re-plumb shape as the minhash LSH band fix.
+    meta = _poly_meta(polygons, poly_key, geometry_col, "_p")
     cover_df = _explode_cover(
-        meta, gx0, gy0, gw, gh,
-        "__bxmin__", "__bymin__", "__bxmax__", "__bymax__",
-        keep=[poly_key, "poly_area"],
+        meta, gx0, gy0, gw, gh, "_pxmin", "_pymin", "_pxmax", "_pymax",
+        keep=[poly_key, "_parea"],
     )
 
     left = cells.select(
@@ -582,14 +404,13 @@ def grid_overlay_polygons_distributed(
         F.col("xmax").alias("_axm"),
         F.col("ymax").alias("_aym"),
     )
-    # raw WKB fetched once per polygon (no meta recompute — the pair join
-    # only contains keys that survived the meta pass, so empty geometries
-    # stay excluded). AQE splits a mega-polygon's skewed pair partition.
+    # the pair join only contains keys that survived the meta pass, so
+    # empty geometries stay excluded. AQE splits a mega-polygon's skewed
+    # pair partition.
     pairs = left.join(cover_df, ["_gix", "_giy"]).join(
         polygons.select(poly_key, F.col(geometry_col).alias("__wkb__")), poly_key
     )
 
-    # 3. exact clip on candidate pairs (decode cache keyed by poly id)
     def _clip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         decode = _decode_cache()
         for batch in batches:
@@ -612,17 +433,20 @@ def grid_overlay_polygons_distributed(
                         geoms_out[i] = wkb.encode_multipolygon(mpc)
                 else:
                     areas[i] = G.multipolygon_clip_area(mp, ax[i], ay[i], axm[i], aym[i])
-            out = batch[["cell_id", poly_key, "poly_area"]].copy()
+            out = batch[["cell_id", poly_key, "_parea"]].copy()
             out["piece_area"] = areas
             if emit_wkb:
                 out["geometry"] = pd.Series(geoms_out, index=batch.index, dtype=object)
             yield out[out["piece_area"] > 0]
 
+    key_type = dict(polygons.dtypes)[poly_key]
     geom_field = ", geometry binary" if emit_wkb else ""
     geom_cols = ["geometry"] if emit_wkb else []
     pieces = pairs.mapInPandas(
         _clip,
-        f"cell_id long, {poly_key} {key_type}, poly_area double, piece_area double{geom_field}",
+        f"cell_id long, {poly_key} {key_type}, _parea double, piece_area double{geom_field}",
+    ).withColumn(
+        "area_pct", F.when(F.col("_parea") > 0, F.col("piece_area") / F.col("_parea"))
     )
     # attribute merge-back ONLY when attributes were asked for: with no
     # columns the join adds nothing (every piece key came from the polygon
@@ -631,13 +455,8 @@ def grid_overlay_polygons_distributed(
     # OptimizeSkewedJoin refuses to split a skewed partition whose output
     # co-partitioning a parent join reuses: a mega-polygon's hot key would
     # stay one task. Skipping it keeps the WKB join splittable.
-    pieces = pieces.withColumn(
-        "area_pct",
-        F.when(F.col("poly_area") > 0, F.col("piece_area") / F.col("poly_area")),
-    )
     if columns:
-        attrs = polygons.select(poly_key, *columns)
-        pieces = pieces.join(attrs, poly_key)
+        pieces = pieces.join(polygons.select(poly_key, *columns), poly_key)
     pieces = pieces.select(
         "cell_id", poly_key, "piece_area", "area_pct", *columns, *geom_cols
     )
@@ -659,8 +478,8 @@ def grid_overlay_polygons_distributed(
 def _decode_cache(limit: int = 4096):
     """Per-batch-iterator WKB decode cache keyed by polygon id — one
     decode per polygon per Python worker, bounded. Shared by every
-    candidate-pair clip loop (distributed overlay, pair overlay,
-    distributed union)."""
+    candidate-pair clip loop (grid overlay, pair overlay, distributed
+    union)."""
     from pygridmap_spark.core import wkb as _WKB
 
     cache: dict = {}
@@ -783,7 +602,7 @@ def polygon_overlay_pieces(
     falls back to fragments on any area mismatch; identical areas and
     membership either way).
 
-    Fully distributed plan (same shape as grid_overlay_polygons_distributed):
+    Fully distributed plan (same shape as grid_overlay_polygons):
 
     1. one Arrow meta pass per side (bbox + area; WKB stays put),
     2. both sides explode their bbox cover cells on a SHARED index grid —
@@ -938,22 +757,14 @@ def area_interpolate(
     target_cells: DataFrame,
     columns: Sequence[str],
     geometry_col: str = "geometry",
-    distributed: bool = False,
 ) -> DataFrame:
     """Tobler-style weighted areal interpolation (overlay.py:559-605):
     rule='sum', area & cover on, intersection semantics — each target cell
-    receives sum(attr * overlap_share_of_source). ``distributed=True``
-    routes through the no-broadcast overlay for source layers too large to
-    collect (identical output, pinned by the overlay parity tests)."""
-    kwargs = dict(
-        rule="sum", cover=True, area=True, how="intersection", geometry_col=geometry_col
-    )
-    if distributed:
-        return grid_overlay_polygons_distributed(
-            target_cells, source_polygons, columns, **kwargs
-        )
+    receives sum(attr * overlap_share_of_source). ``spark`` is unused (the
+    session comes with the frames); it stays for call compatibility."""
     return grid_overlay_polygons(
-        spark, target_cells, source_polygons, columns, **kwargs
+        target_cells, source_polygons, columns,
+        rule="sum", cover=True, area=True, how="intersection", geometry_col=geometry_col,
     )
 
 
@@ -1119,7 +930,7 @@ def union_exact_distributed(
     1. per-polygon bbox via one Arrow pass (``_poly_meta``),
     2. cover-tile explosion on the bbox — ids only,
     3. WKB joined back once per polygon by id (AQE skew-splittable, as in
-       the distributed overlay),
+       grid_overlay_polygons),
     4. MAP-SIDE clip of each polygon to each covered tile — so the tile
        exchange carries only the clipped piece that lands in that tile,
        never a continent polygon replicated to its 10^4 tiles,

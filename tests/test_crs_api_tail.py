@@ -54,9 +54,7 @@ def test_overlay_crs_mismatch_raises(spark):
         PG.synthetic_polygons(spark, n=3, bbox=(0, 0, 100, 100)), 4326
     )
     with pytest.raises(ValueError, match="CRS mismatch"):
-        OV.grid_overlay_polygons(spark, cells, polys, ["pop"])
-    with pytest.raises(ValueError, match="CRS mismatch"):
-        OV.grid_overlay_polygons_distributed(cells, polys, ["pop"])
+        OV.grid_overlay_polygons(cells, polys, ["pop"])
 
 
 # --- grid_maker xypos / buffer ------------------------------------------------
@@ -134,14 +132,13 @@ def test_union_full_polygons_matches_rects(spark):
         ],
         "poly_id long, geometry binary, v double",
     )
-    out = OV.grid_overlay_polygons(spark, cells, polys, ["v"], rule=None, how="union_full")
+    out = OV.grid_overlay_polygons(cells, polys, ["v"], rule=None, how="union_full")
     rows = out.collect()
-    assert len([r for r in rows if r["cell_id"] is None]) == 1
-    assert len([r for r in rows if r["poly_id"] is None]) == 3
-    d = OV.grid_overlay_polygons_distributed(cells, polys, ["v"], rule=None, how="union_full")
-    assert {(r["cell_id"], r["poly_id"]) for r in d.collect()} == {
-        (r["cell_id"], r["poly_id"]) for r in rows
-    }
+    # poly 10 lies inside cell 0; poly 11 and cells 1-3 are unmatched
+    assert sorted((r["cell_id"], r["poly_id"], r["v"]) for r in rows if r["cell_id"] is not None) == [
+        (0, 10, 1.0), (1, None, None), (2, None, None), (3, None, None)
+    ]
+    assert [(r["poly_id"], r["v"]) for r in rows if r["cell_id"] is None] == [(11, 2.0)]
 
 
 # --- invalid-geometry contract --------------------------------------------------

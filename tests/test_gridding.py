@@ -2,6 +2,7 @@
 interior semantics, qtree parity (SURVEY §2.7, reference gridding.py)."""
 
 import math
+import signal
 
 import numpy as np
 import pandas as pd
@@ -86,13 +87,14 @@ def test_qtree_classify_parity_with_cellwise(spark):
     geoms = [wkb.decode_multipolygon(bytes(r["geometry"])) for r in polys_df.collect()]
     cell = (12_500.0, 12_500.0)  # 8x8 grid, power-of-2 friendly
     interior, boundary = GR.qtree_classify(geoms, list(BBOX), cell)
-    # expand interior blocks + boundary cells into the cell set they cover
-    qtree_cells = set()
-    for bx0, by0, bx1, by1 in interior:
-        for ix in range(int(round((bx1 - bx0) / cell[1]))):
-            for iy in range(int(round((by1 - by0) / cell[0]))):
-                qtree_cells.add((bx0 + ix * cell[1], by0 + iy * cell[0]))
-    boundary_cells = {(b[0], b[1]) for b in boundary}
+    # expand interior index blocks into the cells they cover
+    qtree_cells = {
+        (ix * cell[1], iy * cell[0])
+        for ix0, iy0, ix1, iy1 in interior
+        for ix in range(ix0, ix1)
+        for iy in range(iy0, iy1)
+    }
+    boundary_cells = {(ix * cell[1], iy * cell[0]) for ix, iy in boundary}
     # flat (prll-style) classification of every cell
     flat_inter, flat_within = set(), set()
     cell_area = cell[0] * cell[1]
@@ -139,6 +141,33 @@ def test_qtree_mode_matches_prll_mode(spark):
     p2 = {tuple(r[k] for k in key) for r in GR.grid_maker(spark, mode="prll", interior=True, **kw).collect()}
     q2 = {tuple(r[k] for k in key) for r in GR.grid_maker(spark, mode="qtree", interior=True, **kw).collect()}
     assert p2 == q2
+
+
+def test_qtree_terminates_on_float_origin(spark):
+    """A mask whose aligned bbox is 2 cells tall plus float error
+    ((2.063 + 2.0) - 2.063 > 2.0): splitting by coordinates put the
+    midline on the block edge and re-queued the block forever. Index
+    blocks always shrink; the output equals mode='prll'."""
+    tri = wkb.encode_polygon([[(0.0, 2.063), (1.0, 2.063), (0.0, 4.063)]])
+    mask = spark.createDataFrame([(0, tri)], "poly_id long, geometry binary")
+    geoms = [wkb.decode_multipolygon(tri)]
+
+    def _timeout(*_):
+        raise TimeoutError("qtree_classify did not terminate")
+
+    old = signal.signal(signal.SIGALRM, _timeout)
+    signal.alarm(10)
+    try:
+        interior, boundary = GR.qtree_classify(geoms, [0.0, 2.063, 1.0, 2.063 + 2.0], (1.0, 1.0))
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, old)
+    assert interior == [] and sorted(boundary) == [(0, 0), (0, 1)]
+    key = ["cell_x", "cell_y", "__intersects__", "__within__"]
+    kw = dict(mask=mask, cell=(1.0, 1.0))
+    q = {tuple(r[k] for k in key) for r in GR.grid_maker(spark, mode="qtree", **kw).collect()}
+    p = {tuple(r[k] for k in key) for r in GR.grid_maker(spark, mode="prll", **kw).collect()}
+    assert q == p == {(0, 0, True, False), (0, 1, True, False)}
 
 
 def test_qtree_requires_trim(spark):

@@ -115,6 +115,14 @@ def test_minhash_jaccard_estimate_tracks_exact(spark):
     assert agree == pytest.approx(exact, abs=0.15)
 
 
+def test_minhash_signatures_rejects_nonpositive_num_hashes(spark):
+    """num_hashes=0 used to return a frame with no signature column."""
+    df = spark.createDataFrame([(0, "a b c d")], "doc_id long, text string")
+    for k in (0, -1):
+        with pytest.raises(ValueError, match="num_hashes"):
+            DD.minhash_signatures(df, num_hashes=k)
+
+
 def test_simhash_near_duplicates(spark, docs_with_dups):
     pairs = {
         (r["doc_a"], r["doc_b"]): r["hamming"]

@@ -106,9 +106,7 @@ def test_polygon_overlay_matches_numpy(spark, grid):
     """WKB-polygon path: piece areas equal the numpy kernel's direct
     computation for every (cell, polygon) pair."""
     polys = PG.synthetic_polygons(spark, n=6, bbox=BBOX, seed=11)
-    pieces = OV.grid_overlay_polygons(
-        spark, grid, polys, ["pop"], rule=None
-    ).collect()
+    pieces = OV.grid_overlay_polygons(grid, polys, ["pop"], rule=None).collect()
     cells = {r["cell_id"]: (r["x"], r["y"], r["xmax"], r["ymax"]) for r in grid.collect()}
     geoms = {
         r["poly_id"]: wkb.decode_multipolygon(bytes(r["geometry"]))
@@ -143,31 +141,11 @@ def test_area_interpolate_mass_conservation(spark, grid):
     assert total == pytest.approx(want, rel=1e-9)
     # cover lists present and sorted
     assert out.filter(F.size("__cover__") >= 1).count() == out.count()
-    # distributed path conserves the same mass
-    dist = OV.area_interpolate(spark, polys, grid, ["pop"], distributed=True)
-    assert dist.agg(F.sum("pop")).collect()[0][0] == pytest.approx(want, rel=1e-9)
-
-
-def test_distributed_polygon_overlay_matches_broadcast(spark, grid):
-    """The no-driver-geometry distributed path returns exactly the
-    broadcast path's pieces."""
-    polys = PG.synthetic_polygons(spark, n=6, bbox=BBOX, seed=11)
-    bcast = OV.grid_overlay_polygons(spark, grid, polys, ["pop"], rule=None)
-    dist = OV.grid_overlay_polygons_distributed(grid, polys, ["pop"], rule=None)
-    key = lambda r: (r["cell_id"], r["poly_id"])  # noqa: E731
-    b = {key(r): (r["piece_area"], r["area_pct"]) for r in bcast.collect()}
-    d = {key(r): (r["piece_area"], r["area_pct"]) for r in dist.collect()}
-    assert set(b) == set(d)
-    for k in b:
-        assert b[k][0] == pytest.approx(d[k][0], rel=1e-12)
-        assert b[k][1] == pytest.approx(d[k][1], rel=1e-12)
 
 
 def test_distributed_polygon_overlay_rules(spark, grid):
     polys = PG.synthetic_polygons(spark, n=4, bbox=(20_000.0, 20_000.0, 180_000.0, 180_000.0), seed=3)
-    out = OV.grid_overlay_polygons_distributed(
-        grid, polys, ["pop"], rule="sum", area=True, cover=True
-    )
+    out = OV.grid_overlay_polygons(grid, polys, ["pop"], rule="sum", area=True, cover=True)
     total = out.agg(F.sum("pop")).collect()[0][0]
     want = sum(r["pop"] for r in polys.select("pop").collect())
     assert total == pytest.approx(want, rel=1e-9)
@@ -196,32 +174,31 @@ def test_piece_geometry_rect_path(spark, grid):
         assert r["piece_area"] == pytest.approx(G.multipolygon_area(mp), rel=1e-12)
 
 
-def test_piece_geometry_polygon_paths(spark, grid):
-    """emit_wkb on both WKB-polygon paths: shoelace(decoded piece WKB) ==
-    piece_area for every row, holes preserved, and the two physical paths
-    agree byte-for-byte."""
+def test_piece_geometry_polygon_path(spark, grid):
+    """emit_wkb on the WKB-polygon path: every piece's area equals the
+    numpy clip of its polygon to its cell, shoelace(decoded piece WKB) ==
+    piece_area for every row, and holes are preserved."""
     polys = PG.synthetic_polygons(spark, n=6, bbox=BBOX, seed=11)
-    bcast = OV.grid_overlay_polygons(
-        spark, grid, polys, ["pop"], rule=None, emit_wkb=True
-    ).collect()
-    assert len(bcast) > 0
-    for r in bcast:
+    pieces = OV.grid_overlay_polygons(grid, polys, ["pop"], rule=None, emit_wkb=True).collect()
+    assert len(pieces) > 0
+    cells = {r["cell_id"]: (r["x"], r["y"], r["xmax"], r["ymax"]) for r in grid.collect()}
+    geoms = {
+        r["poly_id"]: wkb.decode_multipolygon(bytes(r["geometry"]))
+        for r in polys.collect()
+    }
+    for r in pieces:
         mp = wkb.decode_multipolygon(bytes(r["geometry"]))
         assert r["piece_area"] == pytest.approx(G.multipolygon_area(mp), rel=1e-12)
+        want = G.multipolygon_clip_area(geoms[r["poly_id"]], *cells[r["cell_id"]])
+        assert r["piece_area"] == pytest.approx(want, rel=1e-9)
     # the with-hole polygon (poly_id n-2) must keep its hole in at least
     # one piece: some decoded piece has a polygon with >1 ring
-    hole_pieces = [r for r in bcast if r["poly_id"] == 4]
+    hole_pieces = [r for r in pieces if r["poly_id"] == 4]
     assert any(
         len(poly) > 1
         for r in hole_pieces
         for poly in wkb.decode_multipolygon(bytes(r["geometry"]))
     ), "hole lost in clipped piece geometry"
-    dist = OV.grid_overlay_polygons_distributed(
-        grid, polys, ["pop"], rule=None, emit_wkb=True
-    ).collect()
-    b = {(r["cell_id"], r["poly_id"]): bytes(r["geometry"]) for r in bcast}
-    d = {(r["cell_id"], r["poly_id"]): bytes(r["geometry"]) for r in dist}
-    assert b == d  # piece-for-piece identical WKB across physical paths
 
 
 def test_piece_geometry_union_full(spark, grid):
@@ -232,7 +209,7 @@ def test_piece_geometry_union_full(spark, grid):
         spark, n=3, bbox=(0.0, 0.0, 60_000.0, 60_000.0), seed=5, with_hole=False, with_multi=False
     )
     out = OV.grid_overlay_polygons(
-        spark, grid, polys, ["pop"], rule=None, how="union_full", emit_wkb=True
+        grid, polys, ["pop"], rule=None, how="union_full", emit_wkb=True
     ).collect()
     rects = {r["cell_id"]: (r["x"], r["y"], r["xmax"], r["ymax"]) for r in grid.collect()}
     orig = {r["poly_id"]: bytes(r["geometry"]) for r in polys.collect()}
@@ -283,7 +260,7 @@ def test_polygon_overlay_pieces_matches_grid_path(spark, grid):
     )
     gen = OV.polygon_overlay_pieces(left, polys, ["pop"])
     ref = OV.grid_overlay_polygons(
-        spark, grid, polys.withColumnRenamed("right_id", "poly_id"), ["pop"], rule=None
+        grid, polys.withColumnRenamed("right_id", "poly_id"), ["pop"], rule=None
     )
     a = {(r["left_id"], r["right_id"]): r["piece_area"] for r in gen.collect()}
     b = {(r["cell_id"], r["poly_id"]): r["piece_area"] for r in ref.collect()}
@@ -578,9 +555,7 @@ def test_dissolve_pieces_hierarchical_matches_flat(spark):
     polys = spark.createDataFrame(
         [(1, mega), (2, diamond)], "poly_id long, geometry binary"
     )
-    pieces = OV.grid_overlay_polygons_distributed(
-        grid, polys, [], rule=None, emit_wkb=True
-    )
+    pieces = OV.grid_overlay_polygons(grid, polys, [], rule=None, emit_wkb=True)
     # coarse 8x8-cell blocks from the piece's cell id (grid is 50 wide)
     pieces = pieces.withColumn(
         "block",
@@ -620,9 +595,7 @@ def test_dissolve_pieces_hierarchical_single_block_group(spark):
         [[(1_200.0, 1_200.0), (3_800.0, 1_200.0), (3_800.0, 3_800.0), (1_200.0, 3_800.0)]]
     )
     polys = spark.createDataFrame([(1, small)], "poly_id long, geometry binary")
-    pieces = OV.grid_overlay_polygons_distributed(
-        grid, polys, [], rule=None, emit_wkb=True
-    ).withColumn("block", F.lit(0))
+    pieces = OV.grid_overlay_polygons(grid, polys, [], rule=None, emit_wkb=True).withColumn("block", F.lit(0))
     flat = OV.dissolve_pieces(pieces, strict=True).collect()[0]
     hier = OV.dissolve_pieces(pieces, strict=True, presplit_col="block").collect()[0]
     assert flat.area == hier.area

@@ -112,17 +112,15 @@ def test_empty_multipolygon_rows_are_skipped(spark):
     )
     polys = spark.createDataFrame(pdf)
     grid = PG.grid_layer(spark, (0.0, 0.0, 100_000.0, 100_000.0), (50_000.0, 50_000.0))
-    out = OV.grid_overlay_polygons(spark, grid, polys, ["pop"], rule=None).collect()
+    out = OV.grid_overlay_polygons(grid, polys, ["pop"], rule=None).collect()
     assert {r["poly_id"] for r in out} == {0}
-    out2 = OV.grid_overlay_polygons_distributed(grid, polys, ["pop"], rule=None).collect()
-    assert {r["poly_id"] for r in out2} == {0}
     with pytest.raises(ValueError):
         G.multipolygon_bbox([])
 
 
 def test_overlay_custom_poly_key_and_rule_max(spark):
-    """poly_key forwarding: non-default key name works through every rule
-    path in both polygon variants."""
+    """poly_key forwarding: a non-default key name works through the
+    row_number (max) and collect_list (list) rule paths."""
     pdf = pd.DataFrame(
         {
             "region_code": [7, 9],
@@ -135,16 +133,19 @@ def test_overlay_custom_poly_key_and_rule_max(spark):
     )
     polys = spark.createDataFrame(pdf)
     grid = PG.grid_layer(spark, (0.0, 0.0, 100_000.0, 100_000.0), (50_000.0, 50_000.0))
-    for fn in (
-        lambda: OV.grid_overlay_polygons(
-            spark, grid, polys, ["pop"], rule="max", area=True, poly_key="region_code"
-        ),
-        lambda: OV.grid_overlay_polygons_distributed(
-            grid, polys, ["pop"], rule="list", poly_key="region_code"
-        ),
-    ):
-        out = fn().collect()
-        assert len(out) > 0
+    mx = OV.grid_overlay_polygons(
+        grid, polys, ["pop"], rule="max", area=True, poly_key="region_code"
+    ).collect()
+    # each 50 km cell is covered whole by the region on its side (2.5e9 of
+    # its 6e9 m^2) and by a 10 km strip of the other
+    assert len(mx) == 4
+    for r in mx:
+        assert r["pop"] == (10.0 if r["x"] < 50_000.0 else 20.0)
+        assert r["area_pct"] == pytest.approx(2.5e9 / 6e9)
+    lst = OV.grid_overlay_polygons(
+        grid, polys, ["pop"], rule="list", poly_key="region_code"
+    ).collect()
+    assert len(lst) == 4 and all(r["__cover__"] == [7, 9] for r in lst)
 
 
 # --- round-2 advice regressions ---------------------------------------------
