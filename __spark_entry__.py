@@ -443,7 +443,7 @@ def _q_grid_maker_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_grid_maker_qtree(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_qtree_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D2 qtree mode over the same rect mask, trim=True — oracle: cells
     whose rect intersects the mask (qtree prunes all-out blocks)."""
     import pandas as pd
@@ -4260,7 +4260,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "overlay_poly_poly": _q_overlay_poly_poly,
         "area_interpolate_rects": _q_area_interpolate_rects,
         "grid_maker_trim": _q_grid_maker_trim,
-        "grid_maker_qtree": _q_grid_maker_qtree,
+        "grid_maker_qtree": _q_qtree_grid,
         "connected_components": _q_connected_components,
         "grid_hotspots": _q_grid_hotspots,
         "grid_gi_star": _q_grid_gi_star,

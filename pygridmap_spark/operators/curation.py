@@ -35,7 +35,6 @@ def contamination_stats(
     id_col: str = "doc_id",
     text_col: str = "text",
     bench_text_col: str = "text",
-    distributed: bool = False,
 ) -> DataFrame:
     """Per-document benchmark contamination: the fraction of the document's
     DISTINCT word n-grams that occur anywhere in the benchmark set
@@ -45,15 +44,9 @@ def contamination_stats(
     per corpus document; documents with fewer than ``n`` tokens have
     ``n_shingles = 0`` and NULL contamination (nothing to test).
 
-    Plan (default): benchmark shingles -> distinct -> BROADCAST (eval
-    suites are megabytes); corpus explode -> broadcast LEFT join marker ->
-    single partial-aggregated groupBy(id).
-
-    ``distributed=True`` is the twin for a benchmark too big to broadcast
-    (decontaminating one corpus against another): both sides join on
-    ``xxhash64(shingle)`` in a shuffle hash join, so the exchange carries
-    (int64, id) rows instead of shingle strings — same 2^-64-collision
-    contract as the LSH bucket-hash equality elsewhere in the engine.
+    Plan: benchmark shingles -> distinct -> BROADCAST (eval suites are
+    megabytes); corpus explode -> broadcast LEFT join marker -> single
+    partial-aggregated groupBy(id).
     """
     bench = (
         benchmark.select(
@@ -68,12 +61,7 @@ def contamination_stats(
             "shingle"
         ),
     )
-    if distributed:
-        bench = bench.select(F.xxhash64("shingle").alias("__shkey__"), "__hit__").distinct()
-        doc_sh = doc_sh.select(id_col, F.xxhash64("shingle").alias("__shkey__"))
-        joined = doc_sh.join(bench, "__shkey__", "left")
-    else:
-        joined = doc_sh.join(F.broadcast(bench), "shingle", "left")
+    joined = doc_sh.join(F.broadcast(bench), "shingle", "left")
     counts = (
         joined.groupBy(id_col)
         .agg(

@@ -7,32 +7,25 @@ Reference parity: pygridmap.gridding.GridMaker / grid_maker
 ``__intersects__``/``__within__`` mask-predicate flags, plus engine-native
 integer keys (cell_x, cell_y, cell_id).
 
-Spark-first plan (NOT the reference's process pool):
+Spark-first plan (NOT the reference's process pool), one for every mode
+and grid size:
 
 1. driver computes grid/tile shape constants (core.bboxes),
-2. cells are generated distributed: ``range(nx) x range(ny)`` (a
-   BroadcastNestedLoopJoin of two ranges — no data motion, splittable),
-3. **two-phase spatial join** against the mask:
-   - phase A: classify every tile rect as all-in / all-out / boundary
-     using exact clip areas — the coarse short-circuit the reference does
-     per-tile (gridding.py:146-151). Small grids classify on the driver
-     (zero job overhead); past 16k tiles the identical classify_rect runs
-     distributed over a tiles DataFrame with the broadcast mask,
-   - phase B: only boundary-tile cells run the exact per-cell test, batch
-     numpy inside mapInPandas (gridding.py:174-188's J2), interior/exterior
-     tiles get their flags as literals — zero per-cell geometry work,
-4. trim/interior filters (gridding.py:169-172, 186-188).
-
-The quadtree mode (gridding.py:191-255) exists as an iterative DataFrame
-refinement in :func:`qtree_classify` — same emitted cells, boundary-only
-exact work, driver-controlled level loop.
+2. the processing tiles are one ``range`` DataFrame; one Arrow pass with
+   the broadcast mask runs :func:`classify_blocks` per tile — the
+   reference's quadtree (gridding.py:191-255), whose prll mode emits the
+   same grid — and returns decided blocks: whole interior (or, for
+   trim=False, exterior) blocks and 1x1 boundary cells,
+3. blocks expand to cells in the JVM (``sequence``/``explode``), their
+   flags literals of the block class — no per-cell geometry work,
+4. trim/interior filters (gridding.py:169-172, 186-188) drop blocks
+   before they expand.
 """
 
 from __future__ import annotations
 
 from typing import Iterator, Sequence
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,10 +36,6 @@ from pygridmap_spark.core import geometry as G
 from pygridmap_spark.core import wkb
 
 ALL_OUT, BOUNDARY, ALL_IN = 0, 1, 2
-
-# phase-A cutover: grids with more tiles than this classify distributed
-# (module-level so tests can monkeypatch the cutover)
-DRIVER_TILE_LIMIT = 16_384
 
 
 def _decode_mask(mask_rows: Sequence[bytes]):
@@ -63,139 +52,67 @@ def _decode_mask(mask_rows: Sequence[bytes]):
     return geoms
 
 
-def classify_rect(geoms, xmin, ymin, xmax, ymax, eps=1e-9) -> int:
-    """Exact rect-vs-mask classification, reference OR semantics
-    (gridding.py:146-151, 180-182): ALL_IN iff any single mask geometry
-    fully covers the rect; ALL_OUT iff no geometry touches it; else
-    BOUNDARY. ``geoms`` is a list of multipolygons (one per mask row);
-    a flat polygon list (ring-list elements) is accepted for backward
-    compatibility. Per-geometry bbox prefilter keeps the driver loop
-    O(intersecting pairs)."""
-    rect_area = (xmax - xmin) * (ymax - ymin)
-    any_hit = False
+def classify_blocks(geoms, origin, cell, block, outside: bool = False) -> list:
+    """Quadtree classification of a lattice block against a mask — the one
+    cell classifier of ``grid_maker`` and ``spatialjoin.polygon_pip_join``
+    (reference gridding.py:146-151, 180-182, 191-255).
+
+    ``geoms`` is a list of multipolygons, OR-reduced per geometry (never
+    summed across overlapping rows); ``origin`` (x0, y0) and ``cell``
+    (height, width) define the lattice; ``block`` is the half-open integer
+    range ``[ix0, ix1) x [iy0, iy1)``. Returns decided blocks
+    ``(ix0, iy0, ix1, iy1, cls)``: ALL_IN blocks (some geometry covers the
+    block up to less than 1e-9 cell areas), BOUNDARY 1x1 cells (intersects
+    but not within), and ALL_OUT blocks (every clip at most 1e-9 cell
+    areas) only when ``outside``. The tolerance is per CELL, so a block's
+    class holds for every cell in it and 1x1 results are the per-cell
+    contract. Blocks are index ranges, so a split always shrinks its block."""
+    x0, y0 = origin
+    height, width = cell
+    tol = 1e-9 * height * width
+    boxed = []
     for g in geoms:
-        mp = g if (len(g) and isinstance(g[0], list)) else [g]
         try:
-            bxmin, bymin, bxmax, bymax = G.multipolygon_bbox(mp)
+            boxed.append((g, G.multipolygon_bbox(g)))
         except ValueError:
             continue
-        if bxmax < xmin or bxmin > xmax or bymax < ymin or bymin > ymax:
-            continue
-        clipped = G.multipolygon_clip_area(mp, xmin, ymin, xmax, ymax)
-        if clipped >= rect_area * (1.0 - 1e-9):
-            return ALL_IN
-        if clipped > eps * max(rect_area, 1.0):
-            any_hit = True
-    return BOUNDARY if any_hit else ALL_OUT
-
-
-def _classify_tiles_distributed(
-    spark: SparkSession, mask_bcast, bbox, height, width, tilesize, nxtiles, nytiles
-) -> DataFrame:
-    """Distributed twin of the driver phase-A loop: one classify_rect per
-    tile inside an Arrow UDF with the (shared) broadcast mask. Emits only
-    non-ALL_OUT tiles (the cells join left-fills ALL_OUT)."""
-    bcast = mask_bcast
-    bbox_t = tuple(float(v) for v in bbox)
-    hw = (float(height), float(width))
-    ts = list(tilesize)
-
-    def _classify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        geoms = _deserialize_geoms(bcast.value)
-        for batch in batches:
-            if not len(batch):
-                continue
-            cls = np.empty(len(batch), dtype=np.int32)
-            tix = batch["_tix"].to_numpy()
-            tiy = batch["_tiy"].to_numpy()
-            for i in range(len(batch)):
-                txmin, tymin, txmax, tymax = B.get_tile_bbox(
-                    [int(tiy[i]), int(tix[i])], list(hw), ts, list(bbox_t), crop=True
-                )
-                cls[i] = classify_rect(geoms, txmin, tymin, txmax, tymax)
-            out = batch.copy()
-            out["_cls"] = cls
-            yield out[out["_cls"] > ALL_OUT]
-
-    tiles = (
-        spark.range(nxtiles)
-        .select(F.col("id").cast("int").alias("_tix"))
-        .crossJoin(spark.range(nytiles).select(F.col("id").cast("int").alias("_tiy")))
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    return tiles.mapInPandas(_classify, "_tix int, _tiy int, _cls int")
-
-
-def _serialize_geoms(geoms):
-    """per-row multipolygons -> plain nested lists (broadcast-safe)."""
-    return [[[np.asarray(r).tolist() for r in poly] for poly in g] for g in geoms]
-
-
-def _deserialize_geoms(data):
-    return [
-        [[np.asarray(r, dtype=np.float64) for r in poly] for poly in g] for g in data
-    ]
-
-
-def _exact_flags(geoms, x0, y0, width, height):
-    """Per-cell flags with the reference's OR-per-geometry reduction
-    (gridding.py:180-182): within/intersects true if ANY single mask row
-    covers/touches the cell — never summed across overlapping rows."""
-    n = len(x0)
-    inter = np.zeros(n, dtype=bool)
-    within = np.zeros(n, dtype=bool)
-    cell_area = width * height
-    for i in range(n):
-        for mp in geoms:
-            a = G.multipolygon_clip_area(
-                mp, x0[i], y0[i], x0[i] + width, y0[i] + height
-            )
-            if a >= cell_area * (1.0 - 1e-9):
-                within[i] = True
-                inter[i] = True
-                break
-            if a > 1e-9 * cell_area:
-                inter[i] = True
-    return inter, within
-
-
-def qtree_classify(polys, bbox, cellsize):
-    """Quadtree refinement (gridding.py:191-255 semantics): recursively
-    split boundary blocks until one cell is left. Blocks are integer
-    cell-index ranges, so a split always shrinks its block — coordinates
-    are computed only to classify. Returns (interior_blocks, boundary_cells)
-    as half-open (ix0, iy0, ix1, iy1) blocks and (ix, iy) cells of the grid
-    ``B.get_grid_shape`` lays over ``bbox`` — driver-side; used by the qtree
-    GridMaker mode and pinned by tests against the prll mode's output."""
-    height, width = cellsize
-    xmin, ymin = bbox[0], bbox[1]
-    nrows, ncols = B.get_grid_shape([height, width], bbox)
-    interior, boundary = [], []
-    stack = [(0, 0, ncols, nrows)]
+    out = []
+    stack = [tuple(block)] if block[2] > block[0] and block[3] > block[1] else []
     while stack:
         ix0, iy0, ix1, iy1 = stack.pop()
-        cls = classify_rect(
-            polys, xmin + ix0 * width, ymin + iy0 * height,
-            xmin + ix1 * width, ymin + iy1 * height,
-        )
-        if cls == ALL_OUT:
-            continue
-        if cls == ALL_IN:
-            interior.append((ix0, iy0, ix1, iy1))
-        elif ix1 - ix0 == 1 and iy1 - iy0 == 1:
-            boundary.append((ix0, iy0))
-        else:
+        xmin, ymin = x0 + ix0 * width, y0 + iy0 * height
+        xmax, ymax = x0 + ix1 * width, y0 + iy1 * height
+        full = (xmax - xmin) * (ymax - ymin) - tol
+        cls = ALL_OUT
+        for g, (bxmin, bymin, bxmax, bymax) in boxed:
+            if bxmax < xmin or bxmin > xmax or bymax < ymin or bymin > ymax:
+                continue
+            clipped = G.multipolygon_clip_area(g, xmin, ymin, xmax, ymax)
+            if clipped >= full:
+                cls = ALL_IN
+                break
+            if clipped > tol:
+                cls = BOUNDARY
+        if cls == BOUNDARY and (ix1 - ix0 > 1 or iy1 - iy0 > 1):
             mx = ix0 + (ix1 - ix0 + 1) // 2
             my = iy0 + (iy1 - iy0 + 1) // 2
-            for qx0, qy0, qx1, qy1 in (
-                (ix0, iy0, mx, my),
-                (mx, iy0, ix1, my),
-                (ix0, my, mx, iy1),
-                (mx, my, ix1, iy1),
-            ):
-                if qx1 > qx0 and qy1 > qy0:
-                    stack.append((qx0, qy0, qx1, qy1))
-    return interior, boundary
+            for q in ((ix0, iy0, mx, my), (mx, iy0, ix1, my), (ix0, my, mx, iy1), (mx, my, ix1, iy1)):
+                if q[2] > q[0] and q[3] > q[1]:
+                    stack.append(q)
+        elif cls != ALL_OUT or outside:
+            out.append((ix0, iy0, ix1, iy1, cls))
+    return out
+
+
+def explode_blocks(blocks: DataFrame, x: str, y: str) -> DataFrame:
+    """Half-open index blocks (columns ``__ix0__, __iy0__, __ix1__,
+    __iy1__``) -> one row per cell ``(x, y)``, in the JVM; the block
+    columns are dropped."""
+    return (
+        blocks.withColumn(x, F.explode(F.sequence("__ix0__", F.col("__ix1__") - 1)))
+        .withColumn(y, F.explode(F.sequence("__iy0__", F.col("__iy1__") - 1)))
+        .drop("__ix0__", "__iy0__", "__ix1__", "__iy1__")
+    )
 
 
 def _buffer_amounts(buffer) -> tuple[float, float]:
@@ -233,12 +150,10 @@ def grid_maker(
     reference; ``tile`` is the processing-tile size in cells (defaults to a
     ~32x32-cell tile, the partition/classification unit).
 
-    ``mode`` mirrors the reference's GridMaker modes (gridding.py:95-96):
-    'prll' classifies fixed tiles; 'qtree' (gridding.py:191-255) refines
-    adaptively so only O(perimeter) cells ever see exact geometry —
-    identical output (pinned by tests). qtree requires trim=True (the
-    reference's qtree prunes disjoint blocks, so all-out cells are never
-    materialized).
+    ``mode`` mirrors the reference's GridMaker modes (gridding.py:95-96),
+    whose outputs are identical: it is validated for signature parity and
+    selects nothing — every mode runs the one quadtree plan. As in the
+    reference, 'qtree' requires trim=True.
     """
     if mode not in ("prll", "qtree", "seq"):
         raise ValueError(f"mode must be prll|qtree|seq, got {mode!r}")
@@ -253,9 +168,11 @@ def grid_maker(
         context="grid_maker",
     )
     height, width = float(cell[0]), float(cell[1])
-    polys = None
+    mask_rows = polys = None
     if mask is not None:
-        mask_rows = [r[0] for r in mask.select(geometry_col).collect()]
+        if mode == "qtree" and not trim:
+            raise ValueError("qtree mode requires trim=True (all-out cells are pruned)")
+        mask_rows = [bytes(r[0]) for r in mask.select(geometry_col).collect()]
         polys = _decode_mask(mask_rows)  # list of per-row multipolygons
         if bbox is None:
             boxes = [G.multipolygon_bbox(g) for g in polys]
@@ -274,203 +191,57 @@ def grid_maker(
     nrows, ncols = B.get_grid_shape([height, width], bbox)
     tilesize = list(tile) if tile else [32, 32]
     nytiles, nxtiles = B.get_tile_shape([height, width], tilesize, bbox)
-
     xmin, ymin = bbox[0], bbox[1]
 
-    if mode == "qtree" and polys is not None:
-        if not trim:
-            raise ValueError("qtree mode requires trim=True (all-out cells are pruned)")
-        return _grid_maker_qtree(
-            spark, polys, bbox, height, width, tilesize, nxtiles, ncols,
-            interior, emit_wkb, xypos, resolved_crs,
-        )
-
-    # --- phase A: tile classification (coarse short-circuit) ---------------
-    # small grids classify on the driver (zero job overhead, same as the
-    # reference's per-tile loop); past the threshold the identical
-    # classify_rect runs distributed over a tiles DataFrame with the
-    # broadcast mask — the driver loop is O(#tiles x #polys) and a
-    # continental 100m grid has millions of tiles
-    tile_cls: dict | None = {}
-    cls_df = None
-    if polys is not None:
-        if nxtiles * nytiles <= DRIVER_TILE_LIMIT:
-            for iy in range(nytiles):
-                for ix in range(nxtiles):
-                    txmin, tymin, txmax, tymax = B.get_tile_bbox(
-                        [iy, ix], [height, width], tilesize, bbox, crop=True
-                    )
-                    tile_cls[(ix, iy)] = classify_rect(polys, txmin, tymin, txmax, tymax)
-        else:
-            tile_cls = None
-            mask_bcast = spark.sparkContext.broadcast(_serialize_geoms(polys))
-            cls_df = _classify_tiles_distributed(
-                spark, mask_bcast, bbox, height, width, tilesize, nxtiles, nytiles
-            )
-
-    # --- distributed cell generation -----------------------------------------
-    cells = (
-        spark.range(ncols)
-        .select(F.col("id").cast("int").alias("cell_x"))
-        .crossJoin(spark.range(nrows).select(F.col("id").cast("int").alias("cell_y")))
+    # one row per processing tile, its cell block cropped to the grid
+    ntiles = nxtiles * nytiles
+    tix, tiy = F.col("id") % nxtiles, (F.col("id") / nxtiles).cast("long")
+    tiles = spark.range(
+        ntiles, numPartitions=max(1, min(ntiles, spark.sparkContext.defaultParallelism))
+    ).select(
+        (tix * tilesize[1]).alias("__ix0__"),
+        (tiy * tilesize[0]).alias("__iy0__"),
+        F.least((tix + 1) * tilesize[1], F.lit(ncols)).alias("__ix1__"),
+        F.least((tiy + 1) * tilesize[0], F.lit(nrows)).alias("__iy1__"),
     )
+    if polys is None:
+        blocks = tiles.withColumn("__cls__", F.lit(ALL_IN))
+    else:
+        bcast = spark.sparkContext.broadcast(mask_rows)
+        origin, lattice = (xmin, ymin), (height, width)
+
+        def _classify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            geoms = _decode_mask(bcast.value)
+            for batch in batches:
+                rows = [
+                    b
+                    for blk in batch.itertuples(index=False)
+                    for b in classify_blocks(geoms, origin, lattice, blk, outside=not trim)
+                ]
+                yield pd.DataFrame(
+                    rows, columns=["__ix0__", "__iy0__", "__ix1__", "__iy1__", "__cls__"]
+                )
+
+        blocks = tiles.mapInPandas(
+            _classify, "__ix0__ long, __iy0__ long, __ix1__ long, __iy1__ long, __cls__ int"
+        )
+        if trim and interior:
+            blocks = blocks.filter(F.col("__cls__") == ALL_IN)
+
+    cells = explode_blocks(blocks, "cell_x", "cell_y")
     tile_ix = (F.col("cell_x") / tilesize[1]).cast("int")
     tile_iy = (F.col("cell_y") / tilesize[0]).cast("int")
-    cells = cells.select(
-        "cell_x",
-        "cell_y",
+    out = cells.select(
+        F.col("cell_x").cast("int").alias("cell_x"),
+        F.col("cell_y").cast("int").alias("cell_y"),
         (F.lit(xmin) + F.col("cell_x") * F.lit(width)).alias("__x__"),
         (F.lit(ymin) + F.col("cell_y") * F.lit(height)).alias("__y__"),
         (tile_ix + tile_iy * F.lit(nxtiles)).alias("__tile__"),
-        tile_ix.alias("_tix"),
-        tile_iy.alias("_tiy"),
-        (F.col("cell_x").cast("long") + F.col("cell_y").cast("long") * ncols).alias("cell_id"),
+        (F.col("cell_x") + F.col("cell_y") * ncols).alias("cell_id"),
+        (F.col("__cls__") > ALL_OUT).alias("__intersects__"),
+        (F.col("__cls__") == ALL_IN).alias("__within__"),
     )
-
-    if polys is None:
-        out = cells.withColumns(
-            {"__intersects__": F.lit(True), "__within__": F.lit(True)}
-        )
-        return _finalize(out, height, width, emit_wkb, xypos, resolved_crs)
-
-    # map tile class in. Driver path: a tiny literal frame, force the
-    # broadcast. Distributed path: the non-ALL_OUT tile set can itself be
-    # millions of rows (the very case the path exists for) — let AQE pick
-    # the join strategy from its measured size.
-    if cls_df is None:
-        cls_df = spark.createDataFrame(
-            [(ix, iy, c) for (ix, iy), c in tile_cls.items()], "_tix int, _tiy int, _cls int"
-        )
-        cls_df = F.broadcast(cls_df)
-    cells = cells.join(cls_df, ["_tix", "_tiy"], "left").fillna(
-        {"_cls": ALL_OUT}
-    )
-    if trim:
-        cells = cells.filter(F.col("_cls") > ALL_OUT)
-
-    interior_cells = cells.filter(F.col("_cls") != BOUNDARY).withColumns(
-        {
-            "__intersects__": F.col("_cls") == ALL_IN,
-            "__within__": F.col("_cls") == ALL_IN,
-        }
-    )
-
-    # --- phase B: exact per-cell classification, boundary tiles only --------
-    bcast = spark.sparkContext.broadcast(_serialize_geoms(polys))
-    from pygridmap_spark.util import schema_with
-
-    out_schema = schema_with(cells, "__intersects__ boolean", "__within__ boolean")
-
-    def _exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        geoms = _deserialize_geoms(bcast.value)
-        for batch in batches:
-            if not len(batch):
-                continue
-            x0 = batch["__x__"].to_numpy(dtype=np.float64)
-            y0 = batch["__y__"].to_numpy(dtype=np.float64)
-            inter, within = _exact_flags(geoms, x0, y0, width, height)
-            batch = batch.copy()
-            batch["__intersects__"] = inter
-            batch["__within__"] = within
-            yield batch
-
-    boundary_cells = cells.filter(F.col("_cls") == BOUNDARY).mapInPandas(
-        _exact, out_schema
-    )
-    out = interior_cells.unionByName(boundary_cells)
-    if trim:
-        out = out.filter(F.col("__within__") if interior else F.col("__intersects__"))
     return _finalize(out, height, width, emit_wkb, xypos, resolved_crs)
-
-
-def _grid_maker_qtree(
-    spark: SparkSession,
-    polys,
-    bbox,
-    height: float,
-    width: float,
-    tilesize,
-    nxtiles: int,
-    ncols: int,
-    interior: bool,
-    emit_wkb: bool,
-    xypos: str = "LLc",
-    crs: str | None = None,
-) -> DataFrame:
-    """qtree-mode cell production: interior blocks expand to flagged cells
-    with zero geometry work; boundary candidate cells run the exact UDF."""
-    xmin, ymin = bbox[0], bbox[1]
-    interior_blocks, boundary_cells = qtree_classify(polys, list(bbox), [height, width])
-
-    def cell_cols(df: DataFrame) -> DataFrame:
-        tile_ix = (F.col("cell_x") / tilesize[1]).cast("int")
-        tile_iy = (F.col("cell_y") / tilesize[0]).cast("int")
-        return df.select(
-            "cell_x",
-            "cell_y",
-            (F.lit(xmin) + F.col("cell_x") * F.lit(width)).alias("__x__"),
-            (F.lit(ymin) + F.col("cell_y") * F.lit(height)).alias("__y__"),
-            (tile_ix + tile_iy * F.lit(nxtiles)).alias("__tile__"),
-            (F.col("cell_x").cast("long") + F.col("cell_y").cast("long") * ncols).alias("cell_id"),
-            "__intersects__",
-            "__within__",
-        )
-
-    # interior blocks -> cells (distributed explode; blocks are few)
-    if interior_blocks:
-        blocks = spark.createDataFrame(interior_blocks, "x0 int, y0 int, x1 int, y1 int")
-        inter_cells = (
-            blocks.withColumn("cell_x", F.explode(F.sequence("x0", F.col("x1") - 1)))
-            .withColumn("cell_y", F.explode(F.sequence("y0", F.col("y1") - 1)))
-            .select(
-                "cell_x",
-                "cell_y",
-                F.lit(True).alias("__intersects__"),
-                F.lit(True).alias("__within__"),
-            )
-        )
-        inter_cells = cell_cols(inter_cells)
-    else:
-        inter_cells = None
-
-    # boundary candidates -> exact flags via the Arrow UDF
-    bcast = spark.sparkContext.broadcast(_serialize_geoms(polys))
-
-    def _exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        geoms = _deserialize_geoms(bcast.value)
-        for batch in batches:
-            if not len(batch):
-                continue
-            x0 = xmin + batch["cell_x"].to_numpy() * width
-            y0 = ymin + batch["cell_y"].to_numpy() * height
-            inter, within = _exact_flags(geoms, x0, y0, width, height)
-            out = batch.copy()
-            out["__intersects__"] = inter
-            out["__within__"] = within
-            yield out
-
-    if boundary_cells:
-        cand = spark.createDataFrame(boundary_cells, "cell_x int, cell_y int")
-        bound_cells = cell_cols(
-            cand.mapInPandas(
-                _exact, "cell_x int, cell_y int, __intersects__ boolean, __within__ boolean"
-            )
-        )
-    else:
-        bound_cells = None
-
-    parts = [p for p in (inter_cells, bound_cells) if p is not None]
-    if not parts:
-        # mask disjoint from bbox: empty grid with the full output schema
-        empty = spark.createDataFrame(
-            [], "cell_x int, cell_y int, __intersects__ boolean, __within__ boolean"
-        )
-        return _finalize(cell_cols(empty), height, width, emit_wkb, xypos, crs)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    out = out.filter(F.col("__within__") if interior else F.col("__intersects__"))
-    return _finalize(out, height, width, emit_wkb, xypos, crs)
 
 
 def sort_grid(df: DataFrame, sort: str = "rc", asc=True) -> DataFrame:
@@ -499,7 +270,7 @@ def _finalize(
     xypos: str = "LLc",
     crs: str | None = None,
 ) -> DataFrame:
-    df = df.drop("_tix", "_tiy", "_cls").withColumns(
+    df = df.withColumns(
         {
             "xmax": F.col("__x__") + F.lit(width),
             "ymax": F.col("__y__") + F.lit(height),

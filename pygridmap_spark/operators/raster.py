@@ -175,13 +175,13 @@ def zonal_stats(
     geometry_col: str = "geometry",
     poly_key: str = "poly_id",
     z: int = 7,
-    distributed: bool = False,
 ) -> DataFrame:
     """Per-polygon band statistics (count/sum/mean/min/max) — the classic
     raster->vector zonal aggregation. Cell membership is by CELL CENTER
-    (standard zonal semantics): pixel centers run through the two-phase
-    polygon PIP join (interior cover cells assign with zero geometry work,
-    boundary pixels get the exact ray cast), then one groupBy(poly).
+    (standard zonal semantics): pixel centers run through
+    ``spatialjoin.polygon_pip_join`` (interior cover cells assign with zero
+    geometry work, boundary pixels get the exact ray cast; no polygon
+    collect), then one groupBy(poly).
     Nodata pixels (null band) are excluded from the stats per band.
 
     ``height`` converts (col, row) to coords when the raster doesn't
@@ -191,9 +191,9 @@ def zonal_stats(
     (min positive spacing of distinct x values — one tiny width-sized agg)
     instead of silently assuming 1.0, which would mis-offset pixel centers
     and flip membership for boundary pixels of any non-unit raster.
-    Coordinates must lie within the PIP index's world box
-    ([-180, 180] x [-90, 90] at the shared cell formula) — the same
-    constraint as every polygon_pip_join input."""
+    ``z`` is the PIP join's cover-cell zoom (360/2^z x 180/2^z coordinate
+    units, anchored at (-180, -90)); any finite coordinates join exactly,
+    the zoom only sets how many pixels need the ray cast."""
     from pygridmap_spark.operators import spatialjoin as SJ
 
     cells = raster
@@ -239,19 +239,11 @@ def zonal_stats(
             "_cy": F.col("y") + F.lit(resolution / 2.0),
         }
     )
-    # bands are POINT-side columns: they flow through the PIP join as-is.
-    # distributed=True uses the no-collect PIP variant for polygon layers
-    # too large to broadcast (identical output, pinned by the PIP tests).
-    if distributed:
-        joined = SJ.polygon_pip_join_distributed(
-            centers, polygons, z=z, lon="_cx", lat="_cy",
-            geometry_col=geometry_col, poly_key=poly_key,
-        )
-    else:
-        joined = SJ.polygon_pip_join(
-            centers.sparkSession, centers, polygons, z=z, lon="_cx", lat="_cy",
-            geometry_col=geometry_col, poly_key=poly_key,
-        )
+    # bands are POINT-side columns: they flow through the PIP join as-is
+    joined = SJ.polygon_pip_join(
+        centers.sparkSession, centers, polygons, z=z, lon="_cx", lat="_cy",
+        geometry_col=geometry_col, poly_key=poly_key,
+    )
     aggs = []
     for b in bands:
         aggs += [

@@ -3,15 +3,17 @@
 
 Design principle: **the cell grid is the spatial index**. Regions are
 expanded to the integer cells their bboxes cover (JVM `sequence`/`explode`,
-distributed); points carry the same cell key; the join is a broadcast hash
-equi-join on (cell_ix, cell_iy) — never a nested-loop scan. The exact
-phase is then:
+distributed); points carry the same unclamped cell key; the join is a
+broadcast hash equi-join on (cell_ix, cell_iy) — never a nested-loop scan.
+The exact phase is then:
 
 - rects: a residual range predicate (pure Catalyst, codegen),
-- WKB polygons: two-phase — cover cells classified ALL_IN / BOUNDARY
-  driver-side by exact clip area (the reference's coarse short-circuit,
-  gridding.py:146-151); only points in BOUNDARY cells run the vectorized
-  numpy ray-cast (gridding.py:180-182's J2), via one Arrow-batched UDF.
+- WKB polygons: one Arrow pass per polygon row runs the shared quadtree
+  classifier (``gridding.classify_blocks``, exact clip areas — the
+  reference's coarse short-circuit, gridding.py:146-151) over its cover
+  range; interior blocks assign their points with zero geometry work, and
+  only points in boundary cells run the vectorized numpy ray cast
+  (gridding.py:180-182's J2), their polygon's WKB joined back by id.
 
 At 10^12 pages the points side never shuffles: the region side is a
 dimension table (countries/NUTS ~10^3-10^5 rows) whose cover-cell explosion
@@ -30,36 +32,21 @@ from pyspark.sql import functions as F
 
 from pygridmap_spark.core import geometry as G
 from pygridmap_spark.core import wkb
-from pygridmap_spark.operators.gridding import ALL_IN, ALL_OUT, BOUNDARY, classify_rect
+from pygridmap_spark.operators.gridding import ALL_IN, BOUNDARY, classify_blocks, explode_blocks
 
 
-def _point_cell_exprs(lon: str, lat: str, z: int):
-    """Clamped point cell indices — delegates to the shared cellindex
-    formula so lat=90 / lon=180 map into the top cell instead of an
-    out-of-range index that can never match a cover cell."""
-    from pygridmap_spark.functions import cellindex
-
-    return cellindex.lonlat_to_cell_xy(F.col(lon), F.col(lat), z)
-
-
-def _cover_cell_range(bxmin, bymin, bxmax, bymax, z: int):
-    """Integer cover-cell ranges of a bbox at zoom z (clamped). One shared
-    implementation for both polygon-PIP variants — the two must stay
-    byte-identical for their pinned output parity."""
+def _cover_block(bxmin, bymin, bxmax, bymax, z: int):
+    """Half-open integer cover block ``(ix0, iy0, ix1, iy1)`` of a bbox on
+    the zoom-z lattice — unclamped, the same key points get in
+    :func:`polygon_pip_join`, so coordinates outside the world box match
+    only the polygons that reach them."""
     n = 1 << z
-    clamp = lambda v: min(max(v, 0), n - 1)  # noqa: E731
-    lo_x = clamp(int(math.floor((bxmin + 180.0) / 360.0 * n)))
-    hi_x = clamp(int(math.floor((bxmax - 1e-12 + 180.0) / 360.0 * n)))
-    lo_y = clamp(int(math.floor((bymin + 90.0) / 180.0 * n)))
-    hi_y = clamp(int(math.floor((bymax - 1e-12 + 90.0) / 180.0 * n)))
-    return lo_x, hi_x, lo_y, hi_y
-
-
-def _cell_rect(cix: int, ciy: int, z: int):
-    n = 1 << z
-    cxmin = -180.0 + cix * 360.0 / n
-    cymin = -90.0 + ciy * 180.0 / n
-    return cxmin, cymin, cxmin + 360.0 / n, cymin + 180.0 / n
+    return (
+        math.floor((bxmin + 180.0) / 360.0 * n),
+        math.floor((bymin + 90.0) / 180.0 * n),
+        math.floor((bxmax - 1e-12 + 180.0) / 360.0 * n) + 1,
+        math.floor((bymax - 1e-12 + 90.0) / 180.0 * n) + 1,
+    )
 
 
 def rect_pip_join(
@@ -125,135 +112,61 @@ def polygon_pip_join(
     lat: str = "lat",
     geometry_col: str = "geometry",
     poly_key: str = "poly_id",
-    keep_cols: tuple = (),
 ) -> DataFrame:
-    """Points x WKB polygon layer (two-phase exact PIP).
+    """Points x WKB polygon layer (inner join, exact even-odd PIP).
 
-    Driver classifies each polygon's cover cells once (clip-area exact);
-    ALL_IN cells assign their points with zero geometry work, BOUNDARY
-    cells run the vectorized even-odd ray cast on candidate points only.
+    1. one Arrow pass over the polygons runs ``classify_blocks`` over each
+       row's cover block and emits (block, poly, class) rows — the WKB
+       does not ride the cover-cell replication,
+    2. blocks explode to cells in the JVM and broadcast-join the points on
+       the unclamped cell key (NULL/NaN coordinates get no key and drop),
+    3. interior cells pass through with zero geometry work; boundary
+       candidates broadcast-join the raw WKB back by polygon id and run
+       the vectorized ray cast, decoding once per polygon per batch.
+       The points side never shuffles.
+
+    Lazy: no job runs before the caller's action. ``spark`` is unused and
+    kept for signature compatibility.
     """
-    n = 1 << z
-    rows = polygons.select(poly_key, geometry_col, *keep_cols).collect()
-    geoms: dict[int, list] = {}
-    cover_rows = []
-    for r in rows:
-        mp = wkb.decode_multipolygon(bytes(r[geometry_col]))
-        if not mp or not any(len(p) for p in mp):
-            continue  # empty geometry: matches nothing
-        pid = r[poly_key]
-        geoms[pid] = mp
-        lo_x, hi_x, lo_y, hi_y = _cover_cell_range(*G.multipolygon_bbox(mp), z)
-        for cix in range(lo_x, hi_x + 1):
-            for ciy in range(lo_y, hi_y + 1):
-                cls = classify_rect(mp, *_cell_rect(cix, ciy, z))
-                if cls != ALL_OUT:
-                    cover_rows.append((cix, ciy, pid, cls))
-    key_type = dict(polygons.dtypes)[poly_key]
-    cover = spark.createDataFrame(
-        cover_rows, f"__cix__ long, __ciy__ long, {poly_key} {key_type}, __cls__ int"
-    )
-    cix, ciy = _point_cell_exprs(lon, lat, z)
-    pts = points.withColumns({"__cix__": cix, "__ciy__": ciy})
-    cand = pts.join(F.broadcast(cover), ["__cix__", "__ciy__"])
-    interior = cand.filter(F.col("__cls__") == ALL_IN)
-
-    boundary = cand.filter(F.col("__cls__") == BOUNDARY)
-    bcast = spark.sparkContext.broadcast(
-        {pid: [[np.asarray(ring).tolist() for ring in poly] for poly in mp] for pid, mp in geoms.items()}
-    )
-    schema = boundary.schema
-
-    def _exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[int, list] = {}
-
-        def get(pid):
-            if pid not in cache:
-                cache[pid] = [
-                    [np.asarray(r, dtype=np.float64) for r in poly]
-                    for poly in bcast.value[pid]
-                ]
-            return cache[pid]
-
-        for batch in batches:
-            if not len(batch):
-                continue
-            keep = np.zeros(len(batch), dtype=bool)
-            px = batch[lon].to_numpy(dtype=np.float64)
-            py = batch[lat].to_numpy(dtype=np.float64)
-            # group by polygon id -> one vectorized ray-cast per polygon
-            pids = batch[poly_key].to_numpy()
-            for pid in np.unique(pids):
-                sel = pids == pid
-                keep[sel] = G.points_in_multipolygon(px[sel], py[sel], get(pid))
-            yield batch[keep]
-
-    exact = boundary.mapInPandas(_exact, schema)
-    out = interior.unionByName(exact).drop("__cix__", "__ciy__", "__cls__")
-    if keep_cols:
-        # polygon attribute pass-through (joined back by key — the cover
-        # table stays narrow for the broadcast)
-        attrs = polygons.select(poly_key, *keep_cols)
-        out = out.join(F.broadcast(attrs), poly_key, "left")
-    return out
-
-
-def polygon_pip_join_distributed(
-    points: DataFrame,
-    polygons: DataFrame,
-    z: int = 7,
-    lon: str = "lon",
-    lat: str = "lat",
-    geometry_col: str = "geometry",
-    poly_key: str = "poly_id",
-) -> DataFrame:
-    """Points x WKB polygons when the polygon layer itself is too large to
-    collect (e.g. parcel-level layers). Fully distributed two-phase plan:
-
-    1. one Arrow pass over polygons emits (cover cell, class) rows — the
-       classification clip runs where the polygon row lives; the WKB does
-       NOT ride the cover-cell replication,
-    2. shuffled equi-join with points on the cell key (AQE skew-splits the
-       cover cells of continent-sized polygons),
-    3. ALL_IN cells pass through with zero geometry work; BOUNDARY
-       candidates join the raw WKB back by polygon id (each geometry ships
-       once through that exchange) and run the vectorized ray cast,
-       decoding once per polygon per batch.
-
-    Same output as :func:`polygon_pip_join` (pinned by tests).
-    """
-    n = 1 << z
+    n = float(1 << z)
+    lattice = (180.0 / n, 360.0 / n)
 
     def _cover(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
-            out_rows = []
-            for _, row in batch.iterrows():
-                mp = wkb.decode_multipolygon(bytes(row[geometry_col]))
+            rows = []
+            for pid, buf in zip(batch[poly_key], batch[geometry_col]):
+                mp = wkb.decode_multipolygon(bytes(buf))
                 if not mp or not any(len(p) for p in mp):
                     continue  # empty geometry: matches nothing
-                lo_x, hi_x, lo_y, hi_y = _cover_cell_range(*G.multipolygon_bbox(mp), z)
-                for cix in range(lo_x, hi_x + 1):
-                    for ciy in range(lo_y, hi_y + 1):
-                        cls = classify_rect(mp, *_cell_rect(cix, ciy, z))
-                        if cls != ALL_OUT:
-                            out_rows.append((cix, ciy, row[poly_key], cls))
-            if out_rows:
-                yield pd.DataFrame(
-                    out_rows, columns=["__cix__", "__ciy__", poly_key, "__cls__"]
-                )
+                block = _cover_block(*G.multipolygon_bbox(mp), z)
+                rows += [(*b, pid) for b in classify_blocks([mp], (-180.0, -90.0), lattice, block)]
+            yield pd.DataFrame(
+                rows, columns=["__ix0__", "__iy0__", "__ix1__", "__iy1__", "__cls__", poly_key]
+            )
 
     key_type = dict(polygons.dtypes)[poly_key]
-    cover = polygons.select(poly_key, geometry_col).mapInPandas(
-        _cover, f"__cix__ long, __ciy__ long, {poly_key} {key_type}, __cls__ int"
+    blocks = polygons.select(poly_key, geometry_col).mapInPandas(
+        _cover,
+        f"__ix0__ long, __iy0__ long, __ix1__ long, __iy1__ long, __cls__ int, {poly_key} {key_type}",
     )
-    cix, ciy = _point_cell_exprs(lon, lat, z)
-    pts = points.withColumns({"__cix__": cix, "__ciy__": ciy})
-    cand = pts.join(cover, ["__cix__", "__ciy__"])
+    cover = explode_blocks(blocks, "__cix__", "__ciy__")
+    # NaN -> NULL, so NULL/NaN points get no key and drop from the join.
+    # A plain null-intolerant key keeps the join's inferred not-null filter
+    # a pair of null checks (a CASE WHEN key re-evaluates the coordinate
+    # expressions per branch — a per-row sha256 when they come from urls)
+    x, y = (F.nanvl(F.col(c), F.lit(None).cast("double")) for c in (lon, lat))
+    pts = points.withColumns(
+        {
+            "__cix__": F.floor((x + 180.0) / 360.0 * n),
+            "__ciy__": F.floor((y + 90.0) / 180.0 * n),
+        }
+    )
+    cand = pts.join(F.broadcast(cover), ["__cix__", "__ciy__"])
     interior = cand.filter(F.col("__cls__") == ALL_IN)
     # WKB fetched by id for BOUNDARY candidates only — each geometry ships
-    # once through this exchange instead of once per cover cell above
+    # once through this broadcast instead of once per cover cell above
     boundary = cand.filter(F.col("__cls__") == BOUNDARY).join(
-        polygons.select(poly_key, F.col(geometry_col).alias("__wkb__")), poly_key
+        F.broadcast(polygons.select(poly_key, F.col(geometry_col).alias("__wkb__"))), poly_key
     )
     schema = interior.schema
 

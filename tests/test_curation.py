@@ -70,19 +70,6 @@ def test_contamination_benchmark_is_broadcast(spark, docs):
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
-def test_contamination_distributed_twin_matches_broadcast(spark, docs):
-    bench = spark.createDataFrame([(1, "quick brown fox runs")], "q long, text string")
-    a = sorted(map(tuple, CU.contamination_stats(docs, bench, n=3).collect()))
-    b = sorted(map(tuple, CU.contamination_stats(docs, bench, n=3, distributed=True).collect()))
-    assert a == b
-    plan = (
-        CU.contamination_stats(docs, bench, n=3, distributed=True)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    # the distributed twin must NOT broadcast the benchmark side
-    assert "xxhash64" in plan
-
-
 def test_decontaminate_empty_benchmark_keeps_all(spark, docs):
     bench = spark.createDataFrame([], "q long, text string")
     kept = sorted(r.doc_id for r in CU.decontaminate(docs, bench, n=3).collect())

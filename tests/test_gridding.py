@@ -1,25 +1,81 @@
-"""M2: GridMaker — cell generation, two-phase mask classification, trim /
-interior semantics, qtree parity (SURVEY §2.7, reference gridding.py)."""
+"""M2: GridMaker — cell generation, quadtree mask classification, trim /
+interior semantics, every mode against a per-cell numpy clip (SURVEY §2.7,
+reference gridding.py)."""
 
 import math
+import random
 import signal
+from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from pygridmap_spark.core import bboxes as B
 from pygridmap_spark.core import geometry as G
 from pygridmap_spark.core import wkb
 from pygridmap_spark.operators import gridding as GR
 from pygridmap_spark.sources import polygons as PG
 
 BBOX = (0.0, 0.0, 100_000.0, 100_000.0)
+# classify_blocks class -> the (__intersects__, __within__) flags it stands for
+FLAGS = {GR.ALL_IN: (True, True), GR.BOUNDARY: (True, False), GR.ALL_OUT: (False, False)}
 
 
 def rect_mask(spark, x0, y0, x1, y1):
     pdf = pd.DataFrame({"poly_id": [0], "geometry": [wkb.encode_box(x0, y0, x1, y1)]})
     return spark.createDataFrame(pdf)
+
+
+def wkb_mask(spark, wkbs):
+    return spark.createDataFrame(list(enumerate(wkbs)), "poly_id long, geometry binary")
+
+
+def cellwise(geoms, origin, cell, nx, ny):
+    """Brute-force reference: {(ix, iy): (intersects, within)} from one
+    numpy clip per cell and mask row, OR-reduced per row (gridding.py:180-182)."""
+    (x0, y0), (h, w) = origin, cell
+    area = h * w
+    out = {}
+    for ix in range(nx):
+        for iy in range(ny):
+            a = [
+                G.multipolygon_clip_area(g, x0 + ix * w, y0 + iy * h, x0 + (ix + 1) * w, y0 + (iy + 1) * h)
+                for g in geoms
+                if any(len(p) for p in g)
+            ]
+            out[(ix, iy)] = (any(v > 1e-9 * area for v in a), any(v >= area * (1 - 1e-9) for v in a))
+    return out
+
+
+def grid_flags(df):
+    return {(r["cell_x"], r["cell_y"]): (r["__intersects__"], r["__within__"]) for r in df.collect()}
+
+
+def expand(blocks):
+    """classify_blocks output -> {(ix, iy): cls}, asserting no cell twice."""
+    out = {}
+    for ix0, iy0, ix1, iy1, cls in blocks:
+        for ix in range(ix0, ix1):
+            for iy in range(iy0, iy1):
+                assert (ix, iy) not in out
+                out[(ix, iy)] = cls
+    return out
+
+
+@contextmanager
+def alarm(seconds, what):
+    def _timeout(*_):
+        raise TimeoutError(f"{what} did not terminate")
+
+    old = signal.signal(signal.SIGALRM, _timeout)
+    signal.alarm(seconds)
+    try:
+        yield
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, old)
 
 
 def test_grid_maker_no_mask_counts(spark):
@@ -81,40 +137,19 @@ def test_grid_maker_polygon_mask_matches_numpy(spark):
 
 
 def test_qtree_classify_parity_with_cellwise(spark):
-    """Quadtree refinement emits exactly the cells the flat classification
-    does (the reference's qtree vs prll mode equivalence)."""
+    """The quadtree classifier decides every cell of the block exactly once
+    and agrees with the per-cell numpy clip: ALL_IN = within, BOUNDARY =
+    intersects only, ALL_OUT (when asked for) = neither."""
     polys_df = PG.synthetic_polygons(spark, n=2, bbox=BBOX, seed=9)
     geoms = [wkb.decode_multipolygon(bytes(r["geometry"])) for r in polys_df.collect()]
-    cell = (12_500.0, 12_500.0)  # 8x8 grid, power-of-2 friendly
-    interior, boundary = GR.qtree_classify(geoms, list(BBOX), cell)
-    # expand interior index blocks into the cells they cover
-    qtree_cells = {
-        (ix * cell[1], iy * cell[0])
-        for ix0, iy0, ix1, iy1 in interior
-        for ix in range(ix0, ix1)
-        for iy in range(iy0, iy1)
-    }
-    boundary_cells = {(ix * cell[1], iy * cell[0]) for ix, iy in boundary}
-    # flat (prll-style) classification of every cell
-    flat_inter, flat_within = set(), set()
-    cell_area = cell[0] * cell[1]
-    for ix in range(8):
-        for iy in range(8):
-            x0, y0 = ix * cell[1], iy * cell[0]
-            areas = [
-                G.multipolygon_clip_area(g, x0, y0, x0 + cell[1], y0 + cell[0])
-                for g in geoms
-            ]
-            if any(a > 1e-9 * cell_area for a in areas):
-                flat_inter.add((x0, y0))
-            if any(a >= cell_area * (1 - 1e-9) for a in areas):
-                flat_within.add((x0, y0))
-    # every fully-within cell is in an interior block; every other
-    # intersecting cell is among boundary candidates
-    assert flat_within == qtree_cells
-    assert flat_inter - flat_within <= boundary_cells
-    # boundary candidates never include fully-within cells
-    assert not (boundary_cells & qtree_cells)
+    cell = (12_500.0, 12_500.0)  # 8x8 grid
+    got = expand(GR.classify_blocks(geoms, (0.0, 0.0), cell, (0, 0, 8, 8), outside=True))
+    want = cellwise(geoms, (0.0, 0.0), cell, 8, 8)
+    assert {k: FLAGS[c] for k, c in got.items()} == want
+    assert set(got.values()) == {GR.ALL_IN, GR.BOUNDARY, GR.ALL_OUT}
+    # without outside=True, exterior blocks are not returned
+    inside = expand(GR.classify_blocks(geoms, (0.0, 0.0), cell, (0, 0, 8, 8)))
+    assert inside == {k: c for k, c in got.items() if c != GR.ALL_OUT}
 
 
 def test_grid_maker_emit_wkb(spark):
@@ -127,47 +162,125 @@ def test_grid_maker_emit_wkb(spark):
 
 
 def test_qtree_mode_matches_prll_mode(spark):
-    """mode='qtree' produces exactly the prll-mode trimmed grid
-    (the reference's mode-equivalence, gridding.py:95-96, 191-255)."""
+    """Every mode emits the per-cell numpy clip's trimmed grid (the
+    reference's mode equivalence, gridding.py:95-96, 191-255), with and
+    without ``interior``."""
     polys_df = PG.synthetic_polygons(spark, n=3, bbox=BBOX, seed=5)
-    kw = dict(mask=polys_df, cell=(6_250.0, 6_250.0), bbox=BBOX, trim=True)
-    prll = GR.grid_maker(spark, mode="prll", **kw)
-    qtree = GR.grid_maker(spark, mode="qtree", **kw)
-    key = ["cell_x", "cell_y", "__intersects__", "__within__"]
-    p = {tuple(r[k] for k in key) for r in prll.collect()}
-    q = {tuple(r[k] for k in key) for r in qtree.collect()}
-    assert p == q and len(p) > 0
-    # interior-only variant too
-    p2 = {tuple(r[k] for k in key) for r in GR.grid_maker(spark, mode="prll", interior=True, **kw).collect()}
-    q2 = {tuple(r[k] for k in key) for r in GR.grid_maker(spark, mode="qtree", interior=True, **kw).collect()}
-    assert p2 == q2
+    geoms = [wkb.decode_multipolygon(bytes(r["geometry"])) for r in polys_df.collect()]
+    cell = (6_250.0, 6_250.0)  # 16x16 grid
+    want = cellwise(geoms, (0.0, 0.0), cell, 16, 16)
+    kw = dict(mask=polys_df, cell=cell, bbox=BBOX, trim=True)
+    for mode in ("prll", "qtree", "seq"):
+        got = grid_flags(GR.grid_maker(spark, mode=mode, **kw))
+        assert got == {k: v for k, v in want.items() if v[0]} and got
+        got = grid_flags(GR.grid_maker(spark, mode=mode, interior=True, **kw))
+        assert got == {k: v for k, v in want.items() if v[1]} and got
 
 
 def test_qtree_terminates_on_float_origin(spark):
     """A mask whose aligned bbox is 2 cells tall plus float error
     ((2.063 + 2.0) - 2.063 > 2.0): splitting by coordinates put the
     midline on the block edge and re-queued the block forever. Index
-    blocks always shrink; the output equals mode='prll'."""
+    blocks always shrink; every mode gives the same two boundary cells."""
     tri = wkb.encode_polygon([[(0.0, 2.063), (1.0, 2.063), (0.0, 4.063)]])
-    mask = spark.createDataFrame([(0, tri)], "poly_id long, geometry binary")
-    geoms = [wkb.decode_multipolygon(tri)]
-
-    def _timeout(*_):
-        raise TimeoutError("qtree_classify did not terminate")
-
-    old = signal.signal(signal.SIGALRM, _timeout)
-    signal.alarm(10)
-    try:
-        interior, boundary = GR.qtree_classify(geoms, [0.0, 2.063, 1.0, 2.063 + 2.0], (1.0, 1.0))
-    finally:
-        signal.alarm(0)
-        signal.signal(signal.SIGALRM, old)
-    assert interior == [] and sorted(boundary) == [(0, 0), (0, 1)]
+    mask = wkb_mask(spark, [tri])
+    with alarm(10, "classify_blocks"):
+        blocks = GR.classify_blocks([wkb.decode_multipolygon(tri)], (0.0, 2.063), (1.0, 1.0), (0, 0, 1, 2))
+    assert sorted(blocks) == [(0, 0, 1, 1, GR.BOUNDARY), (0, 1, 1, 2, GR.BOUNDARY)]
     key = ["cell_x", "cell_y", "__intersects__", "__within__"]
-    kw = dict(mask=mask, cell=(1.0, 1.0))
-    q = {tuple(r[k] for k in key) for r in GR.grid_maker(spark, mode="qtree", **kw).collect()}
-    p = {tuple(r[k] for k in key) for r in GR.grid_maker(spark, mode="prll", **kw).collect()}
-    assert q == p == {(0, 0, True, False), (0, 1, True, False)}
+    for mode in ("qtree", "prll"):
+        got = {tuple(r[k] for k in key) for r in GR.grid_maker(spark, mask=mask, cell=(1.0, 1.0), mode=mode).collect()}
+        assert got == {(0, 0, True, False), (0, 1, True, False)}
+
+
+def test_sub_tolerance_clip_is_per_cell(spark):
+    """The 1e-9 clip tolerance is a share of one CELL, not of the block
+    being classified: a 16x16 block used to call a 1e-7 triangle "outside"
+    (1e-7 < 1e-9 * 256) and a 1e-7 pinhole "within", so both modes dropped
+    the triangle's cell and kept the pinholed cell in the interior grid."""
+    kw = dict(cell=(1.0, 1.0), bbox=(0.0, 0.0, 16.0, 16.0))
+    key = ["cell_x", "cell_y", "__intersects__", "__within__"]
+    speck = wkb.encode_polygon([[(5.2, 5.2), (5.2005, 5.2), (5.2, 5.2004)]])  # area 1e-7
+    holed = wkb.encode_polygon(
+        [
+            [(0.0, 0.0), (16.0, 0.0), (16.0, 16.0), (0.0, 16.0)],
+            [(9.5, 9.5), (9.5, 9.5004), (9.5005, 9.5)],
+        ]
+    )
+    for mode in ("prll", "qtree"):
+        got = GR.grid_maker(spark, mask=wkb_mask(spark, [speck]), mode=mode, **kw)
+        assert [tuple(r[k] for k in key) for r in got.collect()] == [(5, 5, True, False)]
+        got = grid_flags(GR.grid_maker(spark, mask=wkb_mask(spark, [holed]), mode=mode, interior=True, **kw))
+        assert len(got) == 255 and (9, 9) not in got
+
+
+def test_classifier_differential_seeded(spark):
+    """Seeded differential check of the shared classifier, every
+    grid_maker trim variant and polygon_pip_join against brute-force
+    references: random star masks with holes, multipolygons, overlapping
+    rows, empty rows, float origins and cell sizes, points outside the
+    world box, on its edges and NaN."""
+    from pygridmap_spark.operators import spatialjoin as SJ
+
+    rng = random.Random(20261017)
+
+    def star(cx, cy, r):
+        k = rng.randint(5, 11)
+        pts = [
+            (cx + r * rng.uniform(0.3, 1.0) * math.cos(2 * math.pi * i / k), cy + r * rng.uniform(0.3, 1.0) * math.sin(2 * math.pi * i / k))
+            for i in range(k)
+        ]
+        return pts
+
+    def layer(x0, y0, x1, y1):
+        r = 0.3 * min(x1 - x0, y1 - y0)
+        at = lambda: (rng.uniform(x0, x1), rng.uniform(y0, y1))  # noqa: E731
+        cx, cy = at()
+        holed = [star(cx, cy, r), [(cx - 0.1 * r, cy - 0.1 * r), (cx - 0.1 * r, cy + 0.1 * r), (cx + 0.1 * r, cy)]]
+        return [
+            wkb.encode_polygon(holed),
+            wkb.encode_multipolygon([[star(*at(), 0.5 * r)], [star(*at(), 0.4 * r)]]),
+            wkb.encode_polygon([star(cx + 0.2 * r, cy, r)]),  # overlaps the holed row
+            wkb.encode_multipolygon([]),  # empty row
+        ]
+
+    with alarm(300, "differential check"):
+        for _ in range(3):
+            h, w = rng.uniform(0.5, 2.0), rng.uniform(0.5, 2.0)
+            x0, y0 = rng.uniform(-50.0, 50.0), rng.uniform(-50.0, 50.0)
+            nx, ny = rng.randint(9, 21), rng.randint(9, 21)
+            bbox = (x0, y0, x0 + nx * w, y0 + ny * h)
+            # the grid shape (not under test here) is grid_maker's own
+            ny, nx = B.get_grid_shape((h, w), B.align_bbox((h, w), bbox))
+            rows = layer(*bbox)
+            geoms = [wkb.decode_multipolygon(b) for b in rows]
+            want = cellwise(geoms, (x0, y0), (h, w), nx, ny)
+            blocks = GR.classify_blocks(geoms, (x0, y0), (h, w), (0, 0, nx, ny), outside=True)
+            assert {k: FLAGS[c] for k, c in expand(blocks).items()} == want
+            kw = dict(mask=wkb_mask(spark, rows), cell=(h, w), bbox=bbox, tile=(4, 4))
+            full = GR.grid_maker(spark, trim=False, **kw).collect()
+            assert {(r["cell_x"], r["cell_y"]): (r["__intersects__"], r["__within__"]) for r in full} == want
+            assert all(r["__x__"] == pytest.approx(x0 + r["cell_x"] * w) for r in full)
+            assert grid_flags(GR.grid_maker(spark, **kw)) == {k: v for k, v in want.items() if v[0]}
+            got = grid_flags(GR.grid_maker(spark, interior=True, mode="qtree", **kw))
+            assert got == {k: v for k, v in want.items() if v[1]}
+
+        rows = layer(-200.0, -100.0, 200.0, 100.0) + layer(150.0, 60.0, 230.0, 130.0)
+        polys = wkb_mask(spark, rows)
+        pts = [(rng.uniform(-260.0, 260.0), rng.uniform(-130.0, 130.0)) for _ in range(1500)]
+        pts += [(180.0, rng.uniform(-90.0, 90.0)) for _ in range(50)]
+        pts += [(rng.uniform(-180.0, 180.0), 90.0) for _ in range(50)]
+        pts += [(180.0, 90.0), (float("nan"), 10.0), (10.0, float("nan"))]
+        pdf = spark.createDataFrame([(i, x, y) for i, (x, y) in enumerate(pts)], "pid long, lon double, lat double")
+        px, py = np.array([p[0] for p in pts]), np.array([p[1] for p in pts])
+        want = {
+            (int(i), pid)
+            for pid, b in enumerate(rows)
+            for i in np.nonzero(G.points_in_multipolygon(px, py, wkb.decode_multipolygon(b)))[0]
+        }
+        for z in (3, 6):
+            got = {(r["pid"], r["poly_id"]) for r in SJ.polygon_pip_join(spark, pdf, polys, z=z).collect()}
+            assert got == want and len(want) > 100
 
 
 def test_qtree_requires_trim(spark):
@@ -193,37 +306,15 @@ def test_frame_map_and_row_apply(spark):
     assert ga.count() == 4
 
 
-def test_distributed_tile_classification_matches_driver(spark, monkeypatch):
-    """Past DRIVER_TILE_LIMIT, grid_maker's phase A runs distributed; the
-    END-TO-END output must match the driver-loop path cell for cell
-    (cutover forced by monkeypatching the module constant)."""
-    import pandas as pd
-
-    import pygridmap_spark.operators.gridding as gr_mod
-    from pygridmap_spark.core import wkb
-
-    pdf = pd.DataFrame(
-        {
-            "poly_id": [0, 1],
-            "geometry": [
-                wkb.encode_box(15_000.0, 15_000.0, 70_000.0, 55_000.0),
-                wkb.encode_box(60_000.0, 60_000.0, 95_000.0, 95_000.0),
-            ],
-        }
+def test_tile_classification_matches_cellwise(spark):
+    """Small processing tiles (4x4 cells, 25 tiles) with trim=False: every
+    cell of the grid comes back once, flagged as the per-cell numpy clip
+    says, whether its tile is interior, exterior or cut by the mask."""
+    boxes = [(15_000.0, 15_000.0, 70_000.0, 55_000.0), (60_000.0, 60_000.0, 95_000.0, 95_000.0)]
+    mask = wkb_mask(spark, [wkb.encode_box(*b) for b in boxes])
+    got = grid_flags(
+        GR.grid_maker(spark, mask=mask, cell=(5_000.0, 5_000.0), bbox=BBOX, tile=[4, 4], trim=False)
     )
-    mask = spark.createDataFrame(pdf)
-    kwargs = dict(
-        mask=mask, cell=(5_000.0, 5_000.0), bbox=(0.0, 0.0, 100_000.0, 100_000.0),
-        tile=[4, 4], trim=False,
-    )
-    driver = {
-        (r["cell_x"], r["cell_y"]): (r["__intersects__"], r["__within__"])
-        for r in GR.grid_maker(spark, **kwargs).collect()
-    }
-    monkeypatch.setattr(gr_mod, "DRIVER_TILE_LIMIT", 0)  # force distributed
-    dist = {
-        (r["cell_x"], r["cell_y"]): (r["__intersects__"], r["__within__"])
-        for r in GR.grid_maker(spark, **kwargs).collect()
-    }
-    assert len(driver) == 400
-    assert dist == driver
+    geoms = [wkb.decode_multipolygon(wkb.encode_box(*b)) for b in boxes]
+    assert len(got) == 400
+    assert got == cellwise(geoms, (0.0, 0.0), (5_000.0, 5_000.0), 20, 20)

@@ -1,6 +1,6 @@
-"""Spatial-join operators: indexed rect PIP, two-phase polygon PIP
-(broadcast + distributed parity vs direct numpy), bbox aggregations,
-reference-layout export, floats_to_ints."""
+"""Spatial-join operators: indexed rect PIP, classified polygon PIP (vs a
+direct numpy ray cast), bbox aggregations, reference-layout export,
+floats_to_ints."""
 
 import os
 
@@ -74,16 +74,51 @@ def test_polygon_pip_join_matches_numpy(spark, points_df, geo_polygons):
     assert got == want and len(want) > 0
 
 
-def test_polygon_pip_join_distributed_parity(spark, points_df, geo_polygons):
-    bcast = {
-        (r["pid"], r["poly_id"])
-        for r in SJ.polygon_pip_join(spark, points_df, geo_polygons, z=6).collect()
-    }
-    dist = {
-        (r["pid"], r["poly_id"])
-        for r in SJ.polygon_pip_join_distributed(points_df, geo_polygons, z=6).collect()
-    }
-    assert bcast == dist
+def test_polygon_pip_join_outside_world_box(spark):
+    """Cell keys are not clamped to the world box: (250, 5) used to land in
+    edge cell 63 — interior to box(170, 0, 200, 10) at z=6 — and match it.
+    Every finite point, on lon=180 / lat=90 too, gets the ray cast's answer;
+    NULL and NaN coordinates drop."""
+    polys = spark.createDataFrame(
+        [
+            (0, wkb.encode_box(170.0, 0.0, 200.0, 10.0)),
+            (1, wkb.encode_box(-10.0, 80.0, 10.0, 100.0)),
+            (2, wkb.encode_box(170.0, -10.0, 180.0, -5.0)),
+            (3, wkb.encode_polygon([[(-200.0, -20.0), (-170.0, -20.0), (-185.0, 20.0)]])),
+        ],
+        "poly_id long, geometry binary",
+    )
+    pts = [
+        (250.0, 5.0), (180.0, 5.0), (190.0, 5.0), (175.0, 5.0), (180.0, -7.0),
+        (0.0, 90.0), (5.0, 95.0), (0.0, 120.0), (-185.0, 3.0), (-180.0, 0.0),
+        (-195.0, -15.0), (float("nan"), 5.0), (175.0, float("nan")),
+    ]
+    rows = [(i, x, y) for i, (x, y) in enumerate(pts)] + [(99, None, 5.0), (98, 175.0, None)]
+    points = spark.createDataFrame(rows, "pid long, lon double, lat double")
+    got = {(r["pid"], r["poly_id"]) for r in SJ.polygon_pip_join(spark, points, polys, z=6).collect()}
+    want = _expected_pip([{"pid": i, "lon": x, "lat": y} for i, (x, y) in enumerate(pts)], polys.collect())
+    assert (0, 0) not in got
+    assert got == want
+    assert {(1, 0), (2, 0), (5, 1), (6, 1), (8, 3), (9, 3)} <= want
+
+
+def test_polygon_pip_join_submits_no_job(spark, points_df, geo_polygons):
+    """Building the join plans only: no Spark job runs before the caller's
+    action (a driver-side collect of the polygon layer would show here)."""
+    sc = spark.sparkContext
+    group = "polygon_pip_join_lazy"
+    sc.setJobGroup(group, group)
+    try:
+        before = set(sc.statusTracker().getJobIdsForGroup(group))
+        out = SJ.polygon_pip_join(spark, points_df, geo_polygons, z=6)
+        after = set(sc.statusTracker().getJobIdsForGroup(group))
+        out.count()
+        ran = set(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert after == before
+    assert ran - after  # the probe sees the action's jobs
 
 
 def test_bbox_union_intersection_aggs(spark):
