@@ -12,12 +12,12 @@ The layers are synthesized IN Spark (no driver geometry):
 - N irregular diamonds (rotated quads, the general S-H clip path, NOT the
   rect fast path) with deterministic centers/sizes from the id,
 - ONE mega-polygon covering 400x400 cells (~160k cover cells / pieces) —
-  the continent-in-a-country-table skew case. Its cover cells spread
-  across MANY grid keys by construction (the design's first skew
-  defense), while its WKB join-back rides ONE hot ``poly_id`` key — the
-  rehearsal lowers AQE's skew thresholds to local scale (at lake scale
-  the 256 MB default hits naturally) and asserts the final adaptive plan
-  actually took the skew split (``skew=true``).
+  the continent-in-a-country-table skew case. The overlay classifies it
+  as a few interior blocks plus its boundary cells; the interior expands
+  in the JVM and its pieces spread across MANY grid keys in the join onto
+  the cells. The rehearsal lowers AQE's skew thresholds to local scale
+  (at lake scale the 256 MB default hits naturally) and reports any skew
+  split the final adaptive plan took (``skew=true``).
 
 The dissolve stage then measures the irreducible hot-GROUP tail: an
 applyInPandas group cannot be split, so the mega polygon's 160k-piece
@@ -159,14 +159,13 @@ def main() -> None:
         extra_conf={
             "spark.ui.enabled": "true",
             "spark.sql.files.maxPartitionBytes": str(16 * 1024 * 1024),
-            # demonstrate the skew split at local scale: the mega polygon's
-            # poly_id join-back partition is ~10 MB here vs the 256 MB
-            # default threshold that would catch it at lake scale
+            # skew thresholds at local scale (the 256 MB default is sized
+            # for lake-scale partitions)
             "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "2m",
             "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1m",
             "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
-            # at lake scale the polygon layer (ids + WKB) is far beyond
-            # broadcast range and the pair/join-back joins run as
+            # at lake scale the polygon layer and the grid are far beyond
+            # broadcast range and the attribute and cell joins run as
             # sort-merge; locally even a 100k-poly layer compresses under
             # the threshold and AQE broadcasts everything — disable
             # broadcast outright so the rehearsal exercises the at-scale

@@ -123,7 +123,8 @@ def shingle_hash_sets(
     pass. Set operations over these 64-bit hashes equal the same
     operations over the shingle strings up to collisions (the minhash
     contract). Docs with fewer than ``shingle_n`` tokens drop (empty
-    shingle set — they can neither contain nor be contained)."""
+    shingle set — they can neither contain nor be contained); NULL text
+    has no tokens, so a NULL-text doc drops like an empty one."""
     return _shingle_kernel_frame(df, id_col, text_col, shingle_n, None)
 
 
@@ -155,8 +156,9 @@ def _shingle_kernel_frame(
             # round-3 per-token Python dict loop was the interpreter-bound
             # part of this kernel
             tok_lists, ids = [], []
-            for doc_id, text in zip(batch[id_col], batch[text_col].astype(str)):
-                toks = norm_re.sub(" ", text.lower()).split()
+            for doc_id, text in zip(batch[id_col], batch[text_col]):
+                # NULL text has no tokens (str(None) would be the token 'none')
+                toks = norm_re.sub(" ", "" if text is None else str(text).lower()).split()
                 if len(toks) - shingle_n + 1 < 1:
                     continue
                 tok_lists.append(toks)

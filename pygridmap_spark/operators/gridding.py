@@ -15,7 +15,8 @@ and grid size:
    the broadcast mask runs :func:`classify_blocks` per tile — the
    reference's quadtree (gridding.py:191-255), whose prll mode emits the
    same grid — and returns decided blocks: whole interior (or, for
-   trim=False, exterior) blocks and 1x1 boundary cells,
+   trim=False, exterior) blocks and 1x1 boundary cells (exterior when
+   their clip is at most 1e-9 cell areas),
 3. blocks expand to cells in the JVM (``sequence``/``explode``), their
    flags literals of the block class — no per-cell geometry work,
 4. trim/interior filters (gridding.py:169-172, 186-188) drop blocks
@@ -24,10 +25,11 @@ and grid size:
 
 from __future__ import annotations
 
+import math
 from typing import Iterator, Sequence
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pygridmap_spark.core import bboxes as B
@@ -36,6 +38,25 @@ from pygridmap_spark.core import geometry as G
 from pygridmap_spark.core import wkb
 
 ALL_OUT, BOUNDARY, ALL_IN = 0, 1, 2
+EDGE_EPS = 1e-12
+
+
+def lattice_index(v, origin: float, size: float):
+    """Index of the lattice cell holding coordinate ``v`` — the one
+    coordinate-to-index rule of every cell-keyed plan: cell ``i`` spans
+    ``[origin + i*size, origin + (i+1)*size)``. ``v`` is a float (an int
+    comes back) or a Column (a long Column comes back)."""
+    q = (v - origin) / size
+    return F.floor(q) if isinstance(q, Column) else math.floor(q)
+
+
+def lattice_span(lo, hi, origin: float, size: float):
+    """Half-open index range ``(i0, i1)`` of the cells an interval
+    ``[lo, hi]`` touches, floats or Columns. The max edge backs off
+    ``EDGE_EPS`` so an edge on a cell line does not claim the next cell;
+    where the eps is below an ulp that cell only costs work, its clip is
+    zero."""
+    return lattice_index(lo, origin, size), lattice_index(hi - EDGE_EPS, origin, size) + 1
 
 
 def _decode_mask(mask_rows: Sequence[bytes]):
@@ -54,19 +75,22 @@ def _decode_mask(mask_rows: Sequence[bytes]):
 
 def classify_blocks(geoms, origin, cell, block, outside: bool = False) -> list:
     """Quadtree classification of a lattice block against a mask — the one
-    cell classifier of ``grid_maker`` and ``spatialjoin.polygon_pip_join``
-    (reference gridding.py:146-151, 180-182, 191-255).
+    cell classifier of ``grid_maker``, ``spatialjoin.polygon_pip_join`` and
+    ``overlay.grid_overlay_polygons`` (reference gridding.py:146-151,
+    180-182, 191-255).
 
     ``geoms`` is a list of multipolygons, OR-reduced per geometry (never
     summed across overlapping rows); ``origin`` (x0, y0) and ``cell``
     (height, width) define the lattice; ``block`` is the half-open integer
     range ``[ix0, ix1) x [iy0, iy1)``. Returns decided blocks
-    ``(ix0, iy0, ix1, iy1, cls)``: ALL_IN blocks (some geometry covers the
-    block up to less than 1e-9 cell areas), BOUNDARY 1x1 cells (intersects
-    but not within), and ALL_OUT blocks (every clip at most 1e-9 cell
-    areas) only when ``outside``. The tolerance is per CELL, so a block's
-    class holds for every cell in it and 1x1 results are the per-cell
-    contract. Blocks are index ranges, so a split always shrinks its block."""
+    ``(ix0, iy0, ix1, iy1, cls, area)``: ALL_IN blocks (some geometry covers
+    the block up to less than 1e-9 cell areas, per CELL so the class holds
+    for every cell in it), BOUNDARY 1x1 cells (some clip positive, however
+    small), and ALL_OUT blocks (every clip exactly zero) only when
+    ``outside``. ``area`` is the largest single-geometry clip (an ALL_IN
+    block stops at the first geometry that covers it); ``grid_maker``
+    applies the 1e-9 cell-area tolerance to it to read a sliver as outside.
+    Blocks are index ranges, so a split always shrinks its block."""
     x0, y0 = origin
     height, width = cell
     tol = 1e-9 * height * width
@@ -83,15 +107,16 @@ def classify_blocks(geoms, origin, cell, block, outside: bool = False) -> list:
         xmin, ymin = x0 + ix0 * width, y0 + iy0 * height
         xmax, ymax = x0 + ix1 * width, y0 + iy1 * height
         full = (xmax - xmin) * (ymax - ymin) - tol
-        cls = ALL_OUT
+        cls, area = ALL_OUT, 0.0
         for g, (bxmin, bymin, bxmax, bymax) in boxed:
             if bxmax < xmin or bxmin > xmax or bymax < ymin or bymin > ymax:
                 continue
             clipped = G.multipolygon_clip_area(g, xmin, ymin, xmax, ymax)
+            area = max(area, clipped)
             if clipped >= full:
                 cls = ALL_IN
                 break
-            if clipped > tol:
+            if clipped > 0.0:
                 cls = BOUNDARY
         if cls == BOUNDARY and (ix1 - ix0 > 1 or iy1 - iy0 > 1):
             mx = ix0 + (ix1 - ix0 + 1) // 2
@@ -100,8 +125,22 @@ def classify_blocks(geoms, origin, cell, block, outside: bool = False) -> list:
                 if q[2] > q[0] and q[3] > q[1]:
                     stack.append(q)
         elif cls != ALL_OUT or outside:
-            out.append((ix0, iy0, ix1, iy1, cls))
+            out.append((ix0, iy0, ix1, iy1, cls, area))
     return out
+
+
+def classify_polygons(keys, wkbs, origin, cell):
+    """``(key, multipolygon, blocks)`` per non-empty WKB polygon row: its
+    :func:`classify_blocks` over the :func:`lattice_span` of its bbox,
+    unclamped."""
+    (x0, y0), (height, width) = origin, cell
+    for key, buf in zip(keys, wkbs):
+        mp = wkb.decode_multipolygon(bytes(buf))
+        if not mp or not any(len(p) for p in mp):
+            continue  # empty geometry: no cells
+        bxmin, bymin, bxmax, bymax = G.multipolygon_bbox(mp)
+        (ix0, ix1), (iy0, iy1) = lattice_span(bxmin, bxmax, x0, width), lattice_span(bymin, bymax, y0, height)
+        yield key, mp, classify_blocks([mp], origin, cell, (ix0, iy0, ix1, iy1))
 
 
 def explode_blocks(blocks: DataFrame, x: str, y: str) -> DataFrame:
@@ -209,14 +248,16 @@ def grid_maker(
     else:
         bcast = spark.sparkContext.broadcast(mask_rows)
         origin, lattice = (xmin, ymin), (height, width)
+        tol = 1e-9 * height * width
 
         def _classify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             geoms = _decode_mask(bcast.value)
             for batch in batches:
+                # a clip of at most 1e-9 cell areas does not intersect
                 rows = [
-                    b
+                    (*b, ALL_OUT if cls == BOUNDARY and area <= tol else cls)
                     for blk in batch.itertuples(index=False)
-                    for b in classify_blocks(geoms, origin, lattice, blk, outside=not trim)
+                    for *b, cls, area in classify_blocks(geoms, origin, lattice, blk, outside=not trim)
                 ]
                 yield pd.DataFrame(
                     rows, columns=["__ix0__", "__iy0__", "__ix1__", "__iy1__", "__cls__"]
@@ -225,8 +266,8 @@ def grid_maker(
         blocks = tiles.mapInPandas(
             _classify, "__ix0__ long, __iy0__ long, __ix1__ long, __iy1__ long, __cls__ int"
         )
-        if trim and interior:
-            blocks = blocks.filter(F.col("__cls__") == ALL_IN)
+        if trim:
+            blocks = blocks.filter(F.col("__cls__") >= (ALL_IN if interior else BOUNDARY))
 
     cells = explode_blocks(blocks, "cell_x", "cell_y")
     tile_ix = (F.col("cell_x") / tilesize[1]).cast("int")

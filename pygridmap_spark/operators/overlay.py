@@ -21,12 +21,12 @@ Two physical paths, chosen by the shape of the right side:
    DuckDB-oracle-checkable, which is how the driver verifies the engine.
 
 2. **rect x WKB polygons** (`grid_overlay_polygons`): irregular vector
-   layers (NUTS-3-style), never collected to the driver. Candidates come
-   from exploding each polygon's bbox into the grid's integer cell-key
-   range in the JVM (the cell grid IS the spatial index — replaces the
-   reference's R-tree, overlay.py:257-260) and a shuffled join on that
-   key; each polygon's WKB is joined back once by id, and the exact clip
-   runs in an Arrow UDF only on candidate pairs.
+   layers (NUTS-3-style), never collected to the driver. One Arrow pass
+   runs the quadtree cell classifier over each polygon's bbox block on the
+   grid's lattice (the cell grid IS the spatial index — replaces the
+   reference's R-tree, overlay.py:257-260): interior blocks expand to
+   whole-cell pieces in the JVM, boundary cells carry their exact clip
+   area, and the pieces, keyed on the lattice, join the grid once.
 """
 
 from __future__ import annotations
@@ -43,15 +43,9 @@ from pygridmap_spark import util as _util
 from pygridmap_spark.core import crs as CRS
 from pygridmap_spark.core import geometry as G
 from pygridmap_spark.core import wkb
+from pygridmap_spark.operators import gridding as GR
 
 RULES = ("sum", "max", "min", "list", None)
-
-
-def _box_wkb_udf():
-    """Shared rect-corners -> WKB encoder (see util.box_wkb_udf)."""
-    from pygridmap_spark.util import box_wkb_udf
-
-    return box_wkb_udf()
 
 
 def _check_emit_wkb(emit_wkb: bool, rule) -> None:
@@ -107,12 +101,13 @@ def _apply_rule(
     rule: str | None,
     cover: bool,
     area: bool,
-    cell_key: str = "cell_id",
+    keys: Sequence[str] = ("cell_id",),
     poly_key: str = "poly_id",
 ) -> DataFrame:
-    """Shared rule aggregation + merge-back (A2-A4 + J7/J8)."""
+    """Shared rule aggregation on the cell ``keys`` + merge-back (A2-A4 + J7/J8)."""
+    keys = list(keys)
     if rule is None:
-        return pieces  # raw overlay rows: cell_key, poly_key, piece_area, area_pct, attrs
+        return pieces  # raw overlay rows: keys, poly_key, piece_area, area_pct, attrs
     # drop stale attribute columns from the grid before the merge-back, the
     # reference's V4 pre-drop (overlay.py:377-383) — avoids name collisions
     stale = [c for c in (*columns, "piece_area", "area_pct", "__cover__") if c in grid.columns]
@@ -126,22 +121,22 @@ def _apply_rule(
         order = (
             F.col("area_pct").desc() if rule == "max" else F.col("area_pct").asc()
         )
-        w = Window.partitionBy(cell_key).orderBy(order, F.col(poly_key).asc())
+        w = Window.partitionBy(*keys).orderBy(order, F.col(poly_key).asc())
         ranked = pieces.withColumn("__rn__", F.row_number().over(w)).filter(
             F.col("__rn__") == 1
         )
-        keep = [cell_key, *columns]
+        keep = [*keys, *columns]
         if area:
             keep += ["piece_area", "area_pct"]
         sel = ranked.select(*keep).withColumn("__n_pieces__", F.lit(1).cast("long"))
         if cover:
             # max/min keep one representative row, but cover lists ALL
             # intersecting polygons — aggregate it separately and merge
-            cov = pieces.groupBy(cell_key).agg(
+            cov = pieces.groupBy(*keys).agg(
                 F.sort_array(F.collect_list(poly_key)).alias("__cover__")
             )
-            sel = sel.join(cov, cell_key, "left")
-        return grid.join(sel, cell_key, "left")
+            sel = sel.join(cov, keys, "left")
+        return grid.join(sel, keys, "left")
     elif rule == "list":
         aggs += [F.sort_array(F.collect_list(poly_key)).alias("__cover__")]
     if cover and rule != "list":
@@ -151,22 +146,33 @@ def _apply_rule(
             F.sum("piece_area").alias("piece_area"),
             F.sum("area_pct").alias("area_pct"),
         ]
-    agg = pieces.groupBy(cell_key).agg(*aggs)
-    return grid.join(agg, cell_key, "left")
+    agg = pieces.groupBy(*keys).agg(*aggs)
+    return grid.join(agg, keys, "left")
 
 
-def _grid_meta(df: DataFrame, what: str) -> tuple[float, float, float, float]:
+def _grid_meta(
+    df: DataFrame, what: str, uniform: bool = False
+) -> tuple[float, float, float, float]:
     """(x0, y0, max cell width, max cell height) of a rect layer — one tiny
     driver job for plan constants. Raises on an empty layer instead of the
-    opaque ``max(None, None)`` TypeError downstream."""
+    opaque ``max(None, None)`` TypeError downstream, and, with ``uniform``,
+    on cells of more than one size (relative 1e-9), which no lattice has."""
+    w, h = F.col("xmax") - F.col("x"), F.col("ymax") - F.col("y")
     row = df.agg(
         F.min("x").alias("x0"),
         F.min("y").alias("y0"),
-        F.max(F.col("xmax") - F.col("x")).alias("w"),
-        F.max(F.col("ymax") - F.col("y")).alias("h"),
+        F.max(w).alias("w"),
+        F.max(h).alias("h"),
+        F.min(w).alias("w_min"),
+        F.min(h).alias("h_min"),
     ).collect()[0]
     if row["x0"] is None or row["w"] is None:
         raise ValueError(f"empty {what} layer: cannot derive grid geometry")
+    if uniform and min(row["w_min"] / row["w"], row["h_min"] / row["h"]) < 1 - 1e-9:
+        raise ValueError(
+            f"{what} are not one lattice: widths {row['w_min']}..{row['w']}, "
+            f"heights {row['h_min']}..{row['h']}"
+        )
     return row["x0"], row["y0"], row["w"], row["h"]
 
 
@@ -244,7 +250,7 @@ def grid_overlay_rects(
         # piece corners are closed-form; only the byte encoding needs Python
         # (Arrow-batched), and only when the caller asked for geometry
         extra = [
-            _box_wkb_udf()(
+            _util.box_wkb_udf()(
                 F.greatest("_ax", "_bx"),
                 F.greatest("_ay", "_by"),
                 F.least("_axm", "_bxm"),
@@ -270,7 +276,7 @@ def grid_overlay_rects(
                 ),
                 *columns,
                 *(
-                    [_box_wkb_udf()("x", "y", "xmax", "ymax").alias("geometry")]
+                    [_util.box_wkb_udf()("x", "y", "xmax", "ymax").alias("geometry")]
                     if emit_wkb
                     else []
                 ),
@@ -280,7 +286,7 @@ def grid_overlay_rects(
     out = _apply_rule(pieces, cells, columns, rule, cover, area)
     # inner semantics drop grid cells with no overlap (union keeps them
     # with null attrs — reference 'union' restricted to the grid frame)
-    return _drop_unmatched(out, columns, area, rule) if how == "intersection" else out.drop("__n_pieces__")
+    return _drop_unmatched(out) if how == "intersection" else out.drop("__n_pieces__")
 
 
 HOWS = ("intersection", "union", "union_full")
@@ -313,7 +319,7 @@ def _union_full_pieces(
     Anti-joins on the piece keys."""
     types = dict(pieces.dtypes)
     cell_geom = (
-        [_box_wkb_udf()("x", "y", "xmax", "ymax").alias("geometry")] if emit_wkb else []
+        [_util.box_wkb_udf()("x", "y", "xmax", "ymax").alias("geometry")] if emit_wkb else []
     )
     un_cells = cells.join(
         pieces.select("cell_id").distinct(), "cell_id", "left_anti"
@@ -338,7 +344,7 @@ def _union_full_pieces(
     return pieces.unionByName(un_cells).unionByName(un_polys)
 
 
-def _drop_unmatched(out: DataFrame, columns, area, rule) -> DataFrame:
+def _drop_unmatched(out: DataFrame) -> DataFrame:
     """Intersection semantics: keep only cells that genuinely overlapped —
     keyed on the piece-count marker, NOT attribute nullness (a cell whose
     only overlapping polygon carries a NULL attribute still overlaps)."""
@@ -346,7 +352,7 @@ def _drop_unmatched(out: DataFrame, columns, area, rule) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# path 2: rect x WKB polygons — shuffled cover-cell join + Arrow UDF exact clip
+# path 2: rect x WKB polygons — the shared quadtree cell classifier
 # ---------------------------------------------------------------------------
 
 
@@ -364,103 +370,78 @@ def grid_overlay_polygons(
 ) -> DataFrame:
     """Overlay the cell grid with an irregular WKB polygon layer.
 
-    No polygon geometry reaches the driver:
-    1. per-polygon bbox/area via one Arrow UDF pass (``_poly_meta``),
-    2. cover-cell explosion as JVM ``sequence``/``explode`` on the bbox —
-       ids + keys only, the WKB never rides the replication,
-    3. shuffled equi-join with the cells on the grid cell key (AQE handles
-       skew: a continent-sized polygon's cover cells split across tasks,
-       and broadcasts a small side on its own), then the WKB joined back
-       ONCE per polygon by id,
-    4. exact Sutherland-Hodgman clip on candidate pairs only.
+    No polygon geometry reaches the driver, and the grid is evaluated once:
+    1. one Arrow pass decodes each polygon row once, takes its area and
+       runs :func:`gridding.classify_blocks` over its bbox block on the
+       lattice read off ``cells`` (cells of more than one size raise
+       ValueError); only block rows come back,
+    2. interior blocks expand to cells in the JVM, each piece the whole
+       cell's area; boundary cells carry their exact clip area, however
+       small (every piece of positive area is kept). So sources must be
+       valid: overlapping parts of one multipolygon count once in an
+       interior cell but sum in a boundary clip and in the source area,
+    3. pieces are keyed on the lattice ``(ix, iy)``: rules aggregate on
+       that key before ONE join onto ``cells`` (rule=None joins it once).
 
     ``emit_wkb=True`` (rule=None only) carries each piece's CLIPPED
-    geometry (cell ∩ polygon, holes preserved) as WKB — the rings the clip
-    kernel computes anyway, encoded instead of discarded after the area.
+    geometry (cell ∩ polygon, holes preserved) as WKB: the clip of a
+    boundary cell, the rectangle of an interior one.
     """
     _check_how(how, rule)
     _check_emit_wkb(emit_wkb, rule)
     CRS.check_layers_crs(cells, polygons, "geometry", geometry_col, context="grid_overlay_polygons")
-    gx0, gy0, gw, gh = _grid_meta(cells, "grid cells")
-
-    # The WKB must not ride the x cover-cells replication into the cell-key
-    # exchange (a country polygon with 100k vertices and 10^4 cover cells
-    # would ship 10^4 copies); it is joined back by poly id AFTER the pair
-    # join, so the exchange carries each geometry once (hash-partitioned by
-    # key) and the per-pair duplication happens inside the clip stage,
-    # never re-shuffled. Same re-plumb shape as the minhash LSH band fix.
-    meta = _poly_meta(polygons, poly_key, geometry_col, "_p")
-    cover_df = _explode_cover(
-        meta, gx0, gy0, gw, gh, "_pxmin", "_pymin", "_pxmax", "_pymax",
-        keep=[poly_key, "_parea"],
+    gx0, gy0, gw, gh = _grid_meta(cells, "grid cells", uniform=True)
+    origin, lattice = (gx0, gy0), (gh, gw)
+    cols = ["__ix0__", "__iy0__", "__ix1__", "__iy1__", "__cls__", "__area__", poly_key, "__parea__", "__geom__"]
+    schema = (
+        "__ix0__ long, __iy0__ long, __ix1__ long, __iy1__ long, __cls__ int, __area__ double, "
+        f"{poly_key} {dict(polygons.dtypes)[poly_key]}, __parea__ double, __geom__ binary"
     )
 
-    left = cells.select(
-        "cell_id",
-        F.floor((F.col("x") - F.lit(gx0)) / F.lit(gw)).cast("long").alias("_gix"),
-        F.floor((F.col("y") - F.lit(gy0)) / F.lit(gh)).cast("long").alias("_giy"),
-        F.col("x").alias("_ax"),
-        F.col("y").alias("_ay"),
-        F.col("xmax").alias("_axm"),
-        F.col("ymax").alias("_aym"),
-    )
-    # the pair join only contains keys that survived the meta pass, so
-    # empty geometries stay excluded. AQE splits a mega-polygon's skewed
-    # pair partition.
-    pairs = left.join(cover_df, ["_gix", "_giy"]).join(
-        polygons.select(poly_key, F.col(geometry_col).alias("__wkb__")), poly_key
-    )
-
-    def _clip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        decode = _decode_cache()
+    def _classify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
-            if not len(batch):
-                continue
-            ax = batch["_ax"].to_numpy()
-            ay = batch["_ay"].to_numpy()
-            axm = batch["_axm"].to_numpy()
-            aym = batch["_aym"].to_numpy()
-            pids = batch[poly_key].to_numpy()
-            bufs = batch["__wkb__"]
-            areas = np.empty(len(batch))
-            geoms_out = [None] * len(batch) if emit_wkb else None
-            for i in range(len(batch)):
-                mp = decode(pids[i], bufs.iloc[i])
-                if emit_wkb:
-                    mpc = G.multipolygon_clip(mp, ax[i], ay[i], axm[i], aym[i])
-                    areas[i] = G.multipolygon_area(mpc)
-                    if mpc:
-                        geoms_out[i] = wkb.encode_multipolygon(mpc)
-                else:
-                    areas[i] = G.multipolygon_clip_area(mp, ax[i], ay[i], axm[i], aym[i])
-            out = batch[["cell_id", poly_key, "_parea"]].copy()
-            out["piece_area"] = areas
-            if emit_wkb:
-                out["geometry"] = pd.Series(geoms_out, index=batch.index, dtype=object)
-            yield out[out["piece_area"] > 0]
+            rows = []
+            for pid, mp, blocks in GR.classify_polygons(batch[poly_key], batch[geometry_col], origin, lattice):
+                parea = G.multipolygon_area(mp)
+                for ix0, iy0, ix1, iy1, cls, a in blocks:
+                    clip = None
+                    if emit_wkb and cls == GR.BOUNDARY:
+                        rect = (gx0 + ix0 * gw, gy0 + iy0 * gh, gx0 + ix1 * gw, gy0 + iy1 * gh)
+                        clip = wkb.encode_multipolygon(G.multipolygon_clip(mp, *rect))
+                    rows.append((ix0, iy0, ix1, iy1, cls, a, pid, parea, clip))
+            yield pd.DataFrame(rows, columns=cols)
 
-    key_type = dict(polygons.dtypes)[poly_key]
-    geom_field = ", geometry binary" if emit_wkb else ""
-    geom_cols = ["geometry"] if emit_wkb else []
-    pieces = pairs.mapInPandas(
-        _clip,
-        f"cell_id long, {poly_key} {key_type}, _parea double, piece_area double{geom_field}",
-    ).withColumn(
-        "area_pct", F.when(F.col("_parea") > 0, F.col("piece_area") / F.col("_parea"))
-    )
-    # attribute merge-back ONLY when attributes were asked for: with no
-    # columns the join adds nothing (every piece key came from the polygon
-    # layer), and — decisively for skew — a no-op join on poly_key would
-    # sit directly above the WKB join-back on the SAME key, and AQE's
-    # OptimizeSkewedJoin refuses to split a skewed partition whose output
-    # co-partitioning a parent join reuses: a mega-polygon's hot key would
-    # stay one task. Skipping it keeps the WKB join splittable.
+    blocks = polygons.select(poly_key, geometry_col).mapInPandas(_classify, schema)
     if columns:
-        pieces = pieces.join(polygons.select(poly_key, *columns), poly_key)
-    pieces = pieces.select(
-        "cell_id", poly_key, "piece_area", "area_pct", *columns, *geom_cols
+        # attributes join the block rows: fewer than the cells they expand to
+        blocks = blocks.join(polygons.select(poly_key, *columns), poly_key)
+    interior = F.col("__cls__") == GR.ALL_IN
+    piece_area = F.when(interior, F.lit(gw * gh)).otherwise(F.col("__area__"))
+    pieces = GR.explode_blocks(blocks, "_gix", "_giy").select(
+        "_gix", "_giy", poly_key,
+        piece_area.alias("piece_area"),
+        F.when(F.col("__parea__") > 0, piece_area / F.col("__parea__")).alias("area_pct"),
+        *columns, *(["__cls__", "__geom__"] if emit_wkb else []),
+    )
+    # cells on the lattice index of their centre, half a cell from any line
+    keyed = cells.withColumns(
+        {
+            "_gix": GR.lattice_index((F.col("x") + F.col("xmax")) / 2, gx0, gw),
+            "_giy": GR.lattice_index((F.col("y") + F.col("ymax")) / 2, gy0, gh),
+        }
     )
     if rule is None:
+        corners = ["_cx", "_cy", "_cxm", "_cym"] if emit_wkb else []
+        pieces = keyed.select(
+            "cell_id", "_gix", "_giy",
+            *(F.col(c).alias(a) for c, a in zip(("x", "y", "xmax", "ymax"), corners)),
+        ).join(pieces, ["_gix", "_giy"])
+        geom = []
+        if emit_wkb:
+            # an interior piece is its cell's own rectangle
+            rect = _util.box_wkb_udf()(*corners)
+            geom = [F.when(interior, rect).otherwise(F.col("__geom__")).alias("geometry")]
+        pieces = pieces.select("cell_id", poly_key, "piece_area", "area_pct", *columns, *geom)
         if how == "union_full":
             psel = [poly_key, *columns]
             if emit_wkb:
@@ -469,17 +450,17 @@ def grid_overlay_polygons(
                 pieces, cells, polygons.select(*psel), columns, poly_key, emit_wkb=emit_wkb
             )
         return pieces
-    out = _apply_rule(pieces, cells, columns, rule, cover, area, poly_key=poly_key)
-    if how == "intersection":
-        return _drop_unmatched(out, columns, area, rule)
-    return out.drop("__n_pieces__")
+    out = _apply_rule(
+        pieces, keyed, columns, rule, cover, area, keys=["_gix", "_giy"], poly_key=poly_key
+    ).drop("_gix", "_giy")
+    return _drop_unmatched(out) if how == "intersection" else out.drop("__n_pieces__")
 
 
 def _decode_cache(limit: int = 4096):
     """Per-batch-iterator WKB decode cache keyed by polygon id — one
-    decode per polygon per Python worker, bounded. Shared by every
-    candidate-pair clip loop (grid overlay, pair overlay, distributed
-    union)."""
+    decode per polygon per Python worker, bounded. Shared by the
+    candidate-pair loops of ``polygon_overlay_pieces`` and
+    ``union_exact_distributed``."""
     from pygridmap_spark.core import wkb as _WKB
 
     cache: dict = {}
@@ -509,31 +490,16 @@ def _explode_cover(
     out_x: str = "_gix",
     out_y: str = "_giy",
 ) -> DataFrame:
-    """bbox -> covered-cell key explosion (ids + keys only; geometry never
-    rides the replication). The eps keeps a bbox edge exactly on a cell
-    line from claiming the next cell."""
-    eps = 1e-12
-    step1 = df.select(
-        *keep,
-        F.explode(
-            F.sequence(
-                F.floor((F.col(xmin) - F.lit(x0)) / F.lit(w)).cast("long"),
-                F.floor((F.col(xmax) - F.lit(eps) - F.lit(x0)) / F.lit(w)).cast("long"),
-            )
-        ).alias(out_x),
-        F.col(ymin).alias("__cy0__"),
-        F.col(ymax).alias("__cy1__"),
+    """bbox -> covered-cell key explosion on the lattice ``gridding``
+    defines (ids + keys only; geometry never rides the replication)."""
+    (ix0, ix1), (iy0, iy1) = (
+        GR.lattice_span(F.col(xmin), F.col(xmax), x0, w),
+        GR.lattice_span(F.col(ymin), F.col(ymax), y0, h),
     )
-    return step1.select(
-        *keep,
-        out_x,
-        F.explode(
-            F.sequence(
-                F.floor((F.col("__cy0__") - F.lit(y0)) / F.lit(h)).cast("long"),
-                F.floor((F.col("__cy1__") - F.lit(eps) - F.lit(y0)) / F.lit(h)).cast("long"),
-            )
-        ).alias(out_y),
+    blocks = df.select(
+        *keep, ix0.alias("__ix0__"), iy0.alias("__iy0__"), ix1.alias("__ix1__"), iy1.alias("__iy1__")
     )
+    return GR.explode_blocks(blocks, out_x, out_y)
 
 
 def _poly_meta(polygons: DataFrame, poly_key: str, geometry_col: str, out_prefix: str) -> DataFrame:
@@ -602,7 +568,7 @@ def polygon_overlay_pieces(
     falls back to fragments on any area mismatch; identical areas and
     membership either way).
 
-    Fully distributed plan (same shape as grid_overlay_polygons):
+    Fully distributed plan:
 
     1. one Arrow meta pass per side (bbox + area; WKB stays put),
     2. both sides explode their bbox cover cells on a SHARED index grid —
@@ -633,29 +599,14 @@ def polygon_overlay_pieces(
         if row["w"] is None:
             raise ValueError("empty right layer: cannot derive index cell size")
         cell = max(row["w"], row["h"], 1e-12)
-    eps = 1e-12
 
-    def _cover(meta: DataFrame, key: str, p: str) -> DataFrame:
-        return meta.withColumn(
-            "_gix",
-            F.explode(
-                F.sequence(
-                    F.floor(F.col(f"{p}xmin") / cell).cast("long"),
-                    F.floor((F.col(f"{p}xmax") - eps) / cell).cast("long"),
-                )
-            ),
-        ).withColumn(
-            "_giy",
-            F.explode(
-                F.sequence(
-                    F.floor(F.col(f"{p}ymin") / cell).cast("long"),
-                    F.floor((F.col(f"{p}ymax") - eps) / cell).cast("long"),
-                )
-            ),
+    def _cover(meta: DataFrame, p: str) -> DataFrame:
+        return _explode_cover(
+            meta, 0.0, 0.0, cell, cell, f"{p}xmin", f"{p}ymin", f"{p}xmax", f"{p}ymax", keep=meta.columns
         )
 
-    lc = _cover(lmeta, left_key, "_l")
-    rc = _cover(rmeta, right_key, "_r")
+    lc = _cover(lmeta, "_l")
+    rc = _cover(rmeta, "_r")
     pairs = (
         lc.join(rc, ["_gix", "_giy"])
         # bbox prefilter BEFORE the pair-dedup exchange
@@ -929,8 +880,7 @@ def union_exact_distributed(
     Scale plan (and why it beats shuffling raw polygons):
     1. per-polygon bbox via one Arrow pass (``_poly_meta``),
     2. cover-tile explosion on the bbox — ids only,
-    3. WKB joined back once per polygon by id (AQE skew-splittable, as in
-       grid_overlay_polygons),
+    3. WKB joined back once per polygon by id (AQE skew-splittable),
     4. MAP-SIDE clip of each polygon to each covered tile — so the tile
        exchange carries only the clipped piece that lands in that tile,
        never a continent polygon replicated to its 10^4 tiles,

@@ -11,8 +11,9 @@ The exact phase is then:
 - WKB polygons: one Arrow pass per polygon row runs the shared quadtree
   classifier (``gridding.classify_blocks``, exact clip areas — the
   reference's coarse short-circuit, gridding.py:146-151) over its cover
-  range; interior blocks assign their points with zero geometry work, and
-  only points in boundary cells run the vectorized numpy ray cast
+  block; interior blocks assign their points with zero geometry work, and
+  only points in boundary cells — any cell with a positive clip, however
+  small the polygon — run the vectorized numpy ray cast
   (gridding.py:180-182's J2), their polygon's WKB joined back by id.
 
 At 10^12 pages the points side never shuffles: the region side is a
@@ -22,7 +23,6 @@ stays broadcastable at a suitably coarse zoom.
 
 from __future__ import annotations
 
-import math
 from typing import Iterator
 
 import numpy as np
@@ -32,21 +32,14 @@ from pyspark.sql import functions as F
 
 from pygridmap_spark.core import geometry as G
 from pygridmap_spark.core import wkb
-from pygridmap_spark.operators.gridding import ALL_IN, BOUNDARY, classify_blocks, explode_blocks
-
-
-def _cover_block(bxmin, bymin, bxmax, bymax, z: int):
-    """Half-open integer cover block ``(ix0, iy0, ix1, iy1)`` of a bbox on
-    the zoom-z lattice — unclamped, the same key points get in
-    :func:`polygon_pip_join`, so coordinates outside the world box match
-    only the polygons that reach them."""
-    n = 1 << z
-    return (
-        math.floor((bxmin + 180.0) / 360.0 * n),
-        math.floor((bymin + 90.0) / 180.0 * n),
-        math.floor((bxmax - 1e-12 + 180.0) / 360.0 * n) + 1,
-        math.floor((bymax - 1e-12 + 90.0) / 180.0 * n) + 1,
-    )
+from pygridmap_spark.operators.gridding import (
+    ALL_IN,
+    BOUNDARY,
+    classify_polygons,
+    explode_blocks,
+    lattice_index,
+    lattice_span,
+)
 
 
 def rect_pip_join(
@@ -66,33 +59,16 @@ def rect_pip_join(
     broadcast hash equi-join on the cell key, residual range filter.
     """
     n = float(1 << z)
+    lx, ly = (-180.0, 360.0 / n), (-90.0, 180.0 / n)
     pts = points.withColumns(
-        {
-            "__cix__": F.floor((F.col(lon) + 180.0) / 360.0 * n).cast("long"),
-            "__ciy__": F.floor((F.col(lat) + 90.0) / 180.0 * n).cast("long"),
-        }
+        {"__cix__": lattice_index(F.col(lon), *lx), "__ciy__": lattice_index(F.col(lat), *ly)}
     )
-    eps = 1e-12
-    cover = (
-        rects.withColumn(
-            "__cix__",
-            F.explode(
-                F.sequence(
-                    F.floor((F.col("rxmin") + 180.0) / 360.0 * n).cast("long"),
-                    F.floor((F.col("rxmax") - eps + 180.0) / 360.0 * n).cast("long"),
-                )
-            ),
-        )
-        .withColumn(
-            "__ciy__",
-            F.explode(
-                F.sequence(
-                    F.floor((F.col("rymin") + 90.0) / 180.0 * n).cast("long"),
-                    F.floor((F.col("rymax") - eps + 90.0) / 180.0 * n).cast("long"),
-                )
-            ),
-        )
+    (ix0, ix1), (iy0, iy1) = (
+        lattice_span(F.col("rxmin"), F.col("rxmax"), *lx),
+        lattice_span(F.col("rymin"), F.col("rymax"), *ly),
     )
+    blocks = rects.withColumns({"__ix0__": ix0, "__iy0__": iy0, "__ix1__": ix1, "__iy1__": iy1})
+    cover = explode_blocks(blocks, "__cix__", "__ciy__")
     joined = pts.join(F.broadcast(cover), ["__cix__", "__ciy__"])
     out = joined.filter(
         (F.col(lon) >= F.col("rxmin"))
@@ -129,17 +105,15 @@ def polygon_pip_join(
     kept for signature compatibility.
     """
     n = float(1 << z)
-    lattice = (180.0 / n, 360.0 / n)
+    origin, lattice = (-180.0, -90.0), (180.0 / n, 360.0 / n)
 
     def _cover(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
-            rows = []
-            for pid, buf in zip(batch[poly_key], batch[geometry_col]):
-                mp = wkb.decode_multipolygon(bytes(buf))
-                if not mp or not any(len(p) for p in mp):
-                    continue  # empty geometry: matches nothing
-                block = _cover_block(*G.multipolygon_bbox(mp), z)
-                rows += [(*b, pid) for b in classify_blocks([mp], (-180.0, -90.0), lattice, block)]
+            rows = [
+                (*b, pid)
+                for pid, _, blocks in classify_polygons(batch[poly_key], batch[geometry_col], origin, lattice)
+                for *b, _ in blocks
+            ]
             yield pd.DataFrame(
                 rows, columns=["__ix0__", "__iy0__", "__ix1__", "__iy1__", "__cls__", poly_key]
             )
@@ -156,10 +130,7 @@ def polygon_pip_join(
     # expressions per branch — a per-row sha256 when they come from urls)
     x, y = (F.nanvl(F.col(c), F.lit(None).cast("double")) for c in (lon, lat))
     pts = points.withColumns(
-        {
-            "__cix__": F.floor((x + 180.0) / 360.0 * n),
-            "__ciy__": F.floor((y + 90.0) / 180.0 * n),
-        }
+        {"__cix__": lattice_index(x, origin[0], lattice[1]), "__ciy__": lattice_index(y, origin[1], lattice[0])}
     )
     cand = pts.join(F.broadcast(cover), ["__cix__", "__ciy__"])
     interior = cand.filter(F.col("__cls__") == ALL_IN)

@@ -13,6 +13,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _driver_memory(physical: int, cgroup: int | None = None) -> str:
+    """Default driver heap: 40% of the host's memory (of its cgroup limit
+    when lower), at most 24g and at least 1g. A heap the host cannot back
+    gets the JVM OOM-killed once G1 grows into it in a long session."""
+    return f"{max(1024, min(24 * 1024, int(0.4 * min(physical, cgroup or physical)) >> 20))}m"
+
+
+def _cgroup_memory() -> int | None:
+    """The cgroup v2 (else v1) memory limit in bytes; None when unlimited."""
+    for path in ("/sys/fs/cgroup/memory.max", "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        if os.path.exists(path):
+            with open(path) as f:
+                raw = f.read().strip()
+            return int(raw) if raw.isdigit() else None  # v2 writes "max"
+    return None
+
+
 def get_spark(
     app: str = "pygridmap_spark",
     master: str | None = None,
@@ -27,6 +44,9 @@ def get_spark(
     # falls back to the host cpu count for the shuffle-width default.
     m = re.fullmatch(r"local\[(\d+)\]", master)
     n_threads = int(m.group(1)) if m else cpus
+    heap = os.environ.get("SPARK_DRIVER_MEMORY") or _driver_memory(
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"), _cgroup_memory()
+    )
     builder = (
         SparkSession.builder.master(master)
         .appName(app)
@@ -36,7 +56,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

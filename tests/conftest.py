@@ -17,11 +17,6 @@ from pygridmap_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    # The session factory's 24g default heap is larger than a small test
-    # host's RAM: over a full run G1 grows the heap until the kernel
-    # OOM-kills the shared JVM and every later Spark test fails. A full run
-    # peaks near 5 GB resident under this cap (4 vCPU / 15 GB host).
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "6g")
     s = get_spark(app="pygridmap_spark_tests", master="local[4]", shuffle_partitions=4)
     yield s
     s.stop()

@@ -373,6 +373,17 @@ class TestShingleContainment:
         assert r14.overlap == 2  # 'alpha beta gamma', 'beta gamma delta'
         assert not any(3 in p for p in out)
 
+    def test_null_text_has_no_shingles(self, spark):
+        from pygridmap_spark.operators import dedup as DD
+
+        # NULL text used to tokenize as the word 'none'
+        df = spark.createDataFrame(
+            [(1, "none"), (2, None), (3, "")], "doc_id long, text string"
+        )
+        got = [r.doc_id for r in DD.shingle_hash_sets(df, shingle_n=1).collect()]
+        assert got == [1]
+        assert DD.shingle_containment_pairs(df, shingle_n=1, containment_threshold=0.1).count() == 0
+
     def test_freq_cap_drops_boilerplate(self, spark):
         from pygridmap_spark.operators import dedup as DD
 

@@ -6,6 +6,8 @@ These are "the reference implementation's overlay unit tests" the north
 star requires matching.
 """
 
+import math
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -149,6 +151,55 @@ def test_distributed_polygon_overlay_rules(spark, grid):
     total = out.agg(F.sum("pop")).collect()[0][0]
     want = sum(r["pop"] for r in polys.select("pop").collect())
     assert total == pytest.approx(want, rel=1e-9)
+
+
+def test_polygon_overlay_rejects_non_lattice_cells(spark, grid):
+    """Interior pieces take the lattice cell's area, so a cells layer with
+    one cell cut short (an edge cell trimmed to an extent) is refused
+    rather than over-assigned."""
+    cut = grid.withColumn("xmax", F.when(F.col("cell_id") == 3, F.col("x") + 30_000.0).otherwise(F.col("xmax")))
+    polys = PG.synthetic_polygons(spark, n=2, bbox=BBOX, seed=3)
+    with pytest.raises(ValueError, match="not one lattice"):
+        OV.grid_overlay_polygons(cut, polys, ["pop"], rule=None)
+    with pytest.raises(ValueError, match="not one lattice"):
+        OV.area_interpolate(spark, polys, cut, ["pop"])
+
+
+def test_area_interpolate_plan_over_lazy_grid(spark):
+    """Over a lazy grid_maker grid, the executed plan classifies the grid
+    once and the sources once — two Python nodes, the grid's ``_classify``
+    and the overlay's — and the only jobs before the action are the mask
+    collect and the grid-constant query."""
+    from pygridmap_spark.operators import gridding as GR
+
+    star = [
+        ((20_000.0 if k % 2 else 12_000.0) * math.cos(math.pi * k / 8), (20_000.0 if k % 2 else 12_000.0) * math.sin(math.pi * k / 8))
+        for k in range(16)
+    ]
+    mask = spark.createDataFrame([(0, wkb.encode_polygon([star]))], "poly_id long, geometry binary")
+    sources = PG.synthetic_polygons(spark, n=20, bbox=(-6_000.0, -6_000.0, 6_000.0, 6_000.0), seed=7, with_multi=False)
+    sc = spark.sparkContext
+    group = "area_interpolate_lazy_grid"
+    sc.setJobGroup(group, group)
+    try:
+        before = set(sc.statusTracker().getJobIdsForGroup(group))
+        cells = GR.grid_maker(
+            spark, mask, cell=(1_000.0, 1_000.0), bbox=(-20_000.0, -20_000.0, 20_000.0, 20_000.0), mode="qtree"
+        ).withColumnsRenamed({"__x__": "x", "__y__": "y"})
+        out = OV.area_interpolate(spark, sources, cells, ["pop"])
+        planned = set(sc.statusTracker().getJobIdsForGroup(group))
+        rows = out.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(planned - before) <= 3
+    # the action ran on this query execution, so its plan is AQE's final one
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    assert final.count("MapInPandas") == 2, final
+    want = sum(r["pop"] for r in sources.select("pop").collect())
+    assert sum(r["pop"] for r in rows) == pytest.approx(want, rel=1e-9)
 
 
 def test_piece_geometry_rect_path(spark, grid):

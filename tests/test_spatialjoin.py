@@ -102,6 +102,24 @@ def test_polygon_pip_join_outside_world_box(spark):
     assert {(1, 0), (2, 0), (5, 1), (6, 1), (8, 3), (9, 3)} <= want
 
 
+def test_polygon_pip_join_sub_tolerance_polygon(spark):
+    """A polygon smaller than 1e-9 of its zoom-6 cell (1.58e-8 deg^2) — a
+    1e-5 deg or 1e-4 deg square, about a building footprint — used to get
+    an empty cover, so no point inside it matched."""
+    polys = spark.createDataFrame(
+        [
+            (0, wkb.encode_box(10.0, 10.0, 10.00001, 10.00001)),
+            (1, wkb.encode_box(-20.0001, 30.0, -20.0, 30.0001)),
+        ],
+        "poly_id long, geometry binary",
+    )
+    pts = [(10.000005, 10.000005), (-20.00005, 30.00005), (10.00002, 10.000005), (-20.00005, 30.0002)]
+    points = spark.createDataFrame([(i, x, y) for i, (x, y) in enumerate(pts)], "pid long, lon double, lat double")
+    got = {(r["pid"], r["poly_id"]) for r in SJ.polygon_pip_join(spark, points, polys, z=6).collect()}
+    want = _expected_pip([{"pid": i, "lon": x, "lat": y} for i, (x, y) in enumerate(pts)], polys.collect())
+    assert got == want == {(0, 0), (1, 1)}
+
+
 def test_polygon_pip_join_submits_no_job(spark, points_df, geo_polygons):
     """Building the join plans only: no Spark job runs before the caller's
     action (a driver-side collect of the polygon layer would show here)."""
