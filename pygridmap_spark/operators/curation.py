@@ -971,9 +971,12 @@ def duplicate_span_removal(
     surviving tokens in original order ('' when everything was removed).
     Every quantity is an integer or an exact string, so the driver
     oracle (the identical pipeline on n-gram STRINGS in DuckDB)
-    hash-gates the output; the Spark side exchanges xxhash64 n-gram
-    keys, never the strings — equal up to 64-bit collisions, the
-    repo-wide minhash contract.
+    hash-gates the output; the Spark side exchanges 64-bit n-gram
+    keys, never the strings. Equality holds up to collisions in two
+    layers: each token is first hashed to a 32-bit crc32 (two distinct
+    tokens collide with probability ~2^-32 and then alias corpus-wide —
+    ~100 colliding pairs per 1M distinct tokens), and the 64-bit gram key
+    combines those token hashes; the repo-wide minhash contract.
 
     Scale shape: ONE Arrow kernel pass emits the token array and the
     positional gram-hash array together (the compact per-doc frame is
@@ -1003,8 +1006,9 @@ def duplicate_span_removal(
     # positionally; gram array index i IS token start index i, so
     # position alignment between grams and tokens is by construction.
     # The internal hash family change is output-invisible (duplicate
-    # detection over 64-bit hashes equals detection over gram strings up
-    # to collisions — the repo-wide minhash contract the oracle gates).
+    # detection over the gram hashes equals detection over gram strings
+    # up to collisions of the 32-bit per-token crc32 and of the 64-bit
+    # combine — the repo-wide minhash contract the oracle gates).
     per_doc = _token_gram_frame(df, n, id_col, text_col).localCheckpoint(eager=False)
     base = per_doc.select(F.col(id_col), "__toks__")
     grams = per_doc.select(

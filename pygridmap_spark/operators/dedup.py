@@ -659,9 +659,9 @@ def shingle_containment_pairs(
     DISTINCT shingle-hash arrays built in-row (array_distinct — a
     shingle set is distinct within its document by definition, so no
     corpus-wide distinct Exchange exists; shingles ride every exchange
-    as 8-byte xxhash64 values, never strings; overlap over hashes
-    equals overlap over strings up to 64-bit collisions, the minhash
-    contract); per-doc sizes are F.size of the same array (no
+    as 8-byte hashes, never strings; overlap over hashes equals overlap
+    over strings up to collisions of the 32-bit per-token crc32 and of
+    the 64-bit combine, the minhash contract); per-doc sizes are F.size of the same array (no
     aggregation pass);
     the postings self-join shuffles on the shingle hash, and its
     fan-out is sum_s C(freq(s), 2) — bounded by capping boilerplate
@@ -685,8 +685,9 @@ def shingle_containment_pairs(
     Catalyst chain built every shingle STRING through interpreted HOFs
     and xxhash64'd it, measured ~43 of this query's 48 task-seconds at
     sf0.1. The internal hash family change is invisible in the output
-    (set overlap over 64-bit hashes equals overlap over the strings up
-    to collisions — the documented minhash contract the oracle gates);
+    (set overlap over the shingle hashes equals overlap over the strings
+    up to collisions of the 32-bit per-token crc32 and of the 64-bit
+    combine — the documented minhash contract the oracle gates);
     docs with < n tokens drop in the kernel; they had an empty shingle
     set before (no postings, no sizes row) — output-identical. Over-cap
     buckets are no longer counted driver-side, so the dropped-bucket log

@@ -132,12 +132,12 @@ def classify_blocks(geoms, origin, cell, block, outside: bool = False) -> list:
 def classify_polygons(keys, wkbs, origin, cell):
     """``(key, multipolygon, blocks)`` per non-empty WKB polygon row: its
     :func:`classify_blocks` over the :func:`lattice_span` of its bbox,
-    unclamped."""
+    unclamped. NULL and empty geometries yield nothing."""
     (x0, y0), (height, width) = origin, cell
     for key, buf in zip(keys, wkbs):
-        mp = wkb.decode_multipolygon(bytes(buf))
+        mp = None if buf is None else wkb.decode_multipolygon(bytes(buf))
         if not mp or not any(len(p) for p in mp):
-            continue  # empty geometry: no cells
+            continue  # NULL or empty geometry: no cells
         bxmin, bymin, bxmax, bymax = G.multipolygon_bbox(mp)
         (ix0, ix1), (iy0, iy1) = lattice_span(bxmin, bxmax, x0, width), lattice_span(bymin, bymax, y0, height)
         yield key, mp, classify_blocks([mp], origin, cell, (ix0, iy0, ix1, iy1))
@@ -211,7 +211,8 @@ def grid_maker(
     if mask is not None:
         if mode == "qtree" and not trim:
             raise ValueError("qtree mode requires trim=True (all-out cells are pruned)")
-        mask_rows = [bytes(r[0]) for r in mask.select(geometry_col).collect()]
+        # a NULL mask row covers nothing, like an empty geometry
+        mask_rows = [bytes(r[0]) for r in mask.select(geometry_col).collect() if r[0] is not None]
         polys = _decode_mask(mask_rows)  # list of per-row multipolygons
         if bbox is None:
             boxes = [G.multipolygon_bbox(g) for g in polys]

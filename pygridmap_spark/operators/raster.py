@@ -179,9 +179,11 @@ def zonal_stats(
     """Per-polygon band statistics (count/sum/mean/min/max) — the classic
     raster->vector zonal aggregation. Cell membership is by CELL CENTER
     (standard zonal semantics): pixel centers run through
-    ``spatialjoin.polygon_pip_join`` (interior cover cells assign with zero
-    geometry work, boundary pixels get the exact ray cast; no polygon
-    collect), then one groupBy(poly).
+    ``spatialjoin.polygon_pip_join`` (one branch: interior cover cells
+    assign with zero geometry work, boundary pixels get the exact ray
+    cast, and only the center coordinates, polygon key and WKB cross into
+    Python — the bands stay in the JVM; no polygon collect), then one
+    groupBy(poly).
     Nodata pixels (null band) are excluded from the stats per band.
 
     ``height`` converts (col, row) to coords when the raster doesn't

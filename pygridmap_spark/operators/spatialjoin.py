@@ -11,10 +11,13 @@ The exact phase is then:
 - WKB polygons: one Arrow pass per polygon row runs the shared quadtree
   classifier (``gridding.classify_blocks``, exact clip areas — the
   reference's coarse short-circuit, gridding.py:146-151) over its cover
-  block; interior blocks assign their points with zero geometry work, and
-  only points in boundary cells — any cell with a positive clip, however
-  small the polygon — run the vectorized numpy ray cast
-  (gridding.py:180-182's J2), their polygon's WKB joined back by id.
+  block. The candidates then run one branch: points in boundary cells —
+  any cell with a positive clip, however small the polygon — get their
+  polygon's WKB by a broadcast left join on the id, and one scalar pandas
+  UDF (Spark's ArrowEvalPython) passes interior candidates (NULL WKB) with
+  zero geometry work and ray-casts the rest (gridding.py:180-182's J2).
+  Only its four argument columns cross into Python, and every input is
+  read once per action.
 
 At 10^12 pages the points side never shuffles: the region side is a
 dimension table (countries/NUTS ~10^3-10^5 rows) whose cover-cell explosion
@@ -33,13 +36,15 @@ from pyspark.sql import functions as F
 from pygridmap_spark.core import geometry as G
 from pygridmap_spark.core import wkb
 from pygridmap_spark.operators.gridding import (
-    ALL_IN,
     BOUNDARY,
     classify_polygons,
     explode_blocks,
     lattice_index,
     lattice_span,
 )
+
+# polygon_pip_join's temporaries: cell key, cover class, joined-back key and WKB
+_TEMPS = ("__cix__", "__ciy__", "__cls__", "__pk__", "__wkb__")
 
 
 def rect_pip_join(
@@ -93,17 +98,24 @@ def polygon_pip_join(
 
     1. one Arrow pass over the polygons runs ``classify_blocks`` over each
        row's cover block and emits (block, poly, class) rows — the WKB
-       does not ride the cover-cell replication,
+       does not ride the cover-cell replication; NULL and empty
+       geometries get no cells,
     2. blocks explode to cells in the JVM and broadcast-join the points on
        the unclamped cell key (NULL/NaN coordinates get no key and drop),
-    3. interior cells pass through with zero geometry work; boundary
-       candidates broadcast-join the raw WKB back by polygon id and run
-       the vectorized ray cast, decoding once per polygon per batch.
-       The points side never shuffles.
+    3. boundary candidates left-join the broadcast (poly_key, WKB) — each
+       geometry ships once, interior candidates get a NULL WKB,
+    4. one scalar pandas UDF filters every candidate: True on a NULL WKB,
+       else the vectorized ray cast, decoding once per polygon per batch.
+       Only (lon, lat, poly_key, WKB) cross into Python; the point payload
+       stays in the JVM, and the points side never shuffles.
 
     Lazy: no job runs before the caller's action. ``spark`` is unused and
-    kept for signature compatibility.
+    kept for signature compatibility. ``points`` must not carry
+    ``poly_key`` or the join's temporaries (ValueError).
     """
+    clash = [c for c in (poly_key, *_TEMPS) if c in points.columns]
+    if clash:
+        raise ValueError(f"points already has a {clash[0]!r} column; rename it")
     n = float(1 << z)
     origin, lattice = (-180.0, -90.0), (180.0 / n, 360.0 / n)
 
@@ -117,6 +129,18 @@ def polygon_pip_join(
             yield pd.DataFrame(
                 rows, columns=["__ix0__", "__iy0__", "__ix1__", "__iy1__", "__cls__", poly_key]
             )
+
+    def _inside(x: pd.Series, y: pd.Series, pid: pd.Series, buf: pd.Series) -> pd.Series:
+        bufs = buf.to_numpy()
+        keep = pd.isna(bufs)  # NULL WKB: an interior cell's candidate
+        rest = np.flatnonzero(~keep)
+        px, py = x.to_numpy(dtype=np.float64)[rest], y.to_numpy(dtype=np.float64)[rest]
+        codes, pids = pd.factorize(pid.to_numpy()[rest], use_na_sentinel=False)
+        for k in range(len(pids)):
+            sel = np.flatnonzero(codes == k)
+            mp = wkb.decode_multipolygon(bytes(bufs[rest[sel[0]]]))
+            keep[rest[sel]] = G.points_in_multipolygon(px[sel], py[sel], mp)
+        return pd.Series(keep)
 
     key_type = dict(polygons.dtypes)[poly_key]
     blocks = polygons.select(poly_key, geometry_col).mapInPandas(
@@ -133,32 +157,8 @@ def polygon_pip_join(
         {"__cix__": lattice_index(x, origin[0], lattice[1]), "__ciy__": lattice_index(y, origin[1], lattice[0])}
     )
     cand = pts.join(F.broadcast(cover), ["__cix__", "__ciy__"])
-    interior = cand.filter(F.col("__cls__") == ALL_IN)
-    # WKB fetched by id for BOUNDARY candidates only — each geometry ships
-    # once through this broadcast instead of once per cover cell above
-    boundary = cand.filter(F.col("__cls__") == BOUNDARY).join(
-        F.broadcast(polygons.select(poly_key, F.col(geometry_col).alias("__wkb__"))), poly_key
-    )
-    schema = interior.schema
-
-    def _exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict = {}
-        for batch in batches:
-            if not len(batch):
-                continue
-            px = batch[lon].to_numpy(dtype=np.float64)
-            py = batch[lat].to_numpy(dtype=np.float64)
-            pids = batch[poly_key].to_numpy()
-            keep = np.zeros(len(batch), dtype=bool)
-            for pid in np.unique(pids):
-                sel = np.nonzero(pids == pid)[0]
-                mp = cache.get(pid)
-                if mp is None:
-                    mp = wkb.decode_multipolygon(bytes(batch["__wkb__"].iloc[sel[0]]))
-                    if len(cache) < 4096:
-                        cache[pid] = mp
-                keep[sel] = G.points_in_multipolygon(px[sel], py[sel], mp)
-            yield batch[keep].drop(columns=["__wkb__"])
-
-    exact = boundary.mapInPandas(_exact, schema)
-    return interior.unionByName(exact).drop("__cix__", "__ciy__", "__cls__")
+    # null-safe: a NULL-key polygon's boundary candidates get its WKB too
+    geoms = F.broadcast(polygons.select(F.col(poly_key).alias("__pk__"), F.col(geometry_col).alias("__wkb__")))
+    cand = cand.join(geoms, F.col(poly_key).eqNullSafe(F.col("__pk__")) & (F.col("__cls__") == BOUNDARY), "left")
+    inside = F.pandas_udf(_inside, "boolean")
+    return cand.filter(inside(lon, lat, poly_key, "__wkb__")).drop(*_TEMPS)

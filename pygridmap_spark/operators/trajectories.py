@@ -577,15 +577,18 @@ def contact_events(
     dist = GD.gc_distance_m(
         F.col("_llon"), F.col("_llat"), F.col("_plon"), F.col("_plat")
     )
-    # conservative squared-chord gate (slacked +1e-9 relative so xyz
-    # rounding can never drop a true boundary contact — survivors are a
-    # superset, and the EXACT haversine filter below is unchanged, so the
-    # output is bit-identical); NaN coordinates fail the comparison and
-    # drop, exactly as they fail the haversine filter
+    # conservative squared-chord gate: the chord bound is slacked +1e-9
+    # relative and +1e-12 absolute (6 um on the Earth), so the rounding of
+    # the xyz components and of the haversine's own coordinates — each a
+    # few 1e-16 on the unit sphere, which is ~1e-8 of the chord at a
+    # sub-metre radius — can never drop a true boundary contact. Survivors
+    # are a superset, and the EXACT haversine filter below is unchanged,
+    # so the output is bit-identical; NaN coordinates fail the comparison
+    # and drop, exactly as they fail the haversine filter
     from pygridmap_spark.functions.geodesy import EARTH_RADIUS_M as _R
 
     _half = math.sin(min(float(radius_m) / (2.0 * _R), math.pi / 2.0))
-    _chord2_max = (2.0 * _half) ** 2 * (1.0 + 1e-9)
+    _chord2_max = (2.0 * _half * (1.0 + 1e-9) + 1e-12) ** 2
     _dx = F.col("_lx") - F.col("_px")
     _dy = F.col("_ly") - F.col("_py")
     _dz = F.col("_lz") - F.col("_pz")

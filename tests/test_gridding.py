@@ -149,6 +149,18 @@ def test_grid_maker_polygon_mask_matches_numpy(spark):
         assert r["__within__"] == any(a >= cell_area * (1 - 1e-9) for a in areas)
 
 
+def test_grid_maker_null_mask_row(spark):
+    """A NULL mask row covers nothing: the grid equals the grid of the
+    other rows (it used to fail the mask collect with TypeError)."""
+    polys_df = PG.synthetic_polygons(spark, n=3, bbox=BBOX, seed=5)
+    rows = [(r["poly_id"], r["geometry"]) for r in polys_df.collect()]
+    with_null = spark.createDataFrame([*rows, (99, None)], "poly_id long, geometry binary")
+    kw = dict(cell=(5_000.0, 5_000.0), bbox=BBOX, trim=False)
+    want = grid_flags(GR.grid_maker(spark, mask=wkb_mask(spark, [g for _, g in rows]), **kw))
+    assert grid_flags(GR.grid_maker(spark, mask=with_null, **kw)) == want
+    assert any(i for i, _ in want.values())
+
+
 def test_qtree_classify_parity_with_cellwise(spark):
     """The quadtree classifier decides every cell of the block exactly once
     and agrees with the per-cell numpy clip: ALL_IN = within, BOUNDARY =

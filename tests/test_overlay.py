@@ -145,6 +145,27 @@ def test_area_interpolate_mass_conservation(spark, grid):
     assert out.filter(F.size("__cover__") >= 1).count() == out.count()
 
 
+def test_polygon_overlay_null_geometry(spark, grid):
+    """A NULL source geometry gives no pieces and leaves the other
+    sources' pieces and the interpolated mass unchanged (it used to fail
+    the classifier pass with TypeError)."""
+    polys = PG.synthetic_polygons(spark, n=5, bbox=(20_000.0, 20_000.0, 180_000.0, 180_000.0), seed=3)
+    rows = polys.select("poly_id", "geometry", "pop").collect()
+    with_null = spark.createDataFrame([*rows, (99, None, 1e6)], "poly_id long, geometry binary, pop double")
+    clean = spark.createDataFrame(rows, "poly_id long, geometry binary, pop double")
+
+    def pieces(p):
+        return sorted(
+            (r["cell_id"], r["poly_id"], r["piece_area"])
+            for r in OV.grid_overlay_polygons(grid, p, ["pop"], rule=None).collect()
+        )
+
+    want = pieces(clean)
+    assert pieces(with_null) == want and want
+    total = OV.area_interpolate(spark, with_null, grid, ["pop"]).agg(F.sum("pop")).collect()[0][0]
+    assert total == pytest.approx(sum(r["pop"] for r in rows), rel=1e-9)
+
+
 def test_distributed_polygon_overlay_rules(spark, grid):
     polys = PG.synthetic_polygons(spark, n=4, bbox=(20_000.0, 20_000.0, 180_000.0, 180_000.0), seed=3)
     out = OV.grid_overlay_polygons(grid, polys, ["pop"], rule="sum", area=True, cover=True)

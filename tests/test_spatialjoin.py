@@ -139,6 +139,87 @@ def test_polygon_pip_join_submits_no_job(spark, points_df, geo_polygons):
     assert ran - after  # the probe sees the action's jobs
 
 
+def test_polygon_pip_join_plan_shape(spark, points_df, geo_polygons, tmp_path):
+    """The final AQE plan evaluates each input once: one points scan, one
+    ``_cover`` classifier node, one PIP predicate node and no Union; the
+    cover and the WKB are broadcast, and the points never shuffle."""
+    points_df.write.parquet(str(tmp_path / "pts"))
+    points = spark.read.parquet(str(tmp_path / "pts"))
+    polys = spark.createDataFrame(geo_polygons.collect(), geo_polygons.schema)
+    out = SJ.polygon_pip_join(spark, points, polys, z=6)
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    assert final.count("FileScan parquet") == 1, final
+    assert final.count("MapInPandas") == 1 and "MapInPandas _cover" in final, final
+    assert final.count("ArrowEvalPython") == 1, final
+    assert "Union" not in final, final
+    # every Exchange is one of the two broadcasts (cover, WKB): no shuffle
+    assert final.count("BroadcastExchange") == final.count("Exchange") == 2, final
+
+
+def _pip_pairs(spark, points, polys):
+    return {(r["pid"], r["poly_id"]) for r in SJ.polygon_pip_join(spark, points, polys, z=6).collect()}
+
+
+def test_polygon_pip_join_null_geometry(spark, points_df, geo_polygons):
+    """A NULL geometry row matches nothing and leaves the other rows'
+    matches unchanged (it used to fail the cover pass with TypeError)."""
+    rows = geo_polygons.select("poly_id", "geometry").collect()
+    polys = spark.createDataFrame([*rows, (99, None)], "poly_id long, geometry binary")
+    want = _expected_pip(points_df.collect(), rows)
+    assert _pip_pairs(spark, points_df, polys) == want and len(want) > 0
+
+
+def test_polygon_pip_join_null_key(spark):
+    """A polygon with a NULL key gets the exact ray cast in its boundary
+    cells like any other (its boundary candidates used to drop)."""
+    polys = spark.createDataFrame(
+        [(None, wkb.encode_polygon([[(0.0, 0.0), (40.0, 0.0), (0.0, 40.0)]])), (1, wkb.encode_box(50.0, 0.0, 60.0, 10.0))],
+        "poly_id long, geometry binary",
+    )
+    # (19, 19) is inside the triangle in a boundary cell, (21, 20) outside
+    points = spark.createDataFrame(
+        [(0, 2.0, 2.0), (1, 19.0, 19.0), (2, 21.0, 20.0), (3, 55.0, 5.0)], "pid long, lon double, lat double"
+    )
+    assert _pip_pairs(spark, points, polys) == {(0, None), (1, None), (3, 1)}
+
+
+@pytest.mark.parametrize("name", ["poly_id", "__cls__", "__wkb__"])
+def test_polygon_pip_join_rejects_reserved_columns(spark, points_df, geo_polygons, name):
+    """A points column named like the polygon key or a join temporary
+    raises at call time, naming it (poly_id used to fail deep in the plan
+    with AMBIGUOUS_REFERENCE)."""
+    with pytest.raises(ValueError, match=name):
+        SJ.polygon_pip_join(spark, points_df.withColumn(name, F.lit(1)), geo_polygons, z=6)
+
+
+def test_polygon_pip_join_payload_round_trip(spark):
+    """Timestamp, binary, NULL-string and nullable-long point columns come
+    back unchanged on interior and boundary matches alike."""
+    import datetime as dt
+
+    polys = spark.createDataFrame(
+        [(0, wkb.encode_polygon([[(0.0, 0.0), (40.0, 0.0), (0.0, 40.0)]]))], "poly_id long, geometry binary"
+    )
+    # z=6 cells are 5.625 x 2.8125 deg: (2, 2) lies in an interior cell of
+    # the triangle, (19, 19) inside it in a boundary cell, (21, 20) outside
+    # it in a boundary cell
+    pts = [(2.0, 2.0), (19.0, 19.0), (21.0, 20.0), (-5.0, 5.0)]
+    rows = [
+        (i, x, y, dt.datetime(2024, 1, 1 + i, 12, 30), bytes([i, 0, 255]), None if i % 2 else f"u{i}", None if i == 0 else 10**12 + i)
+        for i, (x, y) in enumerate(pts)
+    ]
+    points = spark.createDataFrame(rows, "pid long, lon double, lat double, ts timestamp, blob binary, url string, n long")
+    want = {r["pid"]: r for r in points.collect()}
+    got = SJ.polygon_pip_join(spark, points, polys, z=6).collect()
+    assert sorted(r["pid"] for r in got) == [0, 1]
+    for r in got:
+        assert r[: len(points.columns)] == want[r["pid"]]
+        assert r["poly_id"] == 0
+
+
 def test_bbox_union_intersection_aggs(spark):
     df = spark.createDataFrame(
         [(0.0, 0.0, 10.0, 10.0), (5.0, 5.0, 20.0, 15.0)],

@@ -142,3 +142,35 @@ def test_destination_at_pole_no_nan(spark):
     lon2, lat2 = GD.destination(F.col("lon"), F.col("lat"), F.lit(0.0), d_m)
     r = df.withColumns({"lon2": lon2, "lat2": lat2}).collect()[0]
     assert not math.isnan(r["lat2"]) and abs(r["lat2"] - 90.0) < 1e-6
+
+
+def test_contact_chord_gate_keeps_sub_metre_boundary_pairs(spark):
+    """At a 0.5 m radius the squared-chord pre-filter keeps every pair the
+    haversine keeps. Each pair sits within 1e-9 relative of the radius,
+    where the xyz rounding alone moves the squared chord by a few 1e-9."""
+    rng = np.random.default_rng(5)
+    n, radius = 400, 0.5
+    lat = rng.uniform(-60.0, 60.0, n)
+    lon = rng.uniform(-170.0, 170.0, n)
+    bearing = rng.uniform(0.0, 2.0 * math.pi, n)
+    d = radius * (1.0 + rng.uniform(-1e-9, 1e-9, n))
+    lat2 = lat + np.degrees(d * np.cos(bearing) / R_M)
+    lon2 = lon + np.degrees(d * np.sin(bearing) / (R_M * np.cos(np.radians(lat))))
+    t0 = datetime(2024, 1, 1)
+    rows = []
+    for i in range(n):
+        rows.append((2 * i, 2 * i, t0, float(lon[i]), float(lat[i])))
+        rows.append((2 * i + 1, 2 * i + 1, t0, float(lon2[i]), float(lat2[i])))
+    pings = spark.createDataFrame(rows, "ping_id long, user_id long, ts timestamp, lon double, lat double")
+    a, b = pings.alias("a"), pings.alias("b")
+    want = {
+        (r[0], r[1])
+        for r in a.join(b, F.col("a.ping_id") + 1 == F.col("b.ping_id"))
+        .filter(F.col("a.ping_id") % 2 == 0)
+        .filter(GD.gc_distance_m(F.col("a.lon"), F.col("a.lat"), F.col("b.lon"), F.col("b.lat")) <= radius)
+        .select("a.ping_id", "b.ping_id")
+        .collect()
+    }
+    got = {(r["ping_a"], r["ping_b"]) for r in TJ.contact_events(pings, radius, 60.0).collect()}
+    assert 0 < len(want) < n
+    assert got == want
