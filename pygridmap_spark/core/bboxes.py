@@ -170,14 +170,21 @@ def build_from_pos(
     return [[x, y, x + width, y + height] for x in idcols for y in idrows]
 
 
+def align_shape(cellsize: Sequence[float], bbox: Bbox) -> list[int]:
+    """(nrows, ncols): the whole cells :func:`align_bbox` snaps ``bbox``
+    out to, counted as integers."""
+    height, width = cellsize
+    xmin, ymin, xmax, ymax = bbox
+    return [int((ymax - ymin - TOL_EPS) / height + 1), int((xmax - xmin - TOL_EPS) / width + 1)]
+
+
 def align_bbox(cellsize: Sequence[float], bbox: Bbox) -> list[float]:
     """Snap a bbox outward so each side is a whole multiple of the cell
     size from the origin-corner (xmin, ymin) — the working core of the
     reference's bbox alignment (base.py:332-344 with TOL_EPS)."""
     height, width = cellsize
-    xmin, ymin, xmax, ymax = bbox
-    nx = int((xmax - xmin - TOL_EPS) / width + 1)
-    ny = int((ymax - ymin - TOL_EPS) / height + 1)
+    xmin, ymin = bbox[0], bbox[1]
+    ny, nx = align_shape(cellsize, bbox)
     return [xmin, ymin, xmin + nx * width, ymin + ny * height]
 
 

@@ -1,10 +1,13 @@
-"""Vectorized numpy geometry kernel (no shapely / GEOS in this container).
+"""Vectorized numpy geometry kernel (no shapely / GEOS dependency).
 
 This is the exact-phase engine behind the two-phase spatial joins:
-point-in-polygon (even-odd ray casting), polygon-clipped-to-rectangle
-(Sutherland–Hodgman — grid cells are axis-aligned rectangles, which is a
-convex clip window, so S-H is exact), and shoelace areas. Everything is
-array-at-a-time so it runs efficiently inside Arrow-batched pandas UDFs.
+point-in-polygon (even-odd ray casting), rect coverage (area(polygon ∩
+rect) for many rects in one evaluation, :func:`multipolygon_rect_areas` —
+the cell classifier's kernel), polygon-clipped-to-rectangle as geometry
+(Sutherland–Hodgman — grid cells are axis-aligned rectangles, a convex
+clip window, so S-H is exact; used where piece geometry is emitted and by
+the union kernels), and shoelace areas. Everything is array-at-a-time so
+it runs efficiently inside Arrow-batched pandas UDFs.
 
 Semantics parity targets (re-derived, not copied):
 - piece area / area_pct:  /root/reference/pygridmap/overlay.py:326-335
@@ -144,8 +147,8 @@ def clip_ring_to_rect(ring: Ring, xmin: float, ymin: float, xmax: float, ymax: f
 
     Scalar-arithmetic inner loop (python floats via .tolist()): identical
     IEEE expressions to the previous numpy-row form — bit-identical
-    output, pinned by an A/B test — but ~3x less per-clip overhead, and
-    this is THE overlay hot kernel (millions of clips per rehearsal)."""
+    output, pinned by an A/B test — but ~3x less per-clip overhead. Cell
+    classification does not clip: it runs :func:`multipolygon_rect_areas`."""
     pts = np.asarray(ring, dtype=np.float64)
     # drop duplicated closing vertex; S-H treats the ring as cyclic
     if len(pts) > 1 and pts[0, 0] == pts[-1, 0] and pts[0, 1] == pts[-1, 1]:
@@ -234,6 +237,80 @@ def multipolygon_clip(
         if clipped and polygon_area(clipped) != 0.0:
             out.append(clipped)
     return out
+
+
+# ---------------------------------------------------------------------------
+# rect coverage: area(polygon ∩ rect) for many rects in one evaluation
+# ---------------------------------------------------------------------------
+
+#: edge x rect elements per array of one :func:`multipolygon_rect_areas` step
+RECT_AREA_BUDGET = 1 << 16
+
+
+def _ring_rect_integrals(ring: Ring, x0, y0, x1, y1) -> tuple[np.ndarray, np.ndarray]:
+    """Signed area (counter-clockwise positive) of an open ring ∩ each rect,
+    and whether any edge meets the closed rect. Per edge, the integral of
+    ``clamp(y(x), y0, y1) - y0`` over the edge's x-range inside
+    ``[x0, x1]``: linear on at most three pieces (below, across, above the
+    rect), summed as trapezoids, signed against the edge's x-direction."""
+    xa, ya = ring[:, :1], ring[:, 1:]
+    nxt = np.concatenate([ring[1:], ring[:1]])
+    xb, yb = nxt[:, :1], nxt[:, 1:]
+    lo = np.maximum(np.minimum(xa, xb), x0)
+    hi = np.minimum(np.maximum(xa, xb), x1)
+    dx = xb - xa
+    vertical = dx == 0
+    with np.errstate(divide="ignore", invalid="ignore"):
+        slope = np.where(vertical, 0.0, (yb - ya) / dx)
+        # y at both ends of the clipped x-range; a vertical edge spans its own ys
+        p = np.where(vertical, ya, ya + (lo - xa) * slope)
+        q = np.where(vertical, yb, ya + (hi - xa) * slope)
+        s, t = np.minimum(p, q), np.maximum(p, q)
+        touched = ((lo <= hi) & (s <= y1) & (t >= y0)).any(axis=0)
+        # shares of the clipped x-range below y0 and above y1
+        span = t - s
+        below = np.where(span > 0, np.clip((y0 - s) / span, 0.0, 1.0), s < y0)
+        above = np.where(span > 0, np.clip((t - y1) / span, 0.0, 1.0), s > y1)
+    across = np.maximum(1.0 - below - above, 0.0)
+    mean = across * ((np.clip(s, y0, y1) + np.clip(t, y0, y1)) / 2 - y0) + above * (y1 - y0)
+    width = np.maximum(hi - lo, 0.0) * -np.sign(dx)
+    return (width * mean).sum(axis=0), touched
+
+
+def multipolygon_rect_areas(mp: MultiPolygon, x0, y0, x1, y1) -> np.ndarray:
+    """``area(mp ∩ [x0, x1] x [y0, y1])`` for K rects given as arrays — the
+    cell classifier's coverage kernel, one numpy evaluation per ring over
+    all rects (chunked to ``RECT_AREA_BUDGET`` edge x rect elements).
+
+    Matches :func:`multipolygon_clip_area` within rounding: each ring is
+    normalised by its own orientation, a polygon is |outer| − Σ|holes|
+    (floored at 0) and parts are summed. A rect that no edge of a ring
+    meets (closed test) takes exactly 0.0 or its full area for that ring,
+    from an even-odd test of its centre, so rects away from the boundary
+    get exact zeros and exact full covers, never rounding residue."""
+    x0, y0, x1, y1 = (np.asarray(v, dtype=np.float64).reshape(-1) for v in (x0, y0, x1, y1))
+    full = (x1 - x0) * (y1 - y0)
+    total = np.zeros(len(x0))
+    for poly in mp:
+        part = np.zeros(len(x0))
+        for i, ring in enumerate(poly):
+            pts = _ring_open(ring)
+            sign = np.sign(ring_signed_area(pts))
+            if not sign:
+                continue
+            area = np.empty(len(x0))
+            step = max(1, RECT_AREA_BUDGET // len(pts))
+            for k in range(0, len(x0), step):
+                sl = slice(k, k + step)
+                signed, touched = _ring_rect_integrals(pts, x0[sl], y0[sl], x1[sl], y1[sl])
+                area[sl] = sign * signed
+                far = np.flatnonzero(~touched) + k
+                if len(far):
+                    cx, cy = (x0[far] + x1[far]) / 2, (y0[far] + y1[far]) / 2
+                    area[far] = np.where(points_in_ring(cx, cy, pts), full[far], 0.0)
+            part += area if i == 0 else -area
+        total += np.maximum(part, 0.0)
+    return total
 
 
 def rect_intersection_area(

@@ -12,11 +12,12 @@ and grid size:
 
 1. driver computes grid/tile shape constants (core.bboxes),
 2. the processing tiles are one ``range`` DataFrame; one Arrow pass with
-   the broadcast mask runs :func:`classify_blocks` per tile — the
-   reference's quadtree (gridding.py:191-255), whose prll mode emits the
-   same grid — and returns decided blocks: whole interior (or, for
-   trim=False, exterior) blocks and 1x1 boundary cells (exterior when
-   their clip is at most 1e-9 cell areas),
+   the broadcast mask runs :func:`classify_blocks` over each batch's
+   tiles — the reference's quadtree (gridding.py:191-255), whose prll mode
+   emits the same grid, one vectorized rect-coverage evaluation per level
+   — and returns decided blocks: whole interior (or, for trim=False,
+   exterior) blocks and 1x1 boundary cells (exterior when their covered
+   area is at most 1e-9 cell areas),
 3. blocks expand to cells in the JVM (``sequence``/``explode``), their
    flags literals of the block class — no per-cell geometry work,
 4. trim/interior filters (gridding.py:169-172, 186-188) drop blocks
@@ -28,6 +29,7 @@ from __future__ import annotations
 import math
 from typing import Iterator, Sequence
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,6 +41,8 @@ from pygridmap_spark.core import wkb
 
 ALL_OUT, BOUNDARY, ALL_IN = 0, 1, 2
 EDGE_EPS = 1e-12
+#: the half-open index block columns of every block frame
+BLOCK_COLS = ["__ix0__", "__iy0__", "__ix1__", "__iy1__"]
 
 
 def lattice_index(v, origin: float, size: float):
@@ -73,66 +77,69 @@ def _decode_mask(mask_rows: Sequence[bytes]):
     return geoms
 
 
-def classify_blocks(geoms, origin, cell, block, outside: bool = False) -> list:
-    """Quadtree classification of a lattice block against a mask — the one
+def classify_blocks(geoms, origin, cell, blocks, outside: bool = False) -> pd.DataFrame:
+    """Quadtree classification of lattice blocks against a mask — the one
     cell classifier of ``grid_maker``, ``spatialjoin.polygon_pip_join`` and
     ``overlay.grid_overlay_polygons`` (reference gridding.py:146-151,
     180-182, 191-255).
 
     ``geoms`` is a list of multipolygons, OR-reduced per geometry (never
     summed across overlapping rows); ``origin`` (x0, y0) and ``cell``
-    (height, width) define the lattice; ``block`` is the half-open integer
-    range ``[ix0, ix1) x [iy0, iy1)``. Returns decided blocks
-    ``(ix0, iy0, ix1, iy1, cls, area)``: ALL_IN blocks (some geometry covers
-    the block up to less than 1e-9 cell areas, per CELL so the class holds
-    for every cell in it), BOUNDARY 1x1 cells (some clip positive, however
-    small), and ALL_OUT blocks (every clip exactly zero) only when
-    ``outside``. ``area`` is the largest single-geometry clip (an ALL_IN
-    block stops at the first geometry that covers it); ``grid_maker``
-    applies the 1e-9 cell-area tolerance to it to read a sliver as outside.
-    Blocks are index ranges, so a split always shrinks its block."""
+    (height, width) define the lattice; ``blocks`` holds rows ``(ix0, iy0,
+    ix1, iy1)``, half-open integer ranges ``[ix0, ix1) x [iy0, iy1)``.
+    Level-synchronous: every undecided block of one quadtree level goes
+    through one :func:`geometry.multipolygon_rect_areas` call per geometry.
+    Returns the decided blocks as a frame ``__ix0__, __iy0__, __ix1__,
+    __iy1__, __cls__, __area__``: ALL_IN blocks (some geometry covers the
+    block up to less than 1e-9 cell areas, per CELL so the class holds for
+    every cell in it), BOUNDARY 1x1 cells (some covered area positive,
+    however small), and ALL_OUT blocks (every covered area exactly zero:
+    the kernel gives a block no polygon edge meets exactly 0.0 or its full
+    area) only when ``outside``. ``__area__`` is the largest
+    single-geometry covered area, within rounding of the exact clip;
+    ``grid_maker`` applies the 1e-9 cell-area tolerance to it to read a
+    sliver as outside. Blocks are index ranges, so a split always shrinks
+    its block."""
     x0, y0 = origin
     height, width = cell
     tol = 1e-9 * height * width
-    boxed = []
-    for g in geoms:
-        try:
-            boxed.append((g, G.multipolygon_bbox(g)))
-        except ValueError:
-            continue
-    out = []
-    stack = [tuple(block)] if block[2] > block[0] and block[3] > block[1] else []
-    while stack:
-        ix0, iy0, ix1, iy1 = stack.pop()
+    boxed = [(g, G.multipolygon_bbox(g)) for g in geoms if any(len(p) for p in g)]
+    level = np.asarray(blocks, dtype=np.int64).reshape(-1, 4)
+    out = [(np.empty((0, 4), np.int64), np.empty(0, np.int32), np.empty(0))]
+    while len(level):
+        level = level[(level[:, 2] > level[:, 0]) & (level[:, 3] > level[:, 1])]
+        ix0, iy0, ix1, iy1 = level.T
         xmin, ymin = x0 + ix0 * width, y0 + iy0 * height
         xmax, ymax = x0 + ix1 * width, y0 + iy1 * height
-        full = (xmax - xmin) * (ymax - ymin) - tol
-        cls, area = ALL_OUT, 0.0
+        area = np.zeros(len(level))
         for g, (bxmin, bymin, bxmax, bymax) in boxed:
-            if bxmax < xmin or bxmin > xmax or bymax < ymin or bymin > ymax:
-                continue
-            clipped = G.multipolygon_clip_area(g, xmin, ymin, xmax, ymax)
-            area = max(area, clipped)
-            if clipped >= full:
-                cls = ALL_IN
-                break
-            if clipped > 0.0:
-                cls = BOUNDARY
-        if cls == BOUNDARY and (ix1 - ix0 > 1 or iy1 - iy0 > 1):
-            mx = ix0 + (ix1 - ix0 + 1) // 2
-            my = iy0 + (iy1 - iy0 + 1) // 2
-            for q in ((ix0, iy0, mx, my), (mx, iy0, ix1, my), (ix0, my, mx, iy1), (mx, my, ix1, iy1)):
-                if q[2] > q[0] and q[3] > q[1]:
-                    stack.append(q)
-        elif cls != ALL_OUT or outside:
-            out.append((ix0, iy0, ix1, iy1, cls, area))
-    return out
+            hit = np.flatnonzero((bxmax >= xmin) & (bxmin <= xmax) & (bymax >= ymin) & (bymin <= ymax))
+            if len(hit):
+                clip = G.multipolygon_rect_areas(g, xmin[hit], ymin[hit], xmax[hit], ymax[hit])
+                area[hit] = np.maximum(area[hit], clip)
+        full = (xmax - xmin) * (ymax - ymin) - tol
+        cls = np.where(area >= full, ALL_IN, np.where(area > 0.0, BOUNDARY, ALL_OUT)).astype(np.int32)
+        split = (cls == BOUNDARY) & ((ix1 - ix0 > 1) | (iy1 - iy0 > 1))
+        keep = ~split & ((cls != ALL_OUT) | outside)
+        out.append((level[keep], cls[keep], area[keep]))
+        ix0, iy0, ix1, iy1 = level[split].T
+        mx, my = ix0 + (ix1 - ix0 + 1) // 2, iy0 + (iy1 - iy0 + 1) // 2
+        level = np.concatenate(
+            [
+                np.column_stack(q)
+                for q in ((ix0, iy0, mx, my), (mx, iy0, ix1, my), (ix0, my, mx, iy1), (mx, my, ix1, iy1))
+            ]
+        )
+    rects, cls, area = (np.concatenate(v) for v in zip(*out))
+    frame = pd.DataFrame(rects, columns=BLOCK_COLS)
+    frame["__cls__"], frame["__area__"] = cls, area
+    return frame
 
 
 def classify_polygons(keys, wkbs, origin, cell):
     """``(key, multipolygon, blocks)`` per non-empty WKB polygon row: its
-    :func:`classify_blocks` over the :func:`lattice_span` of its bbox,
-    unclamped. NULL and empty geometries yield nothing."""
+    :func:`classify_blocks` frame over the :func:`lattice_span` of its
+    bbox, unclamped. NULL and empty geometries yield nothing."""
     (x0, y0), (height, width) = origin, cell
     for key, buf in zip(keys, wkbs):
         mp = None if buf is None else wkb.decode_multipolygon(bytes(buf))
@@ -140,7 +147,7 @@ def classify_polygons(keys, wkbs, origin, cell):
             continue  # NULL or empty geometry: no cells
         bxmin, bymin, bxmax, bymax = G.multipolygon_bbox(mp)
         (ix0, ix1), (iy0, iy1) = lattice_span(bxmin, bxmax, x0, width), lattice_span(bymin, bymax, y0, height)
-        yield key, mp, classify_blocks([mp], origin, cell, (ix0, iy0, ix1, iy1))
+        yield key, mp, classify_blocks([mp], origin, cell, [(ix0, iy0, ix1, iy1)])
 
 
 def explode_blocks(blocks: DataFrame, x: str, y: str) -> DataFrame:
@@ -215,6 +222,8 @@ def grid_maker(
         mask_rows = [bytes(r[0]) for r in mask.select(geometry_col).collect() if r[0] is not None]
         polys = _decode_mask(mask_rows)  # list of per-row multipolygons
         if bbox is None:
+            if not polys:
+                raise ValueError("mask has no non-empty geometry to take the grid extent from; pass a bbox")
             boxes = [G.multipolygon_bbox(g) for g in polys]
             bbox = [
                 min(b[0] for b in boxes),
@@ -227,10 +236,15 @@ def grid_maker(
     by, bx = _buffer_amounts(buffer)
     if by or bx:
         bbox = [bbox[0] - bx, bbox[1] - by, bbox[2] + bx, bbox[3] + by]
-    bbox = B.align_bbox([height, width], bbox) if crop else list(bbox)
-    nrows, ncols = B.get_grid_shape([height, width], bbox)
+    if crop:
+        # the aligned bbox holds whole cells: count them as integers, never
+        # as the ceil of a float quotient that may land a hair above one
+        nrows, ncols = B.align_shape([height, width], bbox)
+        bbox = B.align_bbox([height, width], bbox)
+    else:
+        nrows, ncols = B.get_grid_shape([height, width], bbox)
     tilesize = list(tile) if tile else [32, 32]
-    nytiles, nxtiles = B.get_tile_shape([height, width], tilesize, bbox)
+    nytiles, nxtiles = -(-nrows // tilesize[0]), -(-ncols // tilesize[1])
     xmin, ymin = bbox[0], bbox[1]
 
     # one row per processing tile, its cell block cropped to the grid
@@ -254,15 +268,10 @@ def grid_maker(
         def _classify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             geoms = _decode_mask(bcast.value)
             for batch in batches:
-                # a clip of at most 1e-9 cell areas does not intersect
-                rows = [
-                    (*b, ALL_OUT if cls == BOUNDARY and area <= tol else cls)
-                    for blk in batch.itertuples(index=False)
-                    for *b, cls, area in classify_blocks(geoms, origin, lattice, blk, outside=not trim)
-                ]
-                yield pd.DataFrame(
-                    rows, columns=["__ix0__", "__iy0__", "__ix1__", "__iy1__", "__cls__"]
-                )
+                out = classify_blocks(geoms, origin, lattice, batch[BLOCK_COLS], outside=not trim)
+                # a covered area of at most 1e-9 cell areas does not intersect
+                out.loc[(out["__cls__"] == BOUNDARY) & (out["__area__"] <= tol), "__cls__"] = ALL_OUT
+                yield out.drop(columns="__area__")
 
         blocks = tiles.mapInPandas(
             _classify, "__ix0__ long, __iy0__ long, __ix1__ long, __iy1__ long, __cls__ int"

@@ -25,8 +25,9 @@ Two physical paths, chosen by the shape of the right side:
    runs the quadtree cell classifier over each polygon's bbox block on the
    grid's lattice (the cell grid IS the spatial index — replaces the
    reference's R-tree, overlay.py:257-260): interior blocks expand to
-   whole-cell pieces in the JVM, boundary cells carry their exact clip
-   area, and the pieces, keyed on the lattice, join the grid once.
+   whole-cell pieces in the JVM, boundary cells carry their covered area
+   (the rect-coverage kernel, within rounding of the exact clip), and the
+   pieces, keyed on the lattice, join the grid once.
 """
 
 from __future__ import annotations
@@ -376,40 +377,51 @@ def grid_overlay_polygons(
        lattice read off ``cells`` (cells of more than one size raise
        ValueError); only block rows come back,
     2. interior blocks expand to cells in the JVM, each piece the whole
-       cell's area; boundary cells carry their exact clip area, however
-       small (every piece of positive area is kept). So sources must be
-       valid: overlapping parts of one multipolygon count once in an
-       interior cell but sum in a boundary clip and in the source area,
+       cell's area; boundary cells carry their covered area from the
+       classifier's rect-coverage kernel (within rounding of the exact
+       clip), however small (every piece of positive area is kept). So
+       sources must be valid: overlapping parts of one multipolygon count
+       once in an interior cell but sum in a boundary cell and in the
+       source area,
     3. pieces are keyed on the lattice ``(ix, iy)``: rules aggregate on
        that key before ONE join onto ``cells`` (rule=None joins it once).
 
     ``emit_wkb=True`` (rule=None only) carries each piece's CLIPPED
     geometry (cell ∩ polygon, holes preserved) as WKB: the clip of a
-    boundary cell, the rectangle of an interior one.
+    boundary cell, the rectangle of an interior one; a boundary piece's
+    area is then its clip's own.
     """
     _check_how(how, rule)
     _check_emit_wkb(emit_wkb, rule)
     CRS.check_layers_crs(cells, polygons, "geometry", geometry_col, context="grid_overlay_polygons")
     gx0, gy0, gw, gh = _grid_meta(cells, "grid cells", uniform=True)
     origin, lattice = (gx0, gy0), (gh, gw)
-    cols = ["__ix0__", "__iy0__", "__ix1__", "__iy1__", "__cls__", "__area__", poly_key, "__parea__", "__geom__"]
+    cols = [*GR.BLOCK_COLS, "__cls__", "__area__", poly_key, "__parea__", "__geom__"]
     schema = (
         "__ix0__ long, __iy0__ long, __ix1__ long, __iy1__ long, __cls__ int, __area__ double, "
         f"{poly_key} {dict(polygons.dtypes)[poly_key]}, __parea__ double, __geom__ binary"
     )
 
+    def _clip_pieces(mp, blocks: pd.DataFrame) -> pd.DataFrame:
+        """emit_wkb: each boundary block's clipped geometry as WKB, its area
+        the clip's own, so shoelace(piece WKB) == piece_area exactly."""
+        geom, area = [None] * len(blocks), blocks["__area__"].to_numpy().copy()
+        rects = blocks[GR.BLOCK_COLS].to_numpy()
+        for i in np.flatnonzero(blocks["__cls__"].to_numpy() == GR.BOUNDARY):
+            ix0, iy0, ix1, iy1 = rects[i]
+            clip = G.multipolygon_clip(mp, gx0 + ix0 * gw, gy0 + iy0 * gh, gx0 + ix1 * gw, gy0 + iy1 * gh)
+            geom[i], area[i] = wkb.encode_multipolygon(clip), G.multipolygon_area(clip)
+        return blocks.assign(__area__=area, __geom__=geom)
+
     def _classify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
-            rows = []
-            for pid, mp, blocks in GR.classify_polygons(batch[poly_key], batch[geometry_col], origin, lattice):
-                parea = G.multipolygon_area(mp)
-                for ix0, iy0, ix1, iy1, cls, a in blocks:
-                    clip = None
-                    if emit_wkb and cls == GR.BOUNDARY:
-                        rect = (gx0 + ix0 * gw, gy0 + iy0 * gh, gx0 + ix1 * gw, gy0 + iy1 * gh)
-                        clip = wkb.encode_multipolygon(G.multipolygon_clip(mp, *rect))
-                    rows.append((ix0, iy0, ix1, iy1, cls, a, pid, parea, clip))
-            yield pd.DataFrame(rows, columns=cols)
+            frames = [
+                (_clip_pieces(mp, blocks) if emit_wkb else blocks.assign(__geom__=None)).assign(
+                    **{poly_key: pid, "__parea__": G.multipolygon_area(mp)}
+                )
+                for pid, mp, blocks in GR.classify_polygons(batch[poly_key], batch[geometry_col], origin, lattice)
+            ]
+            yield pd.concat(frames, ignore_index=True)[cols] if frames else pd.DataFrame(columns=cols)
 
     blocks = polygons.select(poly_key, geometry_col).mapInPandas(_classify, schema)
     if columns:

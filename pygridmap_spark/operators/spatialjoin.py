@@ -9,13 +9,14 @@ The exact phase is then:
 
 - rects: a residual range predicate (pure Catalyst, codegen),
 - WKB polygons: one Arrow pass per polygon row runs the shared quadtree
-  classifier (``gridding.classify_blocks``, exact clip areas — the
-  reference's coarse short-circuit, gridding.py:146-151) over its cover
-  block. The candidates then run one branch: points in boundary cells —
-  any cell with a positive clip, however small the polygon — get their
-  polygon's WKB by a broadcast left join on the id, and one scalar pandas
-  UDF (Spark's ArrowEvalPython) passes interior candidates (NULL WKB) with
-  zero geometry work and ray-casts the rest (gridding.py:180-182's J2).
+  classifier (``gridding.classify_blocks`` on the vectorized rect-coverage
+  kernel — the reference's coarse short-circuit, gridding.py:146-151) over
+  its cover block. The candidates then run one branch: points in boundary
+  cells — any cell with a positive covered area, however small the
+  polygon — get their polygon's WKB by a broadcast left join on the id,
+  and one scalar pandas UDF (Spark's ArrowEvalPython) passes interior
+  candidates (NULL WKB) with zero geometry work and ray-casts the rest
+  (gridding.py:180-182's J2).
   Only its four argument columns cross into Python, and every input is
   read once per action.
 
@@ -36,6 +37,7 @@ from pyspark.sql import functions as F
 from pygridmap_spark.core import geometry as G
 from pygridmap_spark.core import wkb
 from pygridmap_spark.operators.gridding import (
+    BLOCK_COLS,
     BOUNDARY,
     classify_polygons,
     explode_blocks,
@@ -121,13 +123,14 @@ def polygon_pip_join(
 
     def _cover(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
-            rows = [
-                (*b, pid)
+            frames = [
+                blocks.drop(columns="__area__").assign(**{poly_key: pid})
                 for pid, _, blocks in classify_polygons(batch[poly_key], batch[geometry_col], origin, lattice)
-                for *b, _ in blocks
             ]
-            yield pd.DataFrame(
-                rows, columns=["__ix0__", "__iy0__", "__ix1__", "__iy1__", "__cls__", poly_key]
+            yield (
+                pd.concat(frames, ignore_index=True)
+                if frames
+                else pd.DataFrame(columns=[*BLOCK_COLS, "__cls__", poly_key])
             )
 
     def _inside(x: pd.Series, y: pd.Series, pid: pd.Series, buf: pd.Series) -> pd.Series:

@@ -1,5 +1,7 @@
 """M0 goldens: numpy geometry kernel (PIP, clipping, areas, WKB)."""
 
+from fractions import Fraction
+
 import numpy as np
 import pytest
 
@@ -411,3 +413,119 @@ def test_clip_ring_scalar_path_bit_identical_to_numpy_form():
         b = G.clip_ring_to_rect(ring, x0, y0, x0 + w, y0 + h)
         assert a.shape == b.shape
         assert np.array_equal(a, b)
+
+
+# ---------------------------------------------------------------------------
+# multipolygon_rect_areas against an exact rational oracle
+# ---------------------------------------------------------------------------
+
+
+def _exact_clip_area(mp, rect):
+    """area(mp ∩ rect) in exact rationals: Sutherland–Hodgman of each ring
+    against the rect, shoelace, |outer| − Σ|holes| floored at 0 per
+    polygon, parts summed."""
+    x0, y0, x1, y1 = map(Fraction, rect)
+
+    def cut_x(p, q, x):
+        return (x, p[1] + (x - p[0]) * (q[1] - p[1]) / (q[0] - p[0]))
+
+    def cut_y(p, q, y):
+        return (p[0] + (y - p[1]) * (q[0] - p[0]) / (q[1] - p[1]), y)
+
+    sides = (
+        (lambda p: p[0] >= x0, lambda p, q: cut_x(p, q, x0)),
+        (lambda p: p[0] <= x1, lambda p, q: cut_x(p, q, x1)),
+        (lambda p: p[1] >= y0, lambda p, q: cut_y(p, q, y0)),
+        (lambda p: p[1] <= y1, lambda p, q: cut_y(p, q, y1)),
+    )
+
+    def clipped_area(ring):
+        pts = [(Fraction(x), Fraction(y)) for x, y in ring]
+        for inside, cut in sides:
+            out = []
+            for p, q in zip(pts, pts[1:] + pts[:1]):
+                if inside(p):
+                    out.append(p)
+                if inside(p) != inside(q):
+                    out.append(cut(p, q))
+            pts = out
+        return abs(sum(p[0] * q[1] - q[0] * p[1] for p, q in zip(pts, pts[1:] + pts[:1]))) / 2
+
+    total = Fraction(0)
+    for poly in mp:
+        total += max(clipped_area(poly[0]) - sum(clipped_area(h) for h in poly[1:]), Fraction(0))
+    return total
+
+
+def _rings(mp):
+    return [[np.array(r, dtype=float) for r in poly] for poly in mp]
+
+
+L_SHAPE = [(0.0, 0.0), (4.0, 0.0), (4.0, 2.0), (2.0, 2.0), (2.0, 4.0), (0.0, 4.0)]
+HOLED_TRIANGLE = [
+    [(0.0, 0.0), (6.0, 0.5), (3.0, 5.5)],
+    [(2.0, 1.0), (3.0, 3.0), (4.0, 1.5)],
+]
+DIAMONDS = [
+    [[(7.0, 2.0), (8.5, 0.5), (10.0, 2.0), (8.5, 3.5)]],
+    [[(7.25, 5.0), (8.1, 4.2), (9.7, 5.3), (8.3, 6.9), (7.0, 5.0)]],
+]
+
+
+@pytest.mark.parametrize(
+    "mp",
+    [
+        [[L_SHAPE]],  # counter-clockwise, unclosed, vertical and horizontal edges
+        [[L_SHAPE[::-1] + [L_SHAPE[-1]]]],  # clockwise, closed
+        [HOLED_TRIANGLE],  # both rings counter-clockwise
+        [[HOLED_TRIANGLE[0][::-1], HOLED_TRIANGLE[1]]],  # clockwise outer
+        DIAMONDS,  # multipolygon, vertices on cell lines and corners
+    ],
+)
+def test_rect_areas_match_exact_oracle(mp):
+    """Unit lattice cells (vertices on their lines and corners), half-cell
+    shifted cells, and random rects: within 1e-9 of each rect's area of
+    the exact clip; rects the polygon does not reach are exactly 0.0 and
+    covered ones exactly their area."""
+    rng = np.random.default_rng(7)
+    gx, gy = np.meshgrid(np.arange(-1.0, 11.0), np.arange(-1.0, 8.0))
+    cells = np.column_stack([gx.ravel(), gy.ravel(), gx.ravel() + 1, gy.ravel() + 1])
+    rects = np.concatenate(
+        [
+            cells,
+            cells[:, [0, 1, 0, 1]] + [0.5, 0.5, 1.0, 1.5],
+            np.column_stack([rng.uniform(-1, 11, (60, 2)), rng.uniform(0.05, 4.0, (60, 2))]) @ np.array(
+                [[1, 0, 1, 0], [0, 1, 0, 1], [0, 0, 1, 0], [0, 0, 0, 1]], dtype=float
+            ),
+            [[20.0, 20.0, 21.0, 21.0], [-5.0, -5.0, -1.0, 12.0]],  # not reached
+        ]
+    )
+    got = G.multipolygon_rect_areas(_rings(mp), *rects.T)
+    full = (rects[:, 2] - rects[:, 0]) * (rects[:, 3] - rects[:, 1])
+    want = np.array([float(_exact_clip_area(mp, r)) for r in rects.tolist()])
+    assert np.all(np.abs(got - want) <= 1e-9 * full)
+    assert got[-2] == 0.0 and got[-1] == 0.0
+    bbox = G.multipolygon_bbox(_rings(mp))
+    far = (rects[:, 0] > bbox[2]) | (rects[:, 2] < bbox[0]) | (rects[:, 1] > bbox[3]) | (rects[:, 3] < bbox[1])
+    assert far.sum() > 10 and np.all(got[far] == 0.0)
+    assert G.multipolygon_rect_areas(_rings(mp), [], [], [], []).shape == (0,)
+
+
+def test_rect_areas_covered_and_chunked(monkeypatch):
+    """A rect no edge meets inside the polygon takes exactly its full area,
+    in either orientation, and one inside a hole exactly 0.0; a chunk
+    budget smaller than one ring's edges gives the same areas, rect for
+    rect."""
+    for ring in (L_SHAPE, L_SHAPE[::-1]):
+        assert G.multipolygon_rect_areas(_rings([[ring]]), [0.25], [0.25], [1.75], [3.5])[0] == 1.5 * 3.25
+    mp = _rings([HOLED_TRIANGLE, *DIAMONDS])
+    rects = np.array([[3.0, 0.75, 3.5, 0.875], [2.9, 1.6, 3.1, 1.8], [8.0, 1.5, 9.0, 2.5], [-1.0, -1.0, 11.0, 8.0]])
+    got = G.multipolygon_rect_areas(mp, *rects.T)
+    assert got.tolist()[:3] == [0.5 * 0.125, 0.0, 1.0]
+    assert got[3] == pytest.approx(G.multipolygon_area(mp), rel=1e-12)
+    rng = np.random.default_rng(3)
+    lo = rng.uniform(-1, 11, (500, 2))
+    many = np.column_stack([lo, lo + rng.uniform(0.01, 2.0, (500, 2))])
+    want = G.multipolygon_rect_areas(mp, *many.T)
+    monkeypatch.setattr(G, "RECT_AREA_BUDGET", 7)
+    assert np.array_equal(G.multipolygon_rect_areas(mp, *many.T), want)

@@ -67,7 +67,7 @@ def expand(blocks, tol=0.0):
     a BOUNDARY clip of at most ``tol`` reads as ALL_OUT, as grid_maker
     reads it."""
     out = {}
-    for ix0, iy0, ix1, iy1, cls, area in blocks:
+    for ix0, iy0, ix1, iy1, cls, area in blocks.itertuples(index=False):
         if cls == GR.BOUNDARY and area <= tol:
             cls = GR.ALL_OUT
         for ix in range(ix0, ix1):
@@ -169,13 +169,13 @@ def test_qtree_classify_parity_with_cellwise(spark):
     geoms = [wkb.decode_multipolygon(bytes(r["geometry"])) for r in polys_df.collect()]
     cell = (12_500.0, 12_500.0)  # 8x8 grid
     tol = 1e-9 * cell[0] * cell[1]
-    blocks = GR.classify_blocks(geoms, (0.0, 0.0), cell, (0, 0, 8, 8), outside=True)
+    blocks = GR.classify_blocks(geoms, (0.0, 0.0), cell, [(0, 0, 8, 8)], outside=True)
     got = expand(blocks, tol)
     want = cellwise(geoms, (0.0, 0.0), cell, 8, 8)
     assert {k: FLAGS[c] for k, c in got.items()} == want
     assert set(got.values()) == {GR.ALL_IN, GR.BOUNDARY, GR.ALL_OUT}
     # without outside=True, exterior blocks are not returned
-    inside = expand(GR.classify_blocks(geoms, (0.0, 0.0), cell, (0, 0, 8, 8)))
+    inside = expand(GR.classify_blocks(geoms, (0.0, 0.0), cell, [(0, 0, 8, 8)]))
     assert inside == {k: c for k, c in expand(blocks).items() if c != GR.ALL_OUT}
 
 
@@ -212,8 +212,8 @@ def test_qtree_terminates_on_float_origin(spark):
     tri = wkb.encode_polygon([[(0.0, 2.063), (1.0, 2.063), (0.0, 4.063)]])
     mask = wkb_mask(spark, [tri])
     with alarm(10, "classify_blocks"):
-        blocks = GR.classify_blocks([wkb.decode_multipolygon(tri)], (0.0, 2.063), (1.0, 1.0), (0, 0, 1, 2))
-    assert sorted(b[:5] for b in blocks) == [(0, 0, 1, 1, GR.BOUNDARY), (0, 1, 1, 2, GR.BOUNDARY)]
+        blocks = GR.classify_blocks([wkb.decode_multipolygon(tri)], (0.0, 2.063), (1.0, 1.0), [(0, 0, 1, 2)])
+    assert sorted(b[:5] for b in blocks.itertuples(index=False)) == [(0, 0, 1, 1, GR.BOUNDARY), (0, 1, 1, 2, GR.BOUNDARY)]
     key = ["cell_x", "cell_y", "__intersects__", "__within__"]
     for mode in ("qtree", "prll"):
         got = {tuple(r[k] for k in key) for r in GR.grid_maker(spark, mask=mask, cell=(1.0, 1.0), mode=mode).collect()}
@@ -283,27 +283,27 @@ def test_classifier_differential_seeded(spark):
             nx, ny = rng.randint(9, 21), rng.randint(9, 21)
             bbox = (x0, y0, x0 + nx * w, y0 + ny * h)
             tol = 1e-9 * h * w
-            # the grid shape (not under test here) is grid_maker's own
-            ny, nx = B.get_grid_shape((h, w), B.align_bbox((h, w), bbox))
             rows = layer(*bbox)
             geoms = [wkb.decode_multipolygon(b) for b in rows]
             want = cellwise(geoms, (x0, y0), (h, w), nx, ny)
-            blocks = GR.classify_blocks(geoms, (x0, y0), (h, w), (0, 0, nx, ny), outside=True)
+            blocks = GR.classify_blocks(geoms, (x0, y0), (h, w), [(0, 0, nx, ny)], outside=True)
             assert {k: FLAGS[c] for k, c in expand(blocks, tol).items()} == want
-            # areas: a BOUNDARY cell's is its largest single-row clip, exactly;
-            # an ALL_IN block's is its covering row's clip: the block's own
-            # area up to the tolerance, unless that row is the multipolygon,
-            # whose random parts may overlap and then sum past it
-            for ix0, iy0, ix1, iy1, cls, a in blocks:
+            # areas: a block's is its largest single-row clip, within 1e-9 of
+            # the block's area (one cell's for BOUNDARY) of the S-H clip; an
+            # ALL_IN block's is its own area up to the tolerance, unless the
+            # largest clip is the multipolygon's, whose random parts may
+            # overlap and then sum past it; an ALL_OUT block's is exactly 0
+            for ix0, iy0, ix1, iy1, cls, a in blocks.itertuples(index=False):
                 clips = [clip(g, x0, y0, h, w, ix0, iy0, ix1, iy1) for g in geoms]
-                if cls == GR.BOUNDARY:
-                    assert a == max(clips)
-                elif cls == GR.ALL_IN:
-                    block_area = (x0 + ix1 * w - (x0 + ix0 * w)) * (y0 + iy1 * h - (y0 + iy0 * h))
-                    assert a in clips and a >= block_area - tol
-                    assert a <= block_area + tol or clips.index(a) == 1
-                else:
+                ncells = (ix1 - ix0) * (iy1 - iy0)
+                if cls == GR.ALL_OUT:
                     assert a == 0.0
+                else:
+                    assert abs(a - max(clips)) <= tol * ncells
+                if cls == GR.ALL_IN:
+                    block_area = (x0 + ix1 * w - (x0 + ix0 * w)) * (y0 + iy1 * h - (y0 + iy0 * h))
+                    assert a >= block_area - tol
+                    assert a <= block_area + tol * ncells or max(clips) == clips[1]
             kw = dict(mask=wkb_mask(spark, rows), cell=(h, w), bbox=bbox, tile=(4, 4))
             full = GR.grid_maker(spark, trim=False, **kw).collect()
             assert {(r["cell_x"], r["cell_y"]): (r["__intersects__"], r["__within__"]) for r in full} == want
@@ -313,11 +313,12 @@ def test_classifier_differential_seeded(spark):
             assert got == {k: v for k, v in want.items() if v[1]}
 
             # overlay pieces against the per-cell clip on the lattice the
-            # overlay reads off the cells: boundary pieces exactly, interior
-            # ones (the whole cell's area) within the tolerance. Sources: the
-            # same rows, but a multipolygon with disjoint parts instead of
-            # the random one (overlapping parts are invalid geometry, whose
-            # interior pieces count the cell once, ROADMAP item 6), and a
+            # overlay reads off the cells: the same piece keys, and areas
+            # (the whole cell's for an interior piece) within 1e-9 cell
+            # areas of the S-H clip. Sources: the same rows, but a
+            # multipolygon with disjoint parts instead of the random one
+            # (overlapping parts are invalid geometry, whose interior
+            # pieces count the cell once, ROADMAP item 6), and a
             # sub-tolerance source on a lattice corner
             cx, cy, pr = (bbox[0] + bbox[2]) / 2, (bbox[1] + bbox[3]) / 2, 0.2 * min(nx * w, ny * h)
             parts = wkb.encode_multipolygon([[ngon(cx - 1.2 * pr, cy, pr)], [ngon(cx + 1.2 * pr, cy, pr)]])
@@ -345,7 +346,7 @@ def test_classifier_differential_seeded(spark):
             assert pieces.keys() == want_pieces.keys()
             assert sum(pid == len(sources) - 1 for _, pid in pieces) == 4
             for k, a in want_pieces.items():
-                assert pieces[k] == a or (a >= lat[2] * lat[3] - 2 * tol and abs(pieces[k] - a) <= tol)
+                assert abs(pieces[k] - a) <= tol
 
         # mass of a sub-tolerance source straddling a lattice corner on the
         # coordinate origin (off it: test_sub_tolerance_mass_off_origin)
@@ -388,6 +389,68 @@ def tiny_source_mass(spark, corner, h, w):
 )
 def test_sub_tolerance_mass_off_origin(spark):
     assert tiny_source_mass(spark, 50.0, 1.3, 0.7) == pytest.approx(7.0, rel=1e-9)
+
+
+def test_grid_maker_all_empty_mask(spark):
+    """A mask whose rows are all NULL or empty has no extent: without a
+    bbox grid_maker says so (it failed on ``min()`` of an empty sequence);
+    with one, no cell intersects it."""
+    mask = spark.createDataFrame([(0, None), (1, wkb.encode_multipolygon([]))], "poly_id long, geometry binary")
+    with pytest.raises(ValueError, match="no non-empty geometry.*bbox"):
+        GR.grid_maker(spark, mask=mask, cell=(10_000.0, 10_000.0))
+    assert GR.grid_maker(spark, mask=mask, cell=(10_000.0, 10_000.0), bbox=BBOX).count() == 0
+
+
+def test_grid_shape_on_float_lattice(spark):
+    """Origin ~ -31.9, cell width ~ 1.38: the aligned bbox is 11 cells wide,
+    but its width over the cell width reads 11.000000000000002, and the ceil
+    of it used to emit a 12th column outside the bbox."""
+    x0, w = -31.90138253690217, 1.3798918398248385
+    bbox = (x0, 0.0, x0 + 11 * w, 2.0)
+    assert (B.align_bbox((1.0, w), bbox)[2] - x0) / w > 11
+    cells = GR.grid_maker(spark, cell=(1.0, w), bbox=bbox, tile=(1, 4)).collect()
+    assert sorted({r["cell_x"] for r in cells}) == list(range(11))
+    assert len(cells) == 22 and {r["__tile__"] for r in cells} == set(range(6))
+
+
+def test_classifier_paths_never_clip(spark, monkeypatch):
+    """grid_maker (qtree, trim=False), polygon_pip_join and area_interpolate
+    classify with the rect-coverage kernel only: with the Sutherland–Hodgman
+    clip made to raise, in the driver and (the modules pickled by value)
+    in the Python workers, all of them still run."""
+    from pyspark import cloudpickle
+
+    from pygridmap_spark.operators import overlay as OV
+    from pygridmap_spark.operators import spatialjoin as SJ
+
+    def refuse(*_):
+        raise AssertionError("Sutherland-Hodgman clip called")
+
+    monkeypatch.setattr(G, "multipolygon_clip_area", refuse)
+    monkeypatch.setattr(G, "clip_area", refuse)
+    mods = (G, GR, OV, SJ)
+    for m in mods:
+        cloudpickle.register_pickle_by_value(m)
+    try:
+        polys = PG.synthetic_polygons(spark, n=3, bbox=BBOX, seed=5)
+        # the patch reaches the workers: a UDF calling the clip fails there
+        probe = polys.select("geometry").mapInPandas(
+            lambda it: (pd.DataFrame({"a": [G.multipolygon_clip_area(None, 0, 0, 1, 1)]}) for _ in it), "a double"
+        )
+        with pytest.raises(Exception, match="Sutherland-Hodgman clip called"):
+            probe.collect()
+        kw = dict(mask=polys, cell=(10_000.0, 10_000.0), bbox=BBOX)
+        assert GR.grid_maker(spark, mode="qtree", **kw).count() > 0
+        assert GR.grid_maker(spark, trim=False, **kw).count() == 100
+        regions = PG.synthetic_polygons(spark, n=3, bbox=(0.0, 0.0, 80.0, 80.0), seed=5)
+        pts = spark.createDataFrame([(i, 0.8 * i, 0.8 * i) for i in range(100)], "pid long, lon double, lat double")
+        assert SJ.polygon_pip_join(spark, pts, regions, z=6).count() > 0
+        cells = PG.grid_layer(spark, (-20_000.0, -20_000.0, 160_000.0, 160_000.0), (20_000.0, 20_000.0))
+        out = OV.area_interpolate(spark, polys, cells, ["pop"]).agg(F.sum("pop")).collect()[0][0]
+        assert out == pytest.approx(sum(r["pop"] for r in polys.collect()), rel=1e-9)
+    finally:
+        for m in mods:
+            cloudpickle.unregister_pickle_by_value(m)
 
 
 def test_qtree_requires_trim(spark):
