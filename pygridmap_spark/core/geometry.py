@@ -282,12 +282,15 @@ def multipolygon_rect_areas(mp: MultiPolygon, x0, y0, x1, y1) -> np.ndarray:
     cell classifier's coverage kernel, one numpy evaluation per ring over
     all rects (chunked to ``RECT_AREA_BUDGET`` edge x rect elements).
 
-    Matches :func:`multipolygon_clip_area` within rounding: each ring is
-    normalised by its own orientation, a polygon is |outer| − Σ|holes|
-    (floored at 0) and parts are summed. A rect that no edge of a ring
-    meets (closed test) takes exactly 0.0 or its full area for that ring,
-    from an even-odd test of its centre, so rects away from the boundary
-    get exact zeros and exact full covers, never rounding residue."""
+    Matches :func:`multipolygon_clip_area` within rounding: each ring's
+    covered area is the absolute value of its signed one (the shoelace of
+    its S-H clip), a polygon is |outer| − Σ|holes| (floored at 0) and parts
+    are summed. A rect that no edge of a ring meets (closed test) takes
+    exactly 0.0 or its full area for that ring, from an even-odd test of
+    its centre, so rects away from the boundary get exact zeros and exact
+    full covers, never rounding residue. On a self-intersecting ring both
+    lobes of a bowtie thus cover positive area where a rect holds one of
+    them, whichever way it winds, as under the S-H clip."""
     x0, y0, x1, y1 = (np.asarray(v, dtype=np.float64).reshape(-1) for v in (x0, y0, x1, y1))
     full = (x1 - x0) * (y1 - y0)
     total = np.zeros(len(x0))
@@ -295,15 +298,14 @@ def multipolygon_rect_areas(mp: MultiPolygon, x0, y0, x1, y1) -> np.ndarray:
         part = np.zeros(len(x0))
         for i, ring in enumerate(poly):
             pts = _ring_open(ring)
-            sign = np.sign(ring_signed_area(pts))
-            if not sign:
+            if len(pts) < 3:
                 continue
             area = np.empty(len(x0))
             step = max(1, RECT_AREA_BUDGET // len(pts))
             for k in range(0, len(x0), step):
                 sl = slice(k, k + step)
                 signed, touched = _ring_rect_integrals(pts, x0[sl], y0[sl], x1[sl], y1[sl])
-                area[sl] = sign * signed
+                area[sl] = np.abs(signed)
                 far = np.flatnonzero(~touched) + k
                 if len(far):
                     cx, cy = (x0[far] + x1[far]) / 2, (y0[far] + y1[far]) / 2

@@ -240,7 +240,7 @@ def grid_maker(
         # the aligned bbox holds whole cells: count them as integers, never
         # as the ceil of a float quotient that may land a hair above one
         nrows, ncols = B.align_shape([height, width], bbox)
-        bbox = B.align_bbox([height, width], bbox)
+        bbox = [bbox[0], bbox[1], bbox[0] + ncols * width, bbox[1] + nrows * height]
     else:
         nrows, ncols = B.get_grid_shape([height, width], bbox)
     tilesize = list(tile) if tile else [32, 32]

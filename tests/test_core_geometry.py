@@ -470,6 +470,9 @@ DIAMONDS = [
     [[(7.0, 2.0), (8.5, 0.5), (10.0, 2.0), (8.5, 3.5)]],
     [[(7.25, 5.0), (8.1, 4.2), (9.7, 5.3), (8.3, 6.9), (7.0, 5.0)]],
 ]
+# self-intersecting: lobes of area 3 and 12 wound opposite ways, crossing
+# on the lattice corner (2, 2)
+BOWTIE = [(0.0, 0.0), (6.0, 6.0), (6.0, 0.0), (0.0, 3.0)]
 
 
 @pytest.mark.parametrize(
@@ -480,6 +483,7 @@ DIAMONDS = [
         [HOLED_TRIANGLE],  # both rings counter-clockwise
         [[HOLED_TRIANGLE[0][::-1], HOLED_TRIANGLE[1]]],  # clockwise outer
         DIAMONDS,  # multipolygon, vertices on cell lines and corners
+        [[BOWTIE]],  # either lobe covers positive area, as its S-H clip does
     ],
 )
 def test_rect_areas_match_exact_oracle(mp):

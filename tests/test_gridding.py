@@ -289,21 +289,20 @@ def test_classifier_differential_seeded(spark):
             blocks = GR.classify_blocks(geoms, (x0, y0), (h, w), [(0, 0, nx, ny)], outside=True)
             assert {k: FLAGS[c] for k, c in expand(blocks, tol).items()} == want
             # areas: a block's is its largest single-row clip, within 1e-9 of
-            # the block's area (one cell's for BOUNDARY) of the S-H clip; an
-            # ALL_IN block's is its own area up to the tolerance, unless the
-            # largest clip is the multipolygon's, whose random parts may
-            # overlap and then sum past it; an ALL_OUT block's is exactly 0
+            # a cell's area of the S-H clip; an ALL_IN block's is its own
+            # area up to the tolerance, unless the largest clip is the
+            # multipolygon's, whose random parts may overlap and then sum
+            # past it; an ALL_OUT block's is exactly 0
             for ix0, iy0, ix1, iy1, cls, a in blocks.itertuples(index=False):
                 clips = [clip(g, x0, y0, h, w, ix0, iy0, ix1, iy1) for g in geoms]
-                ncells = (ix1 - ix0) * (iy1 - iy0)
                 if cls == GR.ALL_OUT:
                     assert a == 0.0
                 else:
-                    assert abs(a - max(clips)) <= tol * ncells
+                    assert abs(a - max(clips)) <= tol
                 if cls == GR.ALL_IN:
                     block_area = (x0 + ix1 * w - (x0 + ix0 * w)) * (y0 + iy1 * h - (y0 + iy0 * h))
                     assert a >= block_area - tol
-                    assert a <= block_area + tol * ncells or max(clips) == clips[1]
+                    assert a <= block_area + tol or max(clips) == clips[1]
             kw = dict(mask=wkb_mask(spark, rows), cell=(h, w), bbox=bbox, tile=(4, 4))
             full = GR.grid_maker(spark, trim=False, **kw).collect()
             assert {(r["cell_x"], r["cell_y"]): (r["__intersects__"], r["__within__"]) for r in full} == want

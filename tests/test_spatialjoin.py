@@ -120,6 +120,24 @@ def test_polygon_pip_join_sub_tolerance_polygon(spark):
     assert got == want == {(0, 0), (1, 1)}
 
 
+def test_polygon_pip_join_asymmetric_bowtie(spark):
+    """A self-intersecting ring matches points even-odd, as the ray cast
+    does, in both lobes: the smaller lobe (area 150 of 750) is wound
+    against the ring's net orientation, and its boundary cells must still
+    be candidates, not pruned as covering no area."""
+    polys = spark.createDataFrame(
+        [(0, wkb.encode_polygon([[(0.0, 0.0), (60.0, 30.0), (60.0, 0.0), (0.0, 15.0)]]))],
+        "poly_id long, geometry binary",
+    )
+    gx, gy = np.meshgrid(np.arange(0.3, 60.0, 1.1), np.arange(0.2, 30.0, 0.7))
+    pts = list(zip(gx.ravel().tolist(), gy.ravel().tolist()))
+    points = spark.createDataFrame([(i, x, y) for i, (x, y) in enumerate(pts)], "pid long, lon double, lat double")
+    got = {(r["pid"], r["poly_id"]) for r in SJ.polygon_pip_join(spark, points, polys, z=6).collect()}
+    want = _expected_pip([{"pid": i, "lon": x, "lat": y} for i, (x, y) in enumerate(pts)], polys.collect())
+    small = {i for i, (x, y) in enumerate(pts) if x < 20.0 and (i, 0) in want}
+    assert len(small) > 100 and got == want
+
+
 def test_polygon_pip_join_submits_no_job(spark, points_df, geo_polygons):
     """Building the join plans only: no Spark job runs before the caller's
     action (a driver-side collect of the polygon layer would show here)."""
