@@ -49,6 +49,18 @@ from pygridmap_spark.operators.gridding import (
 _TEMPS = ("__cix__", "__ciy__", "__cls__", "__pk__", "__wkb__")
 
 
+def _cell_join(points: DataFrame, cover: DataFrame) -> DataFrame:
+    """Broadcast hash join of the points on the cover's cell key
+    ``(__cix__, __ciy__)``, compared null-safely: an equi-join makes
+    Catalyst infer ``isnotnull(key)`` and push it below the points'
+    projection, where it recomputes the coordinate chain (a sha256 per
+    page when they derive from urls) in a scan filter. Cover keys are never
+    NULL, so a NULL point key still matches nothing. Both key pairs stay
+    in the output; drop them by name."""
+    cix, ciy = (points[c].eqNullSafe(cover[c]) for c in ("__cix__", "__ciy__"))
+    return points.join(F.broadcast(cover), cix & ciy)
+
+
 def rect_pip_join(
     points: DataFrame,
     rects: DataFrame,
@@ -76,13 +88,16 @@ def rect_pip_join(
     )
     blocks = rects.withColumns({"__ix0__": ix0, "__iy0__": iy0, "__ix1__": ix1, "__iy1__": iy1})
     cover = explode_blocks(blocks, "__cix__", "__ciy__")
-    joined = pts.join(F.broadcast(cover), ["__cix__", "__ciy__"])
-    out = joined.filter(
+    joined = _cell_join(pts, cover)
+    # coalesce: a null-intolerant predicate would infer isnotnull(lon/lat)
+    # too, pushed to the points' source like the key's
+    inside = (
         (F.col(lon) >= F.col("rxmin"))
         & (F.col(lon) < F.col("rxmax"))
         & (F.col(lat) >= F.col("rymin"))
         & (F.col(lat) < F.col("rymax"))
     )
+    out = joined.filter(F.coalesce(inside, F.lit(False)))
     return out.drop("__cix__", "__ciy__", "rxmin", "rymin", "rxmax", "rymax")
 
 
@@ -101,9 +116,12 @@ def polygon_pip_join(
     1. one Arrow pass over the polygons runs ``classify_blocks`` over each
        row's cover block and emits (block, poly, class) rows — the WKB
        does not ride the cover-cell replication; NULL and empty
-       geometries get no cells,
+       geometries get no cells, and a cover block wider than the world
+       lattice at ``z`` (coordinates that are not lon/lat) fails the
+       action with a ValueError naming the polygon,
     2. blocks explode to cells in the JVM and broadcast-join the points on
-       the unclamped cell key (NULL/NaN coordinates get no key and drop),
+       the unclamped cell key, null-safely so no filter recomputes the
+       coordinates (NULL/NaN coordinates get a NULL key and drop),
     3. boundary candidates left-join the broadcast (poly_key, WKB) — each
        geometry ships once, interior candidates get a NULL WKB,
     4. one scalar pandas UDF filters every candidate: True on a NULL WKB,
@@ -123,9 +141,13 @@ def polygon_pip_join(
 
     def _cover(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
+            # a cover wider than the world lattice is not lon/lat: refuse it
+            # before its cells explode (metre coordinates at z=14: ~1e14)
             frames = [
                 blocks.drop(columns="__area__").assign(**{poly_key: pid})
-                for pid, _, blocks in classify_polygons(batch[poly_key], batch[geometry_col], origin, lattice)
+                for pid, _, blocks in classify_polygons(
+                    batch[poly_key], batch[geometry_col], origin, lattice, max_span=1 << z
+                )
             ]
             yield (
                 pd.concat(frames, ignore_index=True)
@@ -151,15 +173,12 @@ def polygon_pip_join(
         f"__ix0__ long, __iy0__ long, __ix1__ long, __iy1__ long, __cls__ int, {poly_key} {key_type}",
     )
     cover = explode_blocks(blocks, "__cix__", "__ciy__")
-    # NaN -> NULL, so NULL/NaN points get no key and drop from the join.
-    # A plain null-intolerant key keeps the join's inferred not-null filter
-    # a pair of null checks (a CASE WHEN key re-evaluates the coordinate
-    # expressions per branch — a per-row sha256 when they come from urls)
+    # NaN -> NULL, so NULL/NaN points get a NULL key and match no cell
     x, y = (F.nanvl(F.col(c), F.lit(None).cast("double")) for c in (lon, lat))
     pts = points.withColumns(
         {"__cix__": lattice_index(x, origin[0], lattice[1]), "__ciy__": lattice_index(y, origin[1], lattice[0])}
     )
-    cand = pts.join(F.broadcast(cover), ["__cix__", "__ciy__"])
+    cand = _cell_join(pts, cover)
     # null-safe: a NULL-key polygon's boundary candidates get its WKB too
     geoms = F.broadcast(polygons.select(F.col(poly_key).alias("__pk__"), F.col(geometry_col).alias("__wkb__")))
     cand = cand.join(geoms, F.col(poly_key).eqNullSafe(F.col("__pk__")) & (F.col("__cls__") == BOUNDARY), "left")

@@ -4,8 +4,9 @@ Reproduces the reference tiler's output contract (gridtiler.py:124-166):
 one file subtree per (xt, yt) and an ``info.json`` carrying crs /
 tileSizeCell / originPoint / resolutionGeo / tilingBounds — but written as
 ONE distributed ``write.partitionBy("xt","yt")`` instead of a per-row
-append loop, with the bounds computed by a single min/max aggregation
-(gridtiler.py:104-108's running extremes become ``agg(min(xt), ...)``).
+append loop, with the bounds observed on that write (gridtiler.py:104-108's
+running extremes become an ``Observation`` of min/max xt/yt — no job reads
+the tree back).
 
 At 100 TB scale the partitionBy write is the shuffle-free path: tile columns
 are already computed, so each task writes its partitions directly; for
@@ -18,7 +19,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pygridmap_spark.core import fsio
@@ -41,10 +42,11 @@ def write_tiles(
     """Write df (already carrying xt/yt) as a tile tree; returns the
     info.json dict (also written to ``output_folder/info.json``).
 
-    The tiling bounds come from a columnar min/max over the WRITTEN tree's
-    xt/yt partition columns — partition-value discovery only, no row data
-    — so the upstream pipeline still executes exactly once and no
-    O(#dirs^2) recursive listing ever hits the object store.
+    The tiling bounds are observed on the write itself (a
+    ``pyspark.sql.Observation`` of min/max xt/yt), so the pipeline runs
+    once and no job reads the tree back. An empty input gives null bounds.
+    With ``mode='append'`` (or ``'ignore'`` over an existing tree) the
+    bounds also cover the tiles the existing ``info.json`` records.
 
     ``coarsen=k`` partitions by super-tiles ``(xt >> k, yt >> k)`` with the
     rows sorted by (xt, yt) inside each file — the escape hatch for sparse
@@ -66,6 +68,12 @@ def write_tiles(
         if cluster:
             out = out.repartition(*part_cols)
     spark = df.sparkSession
+    info_path = fsio.join(output_folder, "info.json")
+    old = (
+        json.loads(fsio.read_text(spark, info_path))["tilingBounds"]
+        if mode in ("append", "ignore") and fsio.exists(spark, info_path)
+        else {}
+    )
     if format == "csv":
         # reference contract: integral doubles render as '12', not '12.0'
         # (gridtiler.py round_floats_to_ints applied to every cell value)
@@ -80,6 +88,13 @@ def write_tiles(
                 for c, t in out.dtypes
             ]
         )
+    # observed on the written rows: below an exchange, an empty input's
+    # stage is optimised away with the metrics node and the row is empty
+    bounds = Observation()
+    out = out.observe(
+        bounds, F.min("xt").alias("xMin"), F.max("xt").alias("xMax"),
+        F.min("yt").alias("yMin"), F.max("yt").alias("yMax"),
+    )
     writer = out.write.mode(mode).partitionBy(*part_cols)
     if format == "parquet":
         writer.option("compression", parquet_compression).parquet(output_folder)
@@ -87,34 +102,12 @@ def write_tiles(
         writer.option("header", True).csv(output_folder)
     else:
         raise ValueError(f"unsupported tile format {format!r}")
-    # exact bounds from the written files — xt/yt are PARTITION columns, so
-    # this agg never touches row data (partition-value discovery + a
-    # metadata-only scan). A recursive xt=*/yt=* directory listing would be
-    # O(#xt dirs x #yt dirs) driver-side LIST calls — 10^4-10^6 on an
-    # object store with a global fine tiling — so the columnar agg is used
-    # unconditionally, for the coarsen branch and the plain one alike.
-    from pyspark.errors import AnalysisException
+    new = bounds.get
 
-    try:
-        b = (
-            read_tiles(spark, output_folder, format)
-            .agg(F.min("xt"), F.max("xt"), F.min("yt"), F.max("yt"))
-            .collect()[0]
-        )
-        xts = [v for v in (b[0], b[1]) if v is not None]
-        yts = [v for v in (b[2], b[3]) if v is not None]
-    except AnalysisException as e:
-        # an EMPTY input writes no partition dirs, and the read-back then
-        # fails schema inference (UNABLE_TO_INFER_SCHEMA) — mirror the old
-        # listing path's contract: null bounds, info.json still written.
-        # Only THAT analysis error is absorbed; any other AnalysisException
-        # on a populated tree (e.g. conflicting schemas under
-        # mode='append') must propagate, not be papered over with null
-        # bounds.
-        cls = e.getCondition() if hasattr(e, "getCondition") else None
-        if cls != "UNABLE_TO_INFER_SCHEMA" and "UNABLE_TO_INFER_SCHEMA" not in str(e):
-            raise
-        xts, yts = [], []
+    def _merged(key: str, pick):
+        vals = [v for v in (new.get(key), old.get(key)) if v is not None]
+        return pick(vals) if vals else None
+
     info = {
         "dims": [],
         "crs": crs,
@@ -122,14 +115,14 @@ def write_tiles(
         "originPoint": {"x": x_origin, "y": y_origin},
         "resolutionGeo": resolution,
         "tilingBounds": {
-            "yMin": min(yts) if yts else None,
-            "yMax": max(yts) if yts else None,
-            "xMax": max(xts) if xts else None,
-            "xMin": min(xts) if xts else None,
+            "yMin": _merged("yMin", min),
+            "yMax": _merged("yMax", max),
+            "xMax": _merged("xMax", max),
+            "xMin": _merged("xMin", min),
         },
     }
     fsio.mkdirs(spark, output_folder)
-    fsio.write_text(spark, fsio.join(output_folder, "info.json"), json.dumps(info, indent=3))
+    fsio.write_text(spark, info_path, json.dumps(info, indent=3))
     return info
 
 

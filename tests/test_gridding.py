@@ -412,6 +412,46 @@ def test_grid_shape_on_float_lattice(spark):
     assert len(cells) == 22 and {r["__tile__"] for r in cells} == set(range(6))
 
 
+def test_tile_pass_partitions(spark, monkeypatch):
+    """The tile ``range`` gets one partition per ``TILES_PER_TASK`` tiles, at
+    most ``defaultParallelism``: one Python task classifies the 9 tiles of
+    a small grid, three the 2 * TILES_PER_TASK + 1 tiles of a long strip.
+    The grid is the same for any partition count."""
+    per = GR.TILES_PER_TASK
+    assert spark.sparkContext.defaultParallelism >= 3
+    small = GR.grid_maker(spark, bbox=BBOX, cell=(1_000.0, 1_000.0), tile=(34, 34))
+    assert small.rdd.getNumPartitions() == 1
+    strip = GR.grid_maker(spark, bbox=(0.0, 0.0, 2 * per + 1.0, 1.0), cell=(1.0, 1.0), tile=(1, 1))
+    assert strip.rdd.getNumPartitions() == 3 and strip.count() == 2 * per + 1
+    mask = PG.synthetic_polygons(spark, n=3, bbox=BBOX, seed=5)
+    kw = dict(mask=mask, cell=(2_500.0, 2_500.0), bbox=BBOX, tile=(4, 4), mode="qtree")
+    want = sorted(GR.grid_maker(spark, **kw).collect())
+    monkeypatch.setattr(GR, "TILES_PER_TASK", 1)
+    many = GR.grid_maker(spark, **kw)
+    assert many.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert sorted(many.collect()) == want and want
+
+
+def test_grid_maker_lattice_record(spark):
+    """grid_maker attaches its lattice to ``__x__`` next to the CRS entry,
+    and the record survives the overlay's rename and a checkpoint. Other
+    xypos anchors move ``__x__`` off the cell corner and get no record."""
+    x0 = -31.90138253690217
+    bbox = (x0, 0.5, x0 + 7_000.0, 4_000.0)
+    grid = GR.grid_maker(spark, bbox=bbox, cell=(1_000.0, 2_000.0), crs=3035)
+    want = {"x0": x0, "y0": 0.5, "width": 2_000.0, "height": 1_000.0, "nrows": 4, "ncols": 4}
+    assert grid.schema["__x__"].metadata == {"crs": "EPSG:3035", "lattice": want}
+    renamed = grid.withColumnsRenamed({"__x__": "x", "__y__": "y"})
+    assert GR.lattice_of(renamed, "x") == want and GR.lattice_of(renamed, "__x__") is None
+    assert GR.lattice_of(renamed.localCheckpoint(), "x") == want
+    rows = grid.collect()
+    assert max(r["cell_x"] for r in rows) == want["ncols"] - 1
+    assert max(r["cell_y"] for r in rows) == want["nrows"] - 1
+    assert {r["__x__"] for r in rows} == {x0 + i * 2_000.0 for i in range(4)}
+    for xypos in ("CC", "URc"):
+        assert GR.lattice_of(GR.grid_maker(spark, bbox=bbox, cell=(1_000.0, 2_000.0), xypos=xypos), "__x__") is None
+
+
 def test_classifier_paths_never_clip(spark, monkeypatch):
     """grid_maker (qtree, trim=False), polygon_pip_join and area_interpolate
     classify with the rect-coverage kernel only: with the Sutherland–Hodgman

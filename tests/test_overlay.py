@@ -189,31 +189,22 @@ def test_polygon_overlay_rejects_non_lattice_cells(spark, grid):
 def test_area_interpolate_plan_over_lazy_grid(spark):
     """Over a lazy grid_maker grid, the executed plan classifies the grid
     once and the sources once — two Python nodes, the grid's ``_classify``
-    and the overlay's — and the only jobs before the action are the mask
-    collect and the grid-constant query."""
-    from pygridmap_spark.operators import gridding as GR
-
-    star = [
-        ((20_000.0 if k % 2 else 12_000.0) * math.cos(math.pi * k / 8), (20_000.0 if k % 2 else 12_000.0) * math.sin(math.pi * k / 8))
-        for k in range(16)
-    ]
-    mask = spark.createDataFrame([(0, wkb.encode_polygon([star]))], "poly_id long, geometry binary")
+    and the overlay's — and the only job before the action is the mask
+    collect: the overlay reads the lattice from the grid's record."""
     sources = PG.synthetic_polygons(spark, n=20, bbox=(-6_000.0, -6_000.0, 6_000.0, 6_000.0), seed=7, with_multi=False)
     sc = spark.sparkContext
     group = "area_interpolate_lazy_grid"
     sc.setJobGroup(group, group)
     try:
         before = set(sc.statusTracker().getJobIdsForGroup(group))
-        cells = GR.grid_maker(
-            spark, mask, cell=(1_000.0, 1_000.0), bbox=(-20_000.0, -20_000.0, 20_000.0, 20_000.0), mode="qtree"
-        ).withColumnsRenamed({"__x__": "x", "__y__": "y"})
+        cells = _star_grid(spark)
         out = OV.area_interpolate(spark, sources, cells, ["pop"])
         planned = set(sc.statusTracker().getJobIdsForGroup(group))
         rows = out.collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert len(planned - before) <= 3
+    assert len(planned - before) == 1
     # the action ran on this query execution, so its plan is AQE's final one
     plan = out._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]
@@ -221,6 +212,41 @@ def test_area_interpolate_plan_over_lazy_grid(spark):
     assert final.count("MapInPandas") == 2, final
     want = sum(r["pop"] for r in sources.select("pop").collect())
     assert sum(r["pop"] for r in rows) == pytest.approx(want, rel=1e-9)
+
+
+def _star_grid(spark):
+    from pygridmap_spark.operators import gridding as GR
+
+    star = [
+        ((20_000.0 if k % 2 else 12_000.0) * math.cos(math.pi * k / 8), (20_000.0 if k % 2 else 12_000.0) * math.sin(math.pi * k / 8))
+        for k in range(16)
+    ]
+    mask = spark.createDataFrame([(0, wkb.encode_polygon([star]))], "poly_id long, geometry binary")
+    return GR.grid_maker(
+        spark, mask, cell=(1_000.0, 1_000.0), bbox=(-20_000.0, -20_000.0, 20_000.0, 20_000.0), mode="qtree"
+    ).withColumnsRenamed({"__x__": "x", "__y__": "y"})
+
+
+@pytest.mark.parametrize(
+    "edit",
+    [
+        {"xmax": -300.0},  # cut short
+        {"y": 300.0, "ymax": 300.0},  # shifted off its corner
+    ],
+    ids=["cut", "shifted"],
+)
+def test_area_interpolate_rejects_cell_off_record(spark, edit):
+    """One cell of a grid_maker grid cut short or shifted contradicts the
+    lattice record the overlay reads, and the action fails naming the
+    lattice: interior pieces would take the full cell's area."""
+    cells = _star_grid(spark)
+    one = F.col("cell_id") == cells.select(F.min("cell_id")).collect()[0][0]
+    bad = cells.withColumns({c: F.when(one, F.col(c) + d).otherwise(F.col(c)) for c, d in edit.items()})
+    sources = PG.synthetic_polygons(spark, n=4, bbox=(-6_000.0, -6_000.0, 6_000.0, 6_000.0), seed=7, with_multi=False)
+    out = OV.area_interpolate(spark, sources, bad, ["pop"])  # plans without a job
+    with pytest.raises(Exception, match=r"not on their lattice \(x0=-20000.0, y0=-20000.0, width=1000.0"):
+        out.collect()
+    assert OV.area_interpolate(spark, sources, cells, ["pop"]).count() > 0
 
 
 def test_piece_geometry_rect_path(spark, grid):

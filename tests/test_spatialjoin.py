@@ -177,6 +177,40 @@ def test_polygon_pip_join_plan_shape(spark, points_df, geo_polygons, tmp_path):
     assert final.count("BroadcastExchange") == final.count("Exchange") == 2, final
 
 
+def _no_coordinate_filter(out):
+    """The final plan evaluates ``sha2`` in no Filter and no scan DataFilters."""
+    out.collect()
+    final = out._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final and "sha2" in final
+    for line in final.splitlines():
+        assert not ("Filter" in line and "sha2" in line), final
+
+
+def test_pip_joins_derive_coordinates_once(spark, geo_polygons, tmp_path):
+    """Over geolocated pages on a parquet scan, the cell-key join must not
+    make Catalyst infer a not-null filter on the key and push it to the
+    scan, where it recomputes the sha256 coordinate chain per page."""
+    P.pages(spark, 300).write.parquet(str(tmp_path / "pages"))
+    pts = GEO.with_geolocation(spark.read.parquet(str(tmp_path / "pages")).select("url", "text"))
+    polys = spark.createDataFrame(geo_polygons.collect(), geo_polygons.schema)
+    _no_coordinate_filter(SJ.polygon_pip_join(spark, pts, polys, z=6))
+    rects = spark.createDataFrame(
+        [(0, -10.0, -10.0, 40.0, 30.0)], "poly_id long, rxmin double, rymin double, rxmax double, rymax double"
+    )
+    _no_coordinate_filter(SJ.rect_pip_join(pts, rects, z=6))
+
+
+def test_polygon_pip_join_rejects_metre_polygons(spark, points_df):
+    """Polygons in projected metres (a 100 km bbox) at z=14 used to make a
+    ~1e14-cell cover block and kill the JVM with OutOfMemoryError; a cover
+    wider than the world lattice now fails the action naming the polygon."""
+    from pyspark.errors import PythonException
+
+    polys = PG.synthetic_polygons(spark, n=2, bbox=(0.0, 0.0, 100_000.0, 100_000.0), seed=3)
+    with pytest.raises(PythonException, match=r"ValueError: polygon \d+ spans \d+ x \d+ cells, more than its whole 16384 x 16384"):
+        SJ.polygon_pip_join(spark, points_df, polys, z=14).count()
+
+
 def _pip_pairs(spark, points, polys):
     return {(r["pid"], r["poly_id"]) for r in SJ.polygon_pip_join(spark, points, polys, z=6).collect()}
 

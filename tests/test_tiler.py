@@ -160,3 +160,51 @@ def test_write_tiles_empty_input_null_bounds(spark, tmp_path):
         "yMin": None, "yMax": None, "xMax": None, "xMin": None
     }
     assert sinks.read_info(out)["resolutionGeo"] == 1.0
+
+
+def _jobs(spark, group, fn):
+    """Ids of the Spark jobs ``fn()`` submits, counted under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+        return set(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_write_tiles_no_job_after_the_write(spark, tmp_path):
+    """The tiling bounds are observed on the write: write_tiles submits the
+    same jobs as the bare partitioned write, and no read-back job after it."""
+    df = spark.range(400).select(
+        (F.col("id") % 7 - 3).alias("xt"), (F.col("id") % 5).alias("yt"), F.col("id").cast("double").alias("v")
+    )
+    bare = _jobs(
+        spark, "bare_tile_write",
+        lambda: df.repartition("xt", "yt").write.mode("overwrite").partitionBy("xt", "yt").parquet(str(tmp_path / "bare")),
+    )
+    info = {}
+    tiles = _jobs(
+        spark, "write_tiles_jobs",
+        lambda: info.update(sinks.write_tiles(df, str(tmp_path / "tiles"), resolution=1.0, tile_size_cell=10)),
+    )
+    assert len(tiles) == len(bare) >= 1
+    assert info["tilingBounds"] == {"yMin": 0, "yMax": 4, "xMax": 3, "xMin": -3}
+
+
+def test_write_tiles_append_bounds_cover_old_and_new(spark, tmp_path):
+    """mode='append' adds tiles to the tree: info.json's bounds cover the
+    existing tiles and the new ones, as a read-back of the whole tree does."""
+    out = str(tmp_path / "tiles")
+    old = spark.createDataFrame([(0, 5, 1.0), (2, 6, 2.0)], "xt long, yt long, v double")
+    new = spark.createDataFrame([(-4, 7, 3.0), (1, 9, 4.0)], "xt long, yt long, v double")
+    sinks.write_tiles(old, out, resolution=1.0, tile_size_cell=10)
+    info = sinks.write_tiles(new, out, resolution=1.0, tile_size_cell=10, mode="append")
+    want = {"yMin": 5, "yMax": 9, "xMax": 2, "xMin": -4}
+    assert info["tilingBounds"] == sinks.read_info(out)["tilingBounds"] == want
+    b = sinks.read_tiles(spark, out).agg(F.min("xt"), F.max("xt"), F.min("yt"), F.max("yt")).collect()[0]
+    assert (b[0], b[1], b[2], b[3]) == (want["xMin"], want["xMax"], want["yMin"], want["yMax"])
+    # an empty append leaves the bounds as they were
+    empty = spark.createDataFrame([], "xt long, yt long, v double")
+    assert sinks.write_tiles(empty, out, resolution=1.0, tile_size_cell=10, mode="append")["tilingBounds"] == want
