@@ -23,10 +23,11 @@ and grid size:
 4. trim/interior filters (gridding.py:169-172, 186-188) drop blocks
    before they expand.
 
-The tile ``range`` gets one partition per ``TILES_PER_TASK`` tiles (at
-most ``defaultParallelism``): every partition is one Python task, and a
-task's worker set-up costs more than classifying a hundred tiles of a
-simple mask.
+With a mask, the tile ``range`` gets one partition per
+``TILE_EDGES_PER_TASK`` tiles x mask vertices (at most
+``defaultParallelism``): every partition is one Python task, and a task's
+worker set-up costs more than classifying a hundred tiles of a simple
+mask, while a detailed mask needs every core.
 
 The grid carries its lattice as a record in the column metadata of
 ``__x__`` (:func:`with_lattice`, next to the CRS entry): corner origin,
@@ -52,11 +53,14 @@ from pygridmap_spark.core import wkb
 
 ALL_OUT, BOUNDARY, ALL_IN = 0, 1, 2
 EDGE_EPS = 1e-12
-#: processing tiles per Python task of ``grid_maker``'s classifier pass: the
-#: perfbench grid's 81 star-mask tiles classify in ~0.03 s together, while
-#: each task pays ~0.19 s CPU of Python worker set-up before its first batch
-#: (PySpark 4.1.2, Python 3.11.7, 4 vCPUs)
-TILES_PER_TASK = 128
+#: processing tiles x mask ring vertices per Python task of ``grid_maker``'s
+#: classifier pass. Each task pays ~0.19 s CPU of Python worker set-up
+#: before its first batch, and classifying costs ~2-6e-5 s CPU per tile x
+#: vertex (81 tiles: ~0.03 s with a 16-vertex star, ~10 s with a
+#: 2,000-vertex one; PySpark 4.1.2, Python 3.11.7, 4 vCPUs), so a task gets
+#: up to ~0.5 s of work: a simple mask's grid classifies in one task, a
+#: detailed mask's spreads over ``defaultParallelism``
+TILE_EDGES_PER_TASK = 8192
 #: column-metadata key of the lattice record
 LATTICE_META_KEY = "lattice"
 #: the half-open index block columns of every block frame
@@ -194,8 +198,8 @@ def classify_polygons(keys, wkbs, origin, cell, max_span: int | None = None):
         (ix0, ix1), (iy0, iy1) = lattice_span(bxmin, bxmax, x0, width), lattice_span(bymin, bymax, y0, height)
         if max_span is not None and max(ix1 - ix0, iy1 - iy0) > max_span:
             raise ValueError(
-                f"polygon {key!r} spans {ix1 - ix0} x {iy1 - iy0} cells, more than its whole "
-                f"{max_span} x {max_span}-cell lattice: are its coordinates in the lattice's units?"
+                f"polygon {key!r} spans {ix1 - ix0} x {iy1 - iy0} cells, more than {max_span} on an "
+                f"axis: are its coordinates in the lattice's units?"
             )
         yield key, mp, classify_blocks([mp], origin, cell, [(ix0, iy0, ix1, iy1)])
 
@@ -300,7 +304,10 @@ def grid_maker(
     # one row per processing tile, its cell block cropped to the grid
     ntiles = nxtiles * nytiles
     tix, tiy = F.col("id") % nxtiles, (F.col("id") / nxtiles).cast("long")
-    ntasks = min(-(-ntiles // TILES_PER_TASK), spark.sparkContext.defaultParallelism)
+    ntasks = min(ntiles, spark.sparkContext.defaultParallelism)
+    if polys is not None:  # size the Python tasks by their work (see TILE_EDGES_PER_TASK)
+        edges = max(1, sum(len(ring) for mp in polys for poly in mp for ring in poly))
+        ntasks = min(-(-ntiles * edges // TILE_EDGES_PER_TASK), ntasks)
     tiles = spark.range(ntiles, numPartitions=max(1, ntasks)).select(
         (tix * tilesize[1]).alias("__ix0__"),
         (tiy * tilesize[0]).alias("__iy0__"),

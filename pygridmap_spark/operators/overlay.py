@@ -29,11 +29,13 @@ Two physical paths, chosen by the shape of the right side:
    (the rect-coverage kernel, within rounding of the exact clip), and the
    pieces, keyed on the lattice, join the grid once.
 
-Both paths take the grid's lattice (origin, cell size) from the record
+Path 2 takes the grid's lattice (origin, cell size) from the record
 ``gridding.grid_maker`` attaches to the corner column (``x`` once the
 caller renames ``__x__``), so a ``grid_maker`` grid costs no job before the
 caller's action; layers without a record fall back to one min/max job
-(``_grid_meta``).
+(``_grid_meta``). Path 1 always runs that job: it keys the right layer by
+its largest cell, and a layer's cells may differ in size (a union of two
+grids carries only the first one's record).
 """
 
 from __future__ import annotations
@@ -184,33 +186,22 @@ def _grid_meta(
     return row["x0"], row["y0"], row["w"], row["h"]
 
 
-def _lattice(df: DataFrame, what: str, uniform: bool = False):
-    """``(x0, y0, width, height, record)`` of a rect layer: from the lattice
-    record ``grid_maker`` attaches to the corner column (no job), else from
-    :func:`_grid_meta` with ``record`` None."""
-    rec = GR.lattice_of(df, "x")
-    if rec is None:
-        return (*_grid_meta(df, what, uniform), None)
-    return rec["x0"], rec["y0"], rec["width"], rec["height"], rec
-
-
 def _check_on_lattice(keyed: DataFrame, rec: dict, ix: str, iy: str) -> DataFrame:
     """Fail the action (``raise_error``) on a cell whose width, height or
-    corner contradicts the lattice record by more than 1e-9 of the cell, or
-    whose index lies outside the record's shape: interior pieces take the
-    lattice cell's area, so a cut or shifted cell must not pass. The check
-    rides the key column ``ix``, which every cell carries into the join."""
+    corner contradicts the lattice record by more than 1e-9 of the cell:
+    interior pieces take the lattice cell's area, so a cut or shifted cell
+    must not pass. Cells outside the record's shape (a union of adjacent
+    grids on one lattice) are on the lattice and pass. The check rides the
+    key column ``ix``, which every cell carries into the join."""
     x0, y0, w, h = rec["x0"], rec["y0"], rec["width"], rec["height"]
     ok = (
         (F.abs(F.col("xmax") - F.col("x") - w) <= 1e-9 * w)
         & (F.abs(F.col("ymax") - F.col("y") - h) <= 1e-9 * h)
         & (F.abs(F.col("x") - (F.col(ix) * w + x0)) <= 1e-9 * w)
         & (F.abs(F.col("y") - (F.col(iy) * h + y0)) <= 1e-9 * h)
-        & F.col(ix).between(0, rec["ncols"] - 1)
-        & F.col(iy).between(0, rec["nrows"] - 1)
     )
-    lattice = ", ".join(f"{k}={rec[k]!r}" for k in ("x0", "y0", "width", "height", "nrows", "ncols"))
-    msg = f"grid cells are not on their lattice ({lattice}): a cell's size, corner or index contradicts it"
+    lattice = ", ".join(f"{k}={rec[k]!r}" for k in ("x0", "y0", "width", "height"))
+    msg = f"grid cells are not on their lattice ({lattice}): a cell's size or corner contradicts it"
     return keyed.withColumn(ix, F.when(ok, F.col(ix)).otherwise(F.raise_error(F.lit(msg))))
 
 
@@ -248,7 +239,7 @@ def grid_overlay_rects(
     """
     _check_how(how, rule)
     _check_emit_wkb(emit_wkb, rule)
-    bx0, by0, bw, bh, _ = _lattice(other, "other (right) grid")
+    bx0, by0, bw, bh = _grid_meta(other, "other (right) grid")
     eps = 1e-9 * max(bw, bh)
 
     left = cells.select(
@@ -413,7 +404,7 @@ def grid_overlay_polygons(
        runs :func:`gridding.classify_blocks` over its bbox block on the
        lattice of ``cells``; only block rows come back. The lattice comes
        from the record ``grid_maker`` attaches to ``x``, and then no job
-       runs before the caller's action: a cell whose size, corner or index
+       runs before the caller's action: a cell whose size or corner
        contradicts the record fails the action. A layer without a record
        (``polygons.grid_layer``, a user frame) pays one job for its
        lattice, and cells of more than one size raise ValueError then,
@@ -435,7 +426,11 @@ def grid_overlay_polygons(
     _check_how(how, rule)
     _check_emit_wkb(emit_wkb, rule)
     CRS.check_layers_crs(cells, polygons, "geometry", geometry_col, context="grid_overlay_polygons")
-    gx0, gy0, gw, gh, rec = _lattice(cells, "grid cells", uniform=True)
+    rec = GR.lattice_of(cells, "x")
+    if rec is None:
+        gx0, gy0, gw, gh = _grid_meta(cells, "grid cells", uniform=True)
+    else:
+        gx0, gy0, gw, gh = rec["x0"], rec["y0"], rec["width"], rec["height"]
     origin, lattice = (gx0, gy0), (gh, gw)
     cols = [*GR.BLOCK_COLS, "__cls__", "__area__", poly_key, "__parea__", "__geom__"]
     schema = (

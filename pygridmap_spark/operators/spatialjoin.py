@@ -116,9 +116,9 @@ def polygon_pip_join(
     1. one Arrow pass over the polygons runs ``classify_blocks`` over each
        row's cover block and emits (block, poly, class) rows — the WKB
        does not ride the cover-cell replication; NULL and empty
-       geometries get no cells, and a cover block wider than the world
-       lattice at ``z`` (coordinates that are not lon/lat) fails the
-       action with a ValueError naming the polygon,
+       geometries get no cells, and a cover block more than 4 times wider
+       than the world lattice at ``z`` (coordinates that are not lon/lat)
+       fails the action with a ValueError naming the polygon,
     2. blocks explode to cells in the JVM and broadcast-join the points on
        the unclamped cell key, null-safely so no filter recomputes the
        coordinates (NULL/NaN coordinates get a NULL key and drop),
@@ -141,12 +141,13 @@ def polygon_pip_join(
 
     def _cover(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
-            # a cover wider than the world lattice is not lon/lat: refuse it
-            # before its cells explode (metre coordinates at z=14: ~1e14)
+            # a cover 4x wider than the world lattice is not lon/lat: refuse
+            # it before its cells explode (metre coordinates at z=14: ~1e14
+            # cells). The slack keeps polygons a little past +-180 working.
             frames = [
                 blocks.drop(columns="__area__").assign(**{poly_key: pid})
                 for pid, _, blocks in classify_polygons(
-                    batch[poly_key], batch[geometry_col], origin, lattice, max_span=1 << z
+                    batch[poly_key], batch[geometry_col], origin, lattice, max_span=4 << z
                 )
             ]
             yield (

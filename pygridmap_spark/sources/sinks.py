@@ -45,8 +45,10 @@ def write_tiles(
     The tiling bounds are observed on the write itself (a
     ``pyspark.sql.Observation`` of min/max xt/yt), so the pipeline runs
     once and no job reads the tree back. An empty input gives null bounds.
-    With ``mode='append'`` (or ``'ignore'`` over an existing tree) the
-    bounds also cover the tiles the existing ``info.json`` records.
+    With ``mode='append'`` the bounds also cover the tiles the existing
+    ``info.json`` records. ``mode='ignore'`` over an existing folder writes
+    no tiles (Spark skips the write, so nothing is observed) and keeps the
+    existing ``info.json``'s bounds.
 
     ``coarsen=k`` partitions by super-tiles ``(xt >> k, yt >> k)`` with the
     rows sorted by (xt, yt) inside each file — the escape hatch for sparse
@@ -67,11 +69,14 @@ def write_tiles(
         part_cols = ["xt", "yt"]
         if cluster:
             out = out.repartition(*part_cols)
+    if format not in ("parquet", "csv"):
+        raise ValueError(f"unsupported tile format {format!r}")
     spark = df.sparkSession
     info_path = fsio.join(output_folder, "info.json")
+    skip = mode == "ignore" and fsio.exists(spark, output_folder)
     old = (
         json.loads(fsio.read_text(spark, info_path))["tilingBounds"]
-        if mode in ("append", "ignore") and fsio.exists(spark, info_path)
+        if (mode == "append" or skip) and fsio.exists(spark, info_path)
         else {}
     )
     if format == "csv":
@@ -88,21 +93,21 @@ def write_tiles(
                 for c, t in out.dtypes
             ]
         )
-    # observed on the written rows: below an exchange, an empty input's
-    # stage is optimised away with the metrics node and the row is empty
-    bounds = Observation()
-    out = out.observe(
-        bounds, F.min("xt").alias("xMin"), F.max("xt").alias("xMax"),
-        F.min("yt").alias("yMin"), F.max("yt").alias("yMax"),
-    )
-    writer = out.write.mode(mode).partitionBy(*part_cols)
-    if format == "parquet":
-        writer.option("compression", parquet_compression).parquet(output_folder)
-    elif format == "csv":
-        writer.option("header", True).csv(output_folder)
-    else:
-        raise ValueError(f"unsupported tile format {format!r}")
-    new = bounds.get
+    new = {}
+    if not skip:  # over an existing path, 'ignore' runs no query to observe
+        # observed on the written rows: below an exchange, an empty input's
+        # stage is optimised away with the metrics node and the row is empty
+        bounds = Observation()
+        out = out.observe(
+            bounds, F.min("xt").alias("xMin"), F.max("xt").alias("xMax"),
+            F.min("yt").alias("yMin"), F.max("yt").alias("yMax"),
+        )
+        writer = out.write.mode(mode).partitionBy(*part_cols)
+        if format == "parquet":
+            writer.option("compression", parquet_compression).parquet(output_folder)
+        else:
+            writer.option("header", True).csv(output_folder)
+        new = bounds.get
 
     def _merged(key: str, pick):
         vals = [v for v in (new.get(key), old.get(key)) if v is not None]

@@ -413,22 +413,31 @@ def test_grid_shape_on_float_lattice(spark):
 
 
 def test_tile_pass_partitions(spark, monkeypatch):
-    """The tile ``range`` gets one partition per ``TILES_PER_TASK`` tiles, at
-    most ``defaultParallelism``: one Python task classifies the 9 tiles of
-    a small grid, three the 2 * TILES_PER_TASK + 1 tiles of a long strip.
-    The grid is the same for any partition count."""
-    per = GR.TILES_PER_TASK
-    assert spark.sparkContext.defaultParallelism >= 3
-    small = GR.grid_maker(spark, bbox=BBOX, cell=(1_000.0, 1_000.0), tile=(34, 34))
-    assert small.rdd.getNumPartitions() == 1
-    strip = GR.grid_maker(spark, bbox=(0.0, 0.0, 2 * per + 1.0, 1.0), cell=(1.0, 1.0), tile=(1, 1))
-    assert strip.rdd.getNumPartitions() == 3 and strip.count() == 2 * per + 1
+    """With a mask, the tile ``range`` gets one partition per
+    ``TILE_EDGES_PER_TASK`` tiles x mask vertices, at most
+    ``defaultParallelism``: one Python task classifies the 9 tiles of a
+    box mask, three those of a 2,000-vertex star. Without a mask (no Python
+    pass) every tile is a partition, up to ``defaultParallelism``. The grid
+    is the same for any partition count."""
+    dp = spark.sparkContext.defaultParallelism
+    assert dp >= 3
+    kw = dict(bbox=BBOX, cell=(1_000.0, 1_000.0), tile=(34, 34))
+    assert GR.grid_maker(spark, **kw).rdd.getNumPartitions() == min(9, dp)
+    box = spark.createDataFrame([(0, wkb.encode_box(*BBOX))], "poly_id long, geometry binary")
+    assert GR.grid_maker(spark, box, **kw).rdd.getNumPartitions() == 1
+    r, n = 40_000.0, 2_000
+    star = [((r if k % 2 else 0.8 * r) * math.cos(2 * math.pi * k / n) + 50_000.0,
+             (r if k % 2 else 0.8 * r) * math.sin(2 * math.pi * k / n) + 50_000.0) for k in range(n)]
+    assert 2 * GR.TILE_EDGES_PER_TASK < 9 * n <= 3 * GR.TILE_EDGES_PER_TASK
+    detailed = spark.createDataFrame([(0, wkb.encode_polygon([star]))], "poly_id long, geometry binary")
+    assert GR.grid_maker(spark, detailed, **kw).rdd.getNumPartitions() == 3
     mask = PG.synthetic_polygons(spark, n=3, bbox=BBOX, seed=5)
     kw = dict(mask=mask, cell=(2_500.0, 2_500.0), bbox=BBOX, tile=(4, 4), mode="qtree")
     want = sorted(GR.grid_maker(spark, **kw).collect())
-    monkeypatch.setattr(GR, "TILES_PER_TASK", 1)
+    assert GR.grid_maker(spark, **kw).rdd.getNumPartitions() == 1
+    monkeypatch.setattr(GR, "TILE_EDGES_PER_TASK", 1)
     many = GR.grid_maker(spark, **kw)
-    assert many.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert many.rdd.getNumPartitions() == dp
     assert sorted(many.collect()) == want and want
 
 

@@ -249,6 +249,61 @@ def test_area_interpolate_rejects_cell_off_record(spark, edit):
     assert OV.area_interpolate(spark, sources, cells, ["pop"]).count() > 0
 
 
+def _maker_grid(spark, bbox, cell):
+    from pygridmap_spark.operators import gridding as GR
+
+    return GR.grid_maker(spark, bbox=bbox, cell=cell).withColumnsRenamed({"__x__": "x", "__y__": "y"})
+
+
+def _without_record(df):
+    from pygridmap_spark.operators import gridding as GR
+
+    meta = {k: v for k, v in df.schema["x"].metadata.items() if k != GR.LATTICE_META_KEY}
+    return df.withMetadata("x", meta)
+
+
+def test_area_interpolate_union_of_adjacent_grids(spark):
+    """Two grid_maker grids over adjacent, cell-aligned bboxes unioned keep
+    the first grid's record; the second grid's cells lie outside its shape
+    but on its lattice, so the overlay takes them, as it does the same
+    union without a record."""
+    from pygridmap_spark.operators import gridding as GR
+
+    west = _maker_grid(spark, (0.0, 0.0, 10_000.0, 10_000.0), (1_000.0, 1_000.0))
+    east = _maker_grid(spark, (10_000.0, 0.0, 20_000.0, 10_000.0), (1_000.0, 1_000.0))
+    cells = west.unionByName(east)
+    assert GR.lattice_of(cells, "x") == GR.lattice_of(west, "x")
+    sources = PG.synthetic_polygons(spark, n=12, bbox=(500.0, 500.0, 19_500.0, 9_500.0), seed=5, with_multi=False)
+
+    def pops(layer):
+        rows = OV.area_interpolate(spark, sources, layer, ["pop"]).collect()
+        return {(r["x"], r["y"]): r["pop"] for r in rows if r["pop"] is not None}
+
+    got = pops(cells)
+    assert got == pops(_without_record(cells))
+    assert any(x >= 10_000.0 for x, _ in got)
+    want = sum(r["pop"] for r in sources.select("pop").collect())
+    assert sum(got.values()) == pytest.approx(want, rel=1e-9)
+
+
+def test_rect_overlay_union_of_grids_of_two_sizes(spark):
+    """A fine and a coarse grid_maker grid unioned as the right layer carry
+    only the fine grid's record; the rect path keys that layer by its own
+    largest cell, so every coarse cell still finds its left rects and the
+    mass is conserved."""
+    from pygridmap_spark.operators import gridding as GR
+
+    fine = _maker_grid(spark, (0.0, 0.0, 4_000.0, 4_000.0), (1_000.0, 1_000.0))
+    coarse = _maker_grid(spark, (4_000.0, 0.0, 12_000.0, 4_000.0), (2_000.0, 2_000.0))
+    other = fine.unionByName(coarse).withColumn("val", F.col("x") + 10 * F.col("y") + 1.0)
+    assert GR.lattice_of(other, "x") == GR.lattice_of(fine, "x")
+    left = PG.grid_layer(spark, (0.0, 0.0, 12_000.0, 4_000.0), (500.0, 500.0))
+    rows = OV.grid_overlay_rects(left, other, ["val"], rule="sum", how="intersection").collect()
+    assert len(rows) == 24 * 8
+    want = sum(r["val"] for r in other.select("val").collect())
+    assert sum(r["val"] for r in rows) == pytest.approx(want, rel=1e-12)
+
+
 def test_piece_geometry_rect_path(spark, grid):
     """emit_wkb on the rect x rect path: every piece carries the exact
     intersection rectangle as WKB (corners closed-form checkable)."""

@@ -203,12 +203,30 @@ def test_pip_joins_derive_coordinates_once(spark, geo_polygons, tmp_path):
 def test_polygon_pip_join_rejects_metre_polygons(spark, points_df):
     """Polygons in projected metres (a 100 km bbox) at z=14 used to make a
     ~1e14-cell cover block and kill the JVM with OutOfMemoryError; a cover
-    wider than the world lattice now fails the action naming the polygon."""
+    far wider than the world lattice now fails the action naming the
+    polygon."""
     from pyspark.errors import PythonException
 
     polys = PG.synthetic_polygons(spark, n=2, bbox=(0.0, 0.0, 100_000.0, 100_000.0), seed=3)
-    with pytest.raises(PythonException, match=r"ValueError: polygon \d+ spans \d+ x \d+ cells, more than its whole 16384 x 16384"):
+    with pytest.raises(PythonException, match=r"ValueError: polygon \d+ spans \d+ x \d+ cells, more than 65536 on an axis"):
         SJ.polygon_pip_join(spark, points_df, polys, z=14).count()
+
+
+def test_polygon_pip_join_just_past_world_box(spark):
+    """A lon/lat polygon a little wider than the world (-180.5..180, or
+    buffered across the antimeridian) spans more cells than the world
+    lattice, and still joins: only a cover far wider is refused."""
+    polys = spark.createDataFrame(
+        [
+            (0, wkb.encode_box(-180.5, -1.0, 180.0, 1.0)),
+            (1, wkb.encode_box(-181.0, 10.0, 181.0, 20.0)),
+        ],
+        "poly_id long, geometry binary",
+    )
+    pts = [(-180.25, 0.0), (179.9, 0.5), (180.5, 0.0), (-180.75, 15.0), (180.5, 15.0), (0.0, 5.0)]
+    points = spark.createDataFrame([(i, x, y) for i, (x, y) in enumerate(pts)], "pid long, lon double, lat double")
+    got = {(r["pid"], r["poly_id"]) for r in SJ.polygon_pip_join(spark, points, polys, z=4).collect()}
+    assert got == {(0, 0), (1, 0), (3, 1), (4, 1)}
 
 
 def _pip_pairs(spark, points, polys):

@@ -162,6 +162,27 @@ def test_write_tiles_empty_input_null_bounds(spark, tmp_path):
     assert sinks.read_info(out)["resolutionGeo"] == 1.0
 
 
+def test_write_tiles_ignore_keeps_existing_tree(spark, tmp_path):
+    """mode='ignore' over an existing tree writes no tiles and runs no job;
+    the returned bounds are the tree's, not the ignored frame's."""
+    out = str(tmp_path / "tiles")
+    first = spark.createDataFrame([(0, 5, 1.0), (2, 6, 2.0)], "xt long, yt long, v double")
+    other = spark.createDataFrame([(-4, 7, 3.0), (1, 9, 4.0)], "xt long, yt long, v double")
+    want = sinks.write_tiles(first, out, resolution=1.0, tile_size_cell=10)["tilingBounds"]
+    assert want == {"yMin": 5, "yMax": 6, "xMax": 2, "xMin": 0}
+    info = {}
+    jobs = _jobs(
+        spark, "write_tiles_ignore",
+        lambda: info.update(sinks.write_tiles(other, out, resolution=1.0, tile_size_cell=10, mode="ignore")),
+    )
+    assert not jobs
+    assert info["tilingBounds"] == sinks.read_info(out)["tilingBounds"] == want
+    assert sorted(r["v"] for r in sinks.read_tiles(spark, out).collect()) == [1.0, 2.0]
+    # a new folder under 'ignore' is a plain write
+    fresh = sinks.write_tiles(other, str(tmp_path / "fresh"), resolution=1.0, tile_size_cell=10, mode="ignore")
+    assert fresh["tilingBounds"] == {"yMin": 7, "yMax": 9, "xMax": 1, "xMin": -4}
+
+
 def _jobs(spark, group, fn):
     """Ids of the Spark jobs ``fn()`` submits, counted under a job group."""
     sc = spark.sparkContext
