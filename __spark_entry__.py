@@ -1052,8 +1052,10 @@ def _q_union_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_union_exact_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whole-LAYER distributed exact union (r5): 200 disjoint groups of
     two overlapping diamonds, one global layer, tiled per 2048 units by
-    operators.overlay.union_exact_distributed (cover-tile explosion,
-    map-side clip, per-tile arrangement kernel). Groups sit 8 tiles apart
+    operators.overlay.union_exact_distributed (one block-cover pass over
+    the tile lattice that clips each polygon to its boundary tiles where
+    it lives, whole tiles as squares, per-tile arrangement kernel on the
+    rest). Groups sit 8 tiles apart
     so they never share a tile; per group the oracle re-derives BOTH the
     closed-form union area (2*(2r^2) - (2r-d)^2/2) and the count of tiles
     the union touches (diamond-rect Manhattan-distance test in SQL) —

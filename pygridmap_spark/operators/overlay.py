@@ -40,6 +40,7 @@ grids carries only the first one's record).
 
 from __future__ import annotations
 
+import math
 from typing import Iterator, Sequence
 
 import numpy as np
@@ -385,6 +386,63 @@ def _drop_unmatched(out: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _cover_blocks(
+    polygons: DataFrame, key: str, geometry_col: str, origin, cell, clip: bool
+) -> DataFrame:
+    """The block cover of every polygon row on the lattice ``origin``
+    (x0, y0), ``cell`` (height, width) — the one cover pass of the polygon
+    overlay operators. One Arrow pass decodes each row once and runs
+    :func:`gridding.classify_polygons` over its bbox block, so one
+    polygon's cover runs in one task. Rows: the block columns, ``__cls__``
+    (ALL_IN or BOUNDARY), ``__area__`` (covered area), ``key``,
+    ``__parea__`` (the polygon's area) and ``__geom__``. NULL and empty
+    geometries cover nothing.
+
+    ``clip`` makes every piece exact: a BOUNDARY cell carries its clip as
+    WKB ``__geom__`` and the clip's own area (an empty clip drops the
+    cell). An ALL_IN block stays whole (``__geom__`` NULL) only when its
+    covered area is its full area bit for bit, which the kernel returns
+    when no edge meets the block; a block the classifier took as ALL_IN
+    within its 1e-9 cell-area tolerance is clipped cell by cell as
+    BOUNDARY. Without ``clip``, ``__geom__`` is NULL."""
+    (x0, y0), (h, w) = origin, cell
+    cols = [*GR.BLOCK_COLS, "__cls__", "__area__", key, "__parea__", "__geom__"]
+    schema = (
+        "__ix0__ long, __iy0__ long, __ix1__ long, __iy1__ long, __cls__ int, __area__ double, "
+        f"{key} {dict(polygons.dtypes)[key]}, __parea__ double, __geom__ binary"
+    )
+
+    def _clip_pieces(mp, blocks: pd.DataFrame) -> pd.DataFrame:
+        ix0, iy0, ix1, iy1 = blocks[GR.BLOCK_COLS].to_numpy().T
+        # the block area as classify_blocks computes it
+        full = ((x0 + ix1 * w) - (x0 + ix0 * w)) * ((y0 + iy1 * h) - (y0 + iy0 * h))
+        whole = (blocks["__cls__"].to_numpy() == GR.ALL_IN) & (blocks["__area__"].to_numpy() == full)
+        rows = []
+        for i in np.flatnonzero(~whole):
+            for a in range(ix0[i], ix1[i]):
+                for b in range(iy0[i], iy1[i]):
+                    piece = G.multipolygon_clip(mp, x0 + a * w, y0 + b * h, x0 + (a + 1) * w, y0 + (b + 1) * h)
+                    if piece:
+                        area = G.multipolygon_area(piece)
+                        rows.append((a, b, a + 1, b + 1, GR.BOUNDARY, area, wkb.encode_multipolygon(piece)))
+        parts = [blocks[whole].assign(__geom__=None)]
+        if rows:
+            parts.append(pd.DataFrame(rows, columns=[*GR.BLOCK_COLS, "__cls__", "__area__", "__geom__"]))
+        return pd.concat(parts, ignore_index=True)
+
+    def _classify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for batch in batches:
+            frames = [
+                (_clip_pieces(mp, blocks) if clip else blocks.assign(__geom__=None)).assign(
+                    **{key: pid, "__parea__": G.multipolygon_area(mp)}
+                )
+                for pid, mp, blocks in GR.classify_polygons(batch[key], batch[geometry_col], origin, cell)
+            ]
+            yield pd.concat(frames, ignore_index=True)[cols] if frames else pd.DataFrame(columns=cols)
+
+    return polygons.select(key, geometry_col).mapInPandas(_classify, schema)
+
+
 def grid_overlay_polygons(
     cells: DataFrame,
     polygons: DataFrame,
@@ -400,9 +458,9 @@ def grid_overlay_polygons(
     """Overlay the cell grid with an irregular WKB polygon layer.
 
     No polygon geometry reaches the driver, and the grid is evaluated once:
-    1. one Arrow pass decodes each polygon row once, takes its area and
-       runs :func:`gridding.classify_blocks` over its bbox block on the
-       lattice of ``cells``; only block rows come back. The lattice comes
+    1. the cover pass (:func:`_cover_blocks`) classifies each polygon's
+       bbox block on the lattice of ``cells`` in one Arrow pass; only
+       block rows come back. The lattice comes
        from the record ``grid_maker`` attaches to ``x``, and then no job
        runs before the caller's action: a cell whose size or corner
        contradicts the record fails the action. A layer without a record
@@ -420,8 +478,8 @@ def grid_overlay_polygons(
 
     ``emit_wkb=True`` (rule=None only) carries each piece's CLIPPED
     geometry (cell ∩ polygon, holes preserved) as WKB: the clip of a
-    boundary cell, the rectangle of an interior one; a boundary piece's
-    area is then its clip's own.
+    boundary cell, the rectangle of a cell the polygon covers whole; a
+    clipped piece's area is then its clip's own.
     """
     _check_how(how, rule)
     _check_emit_wkb(emit_wkb, rule)
@@ -432,34 +490,7 @@ def grid_overlay_polygons(
     else:
         gx0, gy0, gw, gh = rec["x0"], rec["y0"], rec["width"], rec["height"]
     origin, lattice = (gx0, gy0), (gh, gw)
-    cols = [*GR.BLOCK_COLS, "__cls__", "__area__", poly_key, "__parea__", "__geom__"]
-    schema = (
-        "__ix0__ long, __iy0__ long, __ix1__ long, __iy1__ long, __cls__ int, __area__ double, "
-        f"{poly_key} {dict(polygons.dtypes)[poly_key]}, __parea__ double, __geom__ binary"
-    )
-
-    def _clip_pieces(mp, blocks: pd.DataFrame) -> pd.DataFrame:
-        """emit_wkb: each boundary block's clipped geometry as WKB, its area
-        the clip's own, so shoelace(piece WKB) == piece_area exactly."""
-        geom, area = [None] * len(blocks), blocks["__area__"].to_numpy().copy()
-        rects = blocks[GR.BLOCK_COLS].to_numpy()
-        for i in np.flatnonzero(blocks["__cls__"].to_numpy() == GR.BOUNDARY):
-            ix0, iy0, ix1, iy1 = rects[i]
-            clip = G.multipolygon_clip(mp, gx0 + ix0 * gw, gy0 + iy0 * gh, gx0 + ix1 * gw, gy0 + iy1 * gh)
-            geom[i], area[i] = wkb.encode_multipolygon(clip), G.multipolygon_area(clip)
-        return blocks.assign(__area__=area, __geom__=geom)
-
-    def _classify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            frames = [
-                (_clip_pieces(mp, blocks) if emit_wkb else blocks.assign(__geom__=None)).assign(
-                    **{poly_key: pid, "__parea__": G.multipolygon_area(mp)}
-                )
-                for pid, mp, blocks in GR.classify_polygons(batch[poly_key], batch[geometry_col], origin, lattice)
-            ]
-            yield pd.concat(frames, ignore_index=True)[cols] if frames else pd.DataFrame(columns=cols)
-
-    blocks = polygons.select(poly_key, geometry_col).mapInPandas(_classify, schema)
+    blocks = _cover_blocks(polygons, poly_key, geometry_col, origin, lattice, clip=emit_wkb)
     if columns:
         # attributes join the block rows: fewer than the cells they expand to
         blocks = blocks.join(polygons.select(poly_key, *columns), poly_key)
@@ -508,9 +539,8 @@ def grid_overlay_polygons(
 
 def _decode_cache(limit: int = 4096):
     """Per-batch-iterator WKB decode cache keyed by polygon id — one
-    decode per polygon per Python worker, bounded. Shared by the
-    candidate-pair loops of ``polygon_overlay_pieces`` and
-    ``union_exact_distributed``."""
+    decode per polygon per Python worker, bounded. The candidate-pair loop
+    of ``polygon_overlay_pieces`` meets each polygon in many pairs."""
     from pygridmap_spark.core import wkb as _WKB
 
     cache: dict = {}
@@ -526,71 +556,37 @@ def _decode_cache(limit: int = 4096):
     return get
 
 
-def _explode_cover(
-    df: DataFrame,
-    x0: float,
-    y0: float,
-    w: float,
-    h: float,
-    xmin: str,
-    ymin: str,
-    xmax: str,
-    ymax: str,
-    keep: Sequence[str],
-    out_x: str = "_gix",
-    out_y: str = "_giy",
-) -> DataFrame:
-    """bbox -> covered-cell key explosion on the lattice ``gridding``
-    defines (ids + keys only; geometry never rides the replication)."""
-    (ix0, ix1), (iy0, iy1) = (
-        GR.lattice_span(F.col(xmin), F.col(xmax), x0, w),
-        GR.lattice_span(F.col(ymin), F.col(ymax), y0, h),
-    )
-    blocks = df.select(
-        *keep, ix0.alias("__ix0__"), iy0.alias("__iy0__"), ix1.alias("__ix1__"), iy1.alias("__iy1__")
-    )
-    return GR.explode_blocks(blocks, out_x, out_y)
+def _check_index_lattice(cell: float, x0: float = 0.0, y0: float = 0.0) -> None:
+    """Raise ValueError unless ``cell`` is finite and positive and the
+    origin finite: on any other lattice a cover is empty or divides by
+    zero at action time."""
+    if not (math.isfinite(cell) and cell > 0):
+        raise ValueError(f"cell must be finite and positive, got {cell!r}")
+    for name, v in (("x0", x0), ("y0", y0)):
+        if not math.isfinite(v):
+            raise ValueError(f"{name} must be finite, got {v!r}")
 
 
-def _poly_meta(polygons: DataFrame, poly_key: str, geometry_col: str, out_prefix: str) -> DataFrame:
-    """(key, area, bbox) per polygon via one Arrow decode pass — the shared
-    first stage of every distributed vector-layer plan (empty geometries
-    dropped here, excluded everywhere downstream)."""
-    key_type = dict(polygons.dtypes)[poly_key]
-    schema = (
-        f"{poly_key} {key_type}, {out_prefix}area double, "
-        f"{out_prefix}xmin double, {out_prefix}ymin double, "
-        f"{out_prefix}xmax double, {out_prefix}ymax double"
-    )
+def _mean_bbox_span(layer: DataFrame, geometry_col: str) -> float:
+    """``max(mean bbox width, mean bbox height, 1e-12)`` over the layer's
+    non-empty geometries: one aggregation job over a scalar pandas UDF.
+    Raises ValueError when no geometry is non-empty."""
 
-    def _meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            if not len(batch):
-                continue
-            cols = {
-                poly_key: batch[poly_key].to_numpy(),
-                f"{out_prefix}area": np.empty(len(batch)),
-                f"{out_prefix}xmin": np.empty(len(batch)),
-                f"{out_prefix}ymin": np.empty(len(batch)),
-                f"{out_prefix}xmax": np.empty(len(batch)),
-                f"{out_prefix}ymax": np.empty(len(batch)),
-            }
-            keep = np.ones(len(batch), dtype=bool)
-            for i, buf in enumerate(batch[geometry_col]):
-                mp = wkb.decode_multipolygon(bytes(buf))
-                if not mp or not any(len(p) for p in mp):
-                    keep[i] = False
-                    continue
-                cols[f"{out_prefix}area"][i] = G.multipolygon_area(mp)
-                (
-                    cols[f"{out_prefix}xmin"][i],
-                    cols[f"{out_prefix}ymin"][i],
-                    cols[f"{out_prefix}xmax"][i],
-                    cols[f"{out_prefix}ymax"][i],
-                ) = G.multipolygon_bbox(mp)
-            yield pd.DataFrame(cols)[keep]
+    @F.pandas_udf("w double, h double")
+    def _span(wkbs: pd.Series) -> pd.DataFrame:
+        spans = np.full((len(wkbs), 2), np.nan)  # NaN comes back as NULL
+        for i, buf in enumerate(wkbs):
+            mp = None if buf is None else wkb.decode_multipolygon(bytes(buf))
+            if mp and any(len(p) for p in mp):
+                xmin, ymin, xmax, ymax = G.multipolygon_bbox(mp)
+                spans[i] = xmax - xmin, ymax - ymin
+        return pd.DataFrame(spans, columns=["w", "h"])
 
-    return polygons.select(poly_key, geometry_col).mapInPandas(_meta, schema)
+    row = layer.select(_span(geometry_col).alias("s")).agg(F.avg("s.w").alias("w"), F.avg("s.h").alias("h"))
+    row = row.collect()[0]
+    if row["w"] is None:
+        raise ValueError("empty right layer: cannot derive index cell size")
+    return max(row["w"], row["h"], 1e-12)
 
 
 def polygon_overlay_pieces(
@@ -620,11 +616,17 @@ def polygon_overlay_pieces(
 
     Fully distributed plan:
 
-    1. one Arrow meta pass per side (bbox + area; WKB stays put),
-    2. both sides explode their bbox cover cells on a SHARED index grid —
-       ids + bbox scalars only ride the replication,
-    3. equi-join on the cell key, bbox-overlap prefilter, pair dedup
-       (ids-only exchange), then each side's WKB joined back ONCE by id,
+    1. both sides run the cover pass (:func:`_cover_blocks`) on one
+       shared ``cell x cell`` index lattice at the origin: one polygon's
+       block cover runs in one task, and only ids and block scalars come
+       back; a NULL or empty geometry covers nothing,
+    2. blocks expand to cells in the JVM; the candidate pairs are the
+       ``(left_key, right_key)`` pairs that share a covered cell,
+       deduplicated (ids-only exchange). A pair whose bboxes meet but
+       whose covers do not (one inside the other's hole) drops here,
+       before any WKB moves. ``right_area`` rides along from the right
+       side's cover pass,
+    3. each side's WKB joins the pairs ONCE by id,
     4. exact piece geometry per pair via the boolean kernel
        (core.geometry.intersect_multipolygons): Sutherland-Hodgman against
        convex clips, ear-clipped triangle windows for concave ones. Holes
@@ -632,42 +634,27 @@ def polygon_overlay_pieces(
 
     Output: (left_key, right_key, piece_area, area_pct=piece/right_area,
     *right columns[, geometry WKB when emit_wkb]). ``cell`` is the spatial
-    index pitch; None derives it from the mean right-side bbox span (one
-    tiny agg over the meta frame)."""
+    index pitch, finite and positive (ValueError otherwise); None derives
+    it from the mean bbox span of the non-empty right geometries (one
+    tiny aggregation job)."""
     if left_key == right_key:
         raise ValueError("left_key and right_key must differ (rename one side)")
     if how not in ("intersection", "union_full"):
         raise ValueError(f"how must be 'intersection' or 'union_full', got {how!r}")
     CRS.check_layers_crs(left, right, geometry_col, geometry_col, context="polygon_overlay_pieces")
-    lmeta = _poly_meta(left, left_key, geometry_col, "_l")
-    rmeta = _poly_meta(right, right_key, geometry_col, "_r")
     if cell is None:
-        row = rmeta.agg(
-            F.avg(F.col("_rxmax") - F.col("_rxmin")).alias("w"),
-            F.avg(F.col("_rymax") - F.col("_rymin")).alias("h"),
-        ).collect()[0]
-        if row["w"] is None:
-            raise ValueError("empty right layer: cannot derive index cell size")
-        cell = max(row["w"], row["h"], 1e-12)
+        cell = _mean_bbox_span(right, geometry_col)
+    _check_index_lattice(cell)
 
-    def _cover(meta: DataFrame, p: str) -> DataFrame:
-        return _explode_cover(
-            meta, 0.0, 0.0, cell, cell, f"{p}xmin", f"{p}ymin", f"{p}xmax", f"{p}ymax", keep=meta.columns
-        )
+    def _cells(layer: DataFrame, key: str) -> DataFrame:
+        blocks = _cover_blocks(layer, key, geometry_col, (0.0, 0.0), (cell, cell), clip=False)
+        return GR.explode_blocks(blocks.select(*GR.BLOCK_COLS, key, "__parea__"), "_gix", "_giy")
 
-    lc = _cover(lmeta, "_l")
-    rc = _cover(rmeta, "_r")
     pairs = (
-        lc.join(rc, ["_gix", "_giy"])
-        # bbox prefilter BEFORE the pair-dedup exchange
-        .filter(
-            (F.col("_lxmin") < F.col("_rxmax")) & (F.col("_lxmax") > F.col("_rxmin"))
-            & (F.col("_lymin") < F.col("_rymax")) & (F.col("_lymax") > F.col("_rymin"))
-        )
-        # _rarea rides along (functionally dependent on right_key): the
-        # meta pass already paid the shoelace, the clip kernel must not
-        # re-pay it once per PAIR
-        .select(left_key, right_key, "_rarea")
+        _cells(left, left_key).drop("__parea__")
+        .join(_cells(right, right_key), ["_gix", "_giy"])
+        # the clip kernel must not re-pay the right-side shoelace per pair
+        .select(left_key, right_key, F.col("__parea__").alias("_rarea"))
         .dropDuplicates([left_key, right_key])
     )
     # WKB fetched once per side by id — never rides the cover replication
@@ -928,65 +915,40 @@ def union_exact_distributed(
     form the engine's block covers use.
 
     Scale plan (and why it beats shuffling raw polygons):
-    1. per-polygon bbox via one Arrow pass (``_poly_meta``),
-    2. cover-tile explosion on the bbox — ids only,
-    3. WKB joined back once per polygon by id (AQE skew-splittable),
-    4. MAP-SIDE clip of each polygon to each covered tile — so the tile
-       exchange carries only the clipped piece that lands in that tile,
-       never a continent polygon replicated to its 10^4 tiles,
-    5. one tile-keyed exchange + per-tile ``union_exact`` kernel (group
-       size bounded by what genuinely overlaps a tile).
+    1. the cover pass (:func:`_cover_blocks` with ``clip``) classifies
+       each polygon over the tile lattice at ``(x0, y0)``; one polygon's
+       cover runs in one task, which decodes it once and clips it to each
+       BOUNDARY tile there — so the tile exchange carries only the
+       clipped piece that lands in a tile, never a continent polygon
+       replicated to its 10^4 tiles,
+    2. blocks the polygon covers whole expand to tiles in the JVM, their
+       piece the tile square with no clip,
+    3. one tile-keyed exchange + per-tile ``union_exact`` kernel (group
+       size bounded by what genuinely overlaps a tile). A tile some input
+       covers whole is the square and skips the kernel.
 
-    ``cell`` trades kernel size against tile count: the per-tile
-    arrangement scan is O(E^2) in the edges that touch the tile."""
-    from pygridmap_spark.core import geometry as _G
-    from pygridmap_spark.core import wkb as _WKB
-
-    meta = _poly_meta(polygons, poly_key, geometry_col, "__u_")
-    cover = _explode_cover(
-        meta, x0, y0, cell, cell,
-        "__u_xmin", "__u_ymin", "__u_xmax", "__u_ymax",
-        keep=[poly_key], out_x="tile_x", out_y="tile_y",
-    )
-    pairs = cover.join(
-        polygons.select(poly_key, F.col(geometry_col).alias("__wkb__")), poly_key
-    )
-
-    def _clip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        decode = _decode_cache()
-        for batch in batches:
-            if not len(batch):
-                continue
-            txs = batch["tile_x"].to_numpy()
-            tys = batch["tile_y"].to_numpy()
-            pids = batch[poly_key].to_numpy()
-            bufs = batch["__wkb__"]
-            out_rows = {"tile_x": [], "tile_y": [], "piece": []}
-            for i in range(len(batch)):
-                mp = decode(pids[i], bufs.iloc[i])
-                tx, ty = int(txs[i]), int(tys[i])
-                piece = _G.multipolygon_clip(
-                    mp,
-                    x0 + tx * cell, y0 + ty * cell,
-                    x0 + (tx + 1) * cell, y0 + (ty + 1) * cell,
-                )
-                if piece:
-                    out_rows["tile_x"].append(tx)
-                    out_rows["tile_y"].append(ty)
-                    out_rows["piece"].append(_WKB.encode_multipolygon(piece))
-            yield pd.DataFrame(out_rows)
-
-    pieces = pairs.mapInPandas(_clip, "tile_x long, tile_y long, piece binary")
+    ``n_inputs`` counts the tile's non-empty pieces; a NULL or empty
+    geometry covers nothing. ``cell`` must be finite and positive and
+    ``x0``/``y0`` finite (ValueError). ``cell`` trades kernel size against
+    tile count: the per-tile arrangement scan is O(E^2) in the edges that
+    touch the tile."""
+    _check_index_lattice(cell, x0, y0)
+    blocks = _cover_blocks(polygons, poly_key, geometry_col, (x0, y0), (cell, cell), clip=True)
+    pieces = GR.explode_blocks(blocks.select(*GR.BLOCK_COLS, "__geom__"), "tile_x", "tile_y")
 
     def _union(pdf: pd.DataFrame) -> dict:
-        gs = [_WKB.decode_multipolygon(bytes(b)) for b in pdf["piece"]]
-        u = _G.union_exact(gs)
+        tx, ty = int(pdf["tile_x"].iloc[0]), int(pdf["tile_y"].iloc[0])
+        if pdf["__geom__"].isna().any():  # a NULL piece is the whole tile
+            xa, ya, xb, yb = x0 + tx * cell, y0 + ty * cell, x0 + (tx + 1) * cell, y0 + (ty + 1) * cell
+            u = [[np.array([[xa, ya], [xb, ya], [xb, yb], [xa, yb], [xa, ya]])]]
+        else:
+            u = G.union_exact([wkb.decode_multipolygon(bytes(b)) for b in pdf["__geom__"]])
         return {
-            "tile_x": pdf["tile_x"].iloc[0],
-            "tile_y": pdf["tile_y"].iloc[0],
-            geometry_col: _WKB.encode_multipolygon(u),
-            "n_inputs": len(gs),
-            "area": _G.multipolygon_area(u),
+            "tile_x": tx,
+            "tile_y": ty,
+            geometry_col: wkb.encode_multipolygon(u),
+            "n_inputs": len(pdf),
+            "area": G.multipolygon_area(u),
         }
 
     return _util.grouped_rows_sorted(

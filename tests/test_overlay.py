@@ -491,15 +491,18 @@ def test_polygon_overlay_pieces_union_full(spark):
         pd.DataFrame(
             {
                 key: [v[0] for v in vals],
-                "geometry": [wkb.encode_box(*v[1]) for v in vals],
+                "geometry": [wkb.encode_box(*v[1]) if v[1] else None for v in vals],
             }
-        )
+        ),
+        f"{key} long, geometry binary",
     )
-    left = mk("left_id", [(0, (0.0, 0.0, 2.0, 2.0)), (1, (10.0, 10.0, 12.0, 12.0))])
+    # a NULL geometry covers nothing: it comes back unmatched
+    left = mk("left_id", [(0, (0.0, 0.0, 2.0, 2.0)), (1, (10.0, 10.0, 12.0, 12.0)), (2, None)])
     right = mk("right_id", [(0, (1.0, 1.0, 3.0, 3.0)), (1, (20.0, 20.0, 22.0, 22.0))])
     out = OV.polygon_overlay_pieces(left, right, how="union_full", emit_wkb=True).collect()
     by = {(r["left_id"], r["right_id"]): r for r in out}
-    assert set(by) == {(0, 0), (1, None), (None, 1)}
+    assert set(by) == {(0, 0), (1, None), (2, None), (None, 1)}
+    assert by[(2, None)]["geometry"] is None and by[(2, None)]["piece_area"] is None
     assert by[(0, 0)]["piece_area"] == pytest.approx(1.0)
     # unmatched rows carry original geometry, null areas
     un_l = by[(1, None)]
@@ -680,12 +683,121 @@ def test_union_exact_distributed_rect_fixture_exact(spark):
         rect(2, 1024.0, 512.0, 2560.0, 1536.0),
         rect(3, 0.0, 0.0, 1536.0, 1024.0),
         rect(4, 4096.0, 4096.0, 4608.0, 4352.0),
+        (5, None),  # a NULL geometry covers nothing
     ]
     df = spark.createDataFrame(rows, "poly_id long, geometry binary")
     out = OV.union_exact_distributed(df, cell=1024.0)
     got = out.agg(F.sum("area")).collect()[0][0]
     want = 1536.0 * 1024.0 + 1536.0 * 1024.0 - 512.0 * 512.0 + 512.0 * 256.0
     assert got == want  # dyadic: bit-exact
+
+
+def test_union_exact_distributed_sliver_tile_is_clipped(spark):
+    """A polygon that leaves 5e-5 of a 1e6 tile uncovered is ALL_IN to the
+    classifier (tolerance 1e-9 tile areas), yet its tile row must carry
+    the clipped outline and area, not the square. Tiles another polygon
+    covers with no edge in them are whole squares."""
+    from pygridmap_spark.operators import gridding as GR
+
+    notched = [[(0.0, 0.0), (500.0, 1e-7), (1000.0, 0.0), (1000.0, 1000.0), (0.0, 1000.0)]]
+    mp = wkb.decode_multipolygon(wkb.encode_polygon(notched))
+    cls = GR.classify_blocks([mp], (0.0, 0.0), (1000.0, 1000.0), [(0, 0, 1, 1)])["__cls__"]
+    assert list(cls) == [GR.ALL_IN]
+    df = spark.createDataFrame(
+        [(1, wkb.encode_polygon(notched)), (2, wkb.encode_box(1900.0, -100.0, 4100.0, 1100.0))],
+        "poly_id long, geometry binary",
+    )
+    out = {(r.tile_x, r.tile_y): r for r in OV.union_exact_distributed(df, cell=1000.0).collect()}
+    sliver = out[(0, 0)]
+    assert sliver.n_inputs == 1
+    assert sliver.area < 1e6 and sliver.area == pytest.approx(1e6 - 5e-5, rel=1e-13)
+    ring = wkb.decode_multipolygon(bytes(sliver.geometry))[0][0]
+    assert any((ring == [500.0, 1e-7]).all(axis=1))
+    for t in ((2, 0), (3, 0)):
+        assert out[t].n_inputs == 1 and out[t].area == 1e6
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        lambda a, b: OV.polygon_overlay_pieces(a, b, cell=0.0),
+        lambda a, b: OV.polygon_overlay_pieces(a, b, cell=-1.0),
+        lambda a, b: OV.polygon_overlay_pieces(a, b, cell=float("nan")),
+        lambda a, b: OV.polygon_overlay_pieces(a, b, cell=float("inf")),
+        lambda a, b: OV.union_exact_distributed(b, cell=0.0, poly_key="right_id"),
+        lambda a, b: OV.union_exact_distributed(b, cell=-1.0, poly_key="right_id"),
+        lambda a, b: OV.union_exact_distributed(b, cell=float("nan"), poly_key="right_id"),
+        lambda a, b: OV.union_exact_distributed(b, cell=float("inf"), poly_key="right_id"),
+        lambda a, b: OV.union_exact_distributed(b, cell=1.0, x0=float("nan"), poly_key="right_id"),
+        lambda a, b: OV.union_exact_distributed(b, cell=1.0, y0=float("-inf"), poly_key="right_id"),
+    ],
+)
+def test_index_lattice_rejects_bad_arguments(spark, call):
+    """A non-finite or non-positive cell, or a non-finite origin, raises
+    when the operator is called: it used to give an empty frame (union of
+    a 2x2 square at cell=-1 or nan) or fail at action time (cell=0)."""
+    left = spark.createDataFrame([(0, wkb.encode_box(0.0, 0.0, 2.0, 2.0))], "left_id long, geometry binary")
+    right = spark.createDataFrame([(0, wkb.encode_box(0.0, 0.0, 2.0, 2.0))], "right_id long, geometry binary")
+    with pytest.raises(ValueError, match="must be finite"):
+        call(left, right)
+
+
+def test_polygon_overlay_pieces_derived_cell_skips_null(spark):
+    """cell=None averages the bbox spans of the non-empty right rows: a
+    NULL row neither counts nor fails, and a layer with no non-empty row
+    raises."""
+    left = spark.createDataFrame([(0, wkb.encode_box(1.0, 1.0, 3.0, 3.0))], "left_id long, geometry binary")
+    right = spark.createDataFrame(
+        [(0, wkb.encode_box(0.0, 0.0, 2.0, 2.0)), (1, None)], "right_id long, geometry binary"
+    )
+    out = OV.polygon_overlay_pieces(left, right).collect()
+    assert [(r.left_id, r.right_id, r.piece_area) for r in out] == [(0, 0, 1.0)]
+    with pytest.raises(ValueError, match="empty right layer"):
+        OV.polygon_overlay_pieces(left, right.filter(F.col("right_id") == 1))
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_polygon_overlay_pieces_matches_all_pairs(spark, seed):
+    """Completeness and areas against an all-pairs loop over the kernel:
+    seeded layers with a hole and multiparts, plus a pair that overlaps by
+    1e-4, far below 1e-9 index-cell areas. Every pair of positive area
+    comes back with the kernel's own area, and no other pair."""
+    extra = lambda key, box: spark.createDataFrame(  # noqa: E731
+        [(100, wkb.encode_box(*box))], f"{key} long, geometry binary"
+    )
+    left = PG.synthetic_polygons(spark, n=10, bbox=BBOX, seed=seed).select(
+        F.col("poly_id").alias("left_id"), "geometry"
+    ).unionByName(extra("left_id", (300_000.0, 300_000.0, 301_000.0, 301_000.0)))
+    right = PG.synthetic_polygons(spark, n=10, bbox=BBOX, seed=seed + 10, with_hole=False).select(
+        F.col("poly_id").alias("right_id"), "geometry"
+    ).unionByName(extra("right_id", (301_000.0 - 1e-7, 300_000.0, 302_000.0, 301_000.0)))
+    ga = {r[0]: wkb.decode_multipolygon(bytes(r[1])) for r in left.collect()}
+    gb = {r[0]: wkb.decode_multipolygon(bytes(r[1])) for r in right.collect()}
+    want = set()
+    for i, a in ga.items():
+        for j, b in gb.items():
+            area = G.multipolygon_area(G.intersect_multipolygons(a, b))
+            if area > 0:
+                want.add((i, j, area))
+    spans = np.array([G.multipolygon_bbox(b) for b in gb.values()])
+    cell = max((spans[:, 2] - spans[:, 0]).mean(), (spans[:, 3] - spans[:, 1]).mean())
+    sliver = {a for i, j, a in want if (i, j) == (100, 100)}
+    assert len(sliver) == 1 and sliver.pop() < 1e-9 * cell**2
+    got = {(r.left_id, r.right_id, r.piece_area) for r in OV.polygon_overlay_pieces(left, right).collect()}
+    assert got == want
+
+
+def test_union_exact_distributed_plan_shape(spark):
+    """The cover pass decodes and clips each polygon where it lives: the
+    optimized plan joins nothing and runs one MapInPandas before the
+    grouped union's own."""
+    df = spark.createDataFrame(
+        [(1, wkb.encode_box(0.0, 0.0, 1536.0, 1024.0)), (2, wkb.encode_box(1024.0, 512.0, 2560.0, 1536.0))],
+        "poly_id long, geometry binary",
+    )
+    plan = OV.union_exact_distributed(df, cell=1024.0)._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan, plan
+    assert plan.count("MapInPandas") == 2, plan
 
 
 def test_dissolve_pieces_hierarchical_matches_flat(spark):
